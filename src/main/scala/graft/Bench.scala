@@ -1,36 +1,48 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+
+import graft.tools.{Run, RunRecord}
 
 /** Benchmark main — driver contract: run the query surface on
   * SPARK_GRAFT_SF_DIR, print ONE JSON line with per-query seconds.
   *
-  * Forcing: `df.write.format("noop")` — a DataSource-V2 sink that executes
-  * the FULL plan (every projected column is computed and serialized to the
-  * sink boundary) and discards rows. `count()` would let Catalyst prune
-  * map-only expression work down to a row-group-metadata scan, silently
-  * under-measuring exactly the expression-heavy queries.
+  * Every query runs through [[graft.tools.Run]] into the `noop` sink,
+  * which executes the full plan and discards the rows. A query that fails
+  * in any pass gets no timing: it leaves the `queries` map and the total
+  * and is listed under `failed`.
+  *
+  * Local iteration: `SPARK_GRAFT_ONLY=q_a,q_b SPARK_GRAFT_REPS=n` times
+  * just those queries, min of n, without touching the banked files.
   */
 object Bench {
-  private def force(df: DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
+  /** JSON string body escape (quote, backslash, control characters). */
+  private def esc(s: String): String = s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }
 
-  /** Between-run cleanup (see [[GraftSession.dropCachedBlocks]]) — runs
-    * OUTSIDE the timed section: queries still pay their own checkpoint
-    * cost inside their timing. */
-  private def dropCachedBlocks(spark: SparkSession): Unit =
-    GraftSession.dropCachedBlocks(spark)
+  private def obj(kvs: Iterable[(String, String)]): String =
+    kvs.map { case (k, v) => "\"" + esc(k) + "\":" + v }.mkString("{", ",", "}")
+
+  private def write(file: String, line: String): Unit =
+    try {
+      val w = new java.io.PrintWriter(file, "UTF-8")
+      try w.println(line) finally w.close()
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] $file write failed: ${e.getMessage}")
+    }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Local iteration aid: SPARK_GRAFT_ONLY=q_a,q_b restricts the run.
+    val cpus = GraftSession.defaultCpus
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val queries = only.fold(operators.Catalog.all)(
       names => operators.Catalog.all.filter(q => names(q.name)))
-    // Validate before any work: reps < 1 would leave every entry at the
-    // Double.MaxValue sentinel and emit a syntactically valid but garbage
-    // JSON line — fail loudly, and before the (minutes-long) warm pass.
+    // Validate before any work: reps < 1 would leave every query
+    // untimed — fail loudly, and before the (minutes-long) warm pass.
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     require(reps >= 1, s"SPARK_GRAFT_REPS must be >= 1, got $reps")
     val spark = GraftSession.builder("graft-bench", cpus).getOrCreate()
@@ -41,108 +53,52 @@ object Bench {
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory) {
       queries.foreach { q =>
-        try force(q.run(spark, warmDir))
+        try Run.noop(q.run(spark, warmDir))
         catch { case _: Throwable => () }
-        dropCachedBlocks(spark)
+        GraftSession.dropCachedBlocks(spark)
       }
     }
 
-    // MIN over `reps` timed runs per query, with reps INTERLEAVED at suite
-    // level: the whole query list runs end-to-end `reps` times, and each
-    // query's estimate is its min across passes. This host is a shared
-    // microVM with co-tenant load that arrives in multi-MINUTE bursts
-    // (measured: the same query swings 0.5s ↔ 13s across runs with zero
-    // code change, and WHICH queries inflate changes run to run). External
-    // noise is strictly additive, so the min is the robust estimator of
-    // intrinsic plan cost — but back-to-back reps of one query all fit
-    // inside a single burst window, contaminating the min. Spacing the
-    // reps a full suite apart (minutes) means a burst inflates one pass,
-    // not all reps of one query.
-    val passes = scala.collection.mutable.LinkedHashMap[String,
-      scala.collection.mutable.ArrayBuffer[Double]]()
-    queries.foreach(q =>
-      passes(q.name) = scala.collection.mutable.ArrayBuffer[Double]())
-    // Per-query executor TASK time (sum of executorRunTime over every task
-    // the query's jobs ran), accumulated by a listener and emitted to
-    // bench_raw.json as task_sec. Purpose: make parallelism OBSERVABLE —
-    // at gate SF the sub-second wall times are overhead-dominated, so
-    // 8c/32c wall ratios sit ≈1 and say nothing; task_sec/wall ≫ 1 is the
-    // direct evidence a query's work actually spreads across cores.
-    // Queries run sequentially, so a single volatile "current query"
-    // attributes stages→jobs→tasks; the listener bus is async, which can
-    // smear a few ms across a query boundary — fine for this purpose.
-    val taskNanos = new java.util.concurrent.ConcurrentHashMap[String,
-      java.util.concurrent.atomic.AtomicLong]()
-    @volatile var currentQuery: String = null
-    val stageQuery = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    val taskListener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val q = currentQuery
-        if (q != null) j.stageIds.foreach(sid => stageQuery.put(sid, q))
-      }
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null) {
-          val q = stageQuery.get(t.stageId)
-          if (q != null) taskNanos
-            .computeIfAbsent(q, _ => new java.util.concurrent.atomic.AtomicLong)
-            .addAndGet(t.taskMetrics.executorRunTime * 1000000L)
-        }
-    }
     def loadAvg: Double = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     // load_avg_start exists to expose CO-TENANT load, but the 1-minute
-    // average at this point is dominated by our own sbt+JVM+warmup spin-up
-    // (~3-4 on an otherwise idle box). SPARK_GRAFT_SETTLE_SECS idles the
-    // process before sampling so our startup decays out of the window
-    // (1-min load decays e^-1 per minute) and the recorded figure means
-    // what readers take it to mean: ambient load when timing began.
+    // average at this point is dominated by our own sbt+JVM+warmup spin-up.
+    // SPARK_GRAFT_SETTLE_SECS idles the process before sampling so our
+    // startup decays out of the window (1-min load decays e^-1 per minute).
     sys.env.get("SPARK_GRAFT_SETTLE_SECS").map(_.toLong).filter(_ > 0)
       .foreach { s =>
         System.err.println(s"[bench] settling ${s}s before timed passes")
         Thread.sleep(s * 1000)
       }
     val loadStart = loadAvg
-    spark.sparkContext.addSparkListener(taskListener)
+
+    // MIN over `reps` timed runs per query, with reps INTERLEAVED at suite
+    // level: the whole query list runs end-to-end `reps` times, and each
+    // query's estimate is its min across passes. Co-tenant load on a
+    // shared host arrives in multi-minute bursts and is strictly additive,
+    // so the min is the robust estimator of intrinsic plan cost — and
+    // spacing the reps a full suite apart means a burst inflates one pass,
+    // not all reps of one query.
+    val records = mutable.LinkedHashMap[String, mutable.ArrayBuffer[RunRecord]]()
+    queries.foreach(q => records(q.name) = mutable.ArrayBuffer[RunRecord]())
     for (pass <- 1 to reps) {
       queries.foreach { q =>
-        currentQuery = q.name
-        val t0 = System.nanoTime()
-        try force(q.run(spark, sfDir))
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        currentQuery = null
-        dropCachedBlocks(spark)
-        passes(q.name) += dt
+        val r = Run.query(spark, q.name, q.run(spark, sfDir), Run.noop)
+        r.error.foreach(e => System.err.println(s"[bench] ${q.name} failed: $e"))
+        GraftSession.dropCachedBlocks(spark)
+        records(q.name) += r
       }
       System.err.println(f"[bench] pass $pass/$reps done")
     }
-    Thread.sleep(300) // listener bus drain before reading taskNanos
-    spark.sparkContext.removeSparkListener(taskListener)
     val loadEnd = loadAvg
-    val results = passes.toSeq.map { case (k, ps) => (k, ps.min, ps.toSeq) }
-    val qs = results.map { case (k, v, _) => "\"" + k + f"\":$v%.3f" }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    // Noise made machine-visible: every pass's raw seconds plus the
-    // coefficient of variation per query, and the host load averages
-    // bracketing the run — so a reader (or the judge) can distinguish a
-    // regression from a co-tenant burst without a re-run. The headline
-    // "queries" map stays min-per-query (the robust intrinsic-cost
-    // estimator; see the interleaving comment above).
-    val rawJson = results.map { case (k, _, ps) =>
-      "\"" + k + "\":[" + ps.map(p => f"$p%.3f").mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    val cvJson = results.map { case (k, _, ps) =>
-      val mean = ps.sum / ps.size
-      val cv = if (mean > 0 && ps.size > 1)
-        math.sqrt(ps.map(p => (p - mean) * (p - mean)).sum / ps.size) / mean
-      else 0.0
-      "\"" + k + f"\":$cv%.2f"
-    }.mkString("{", ",", "}")
+
+    val (okRuns, failedRuns) = records.toSeq.partition(_._2.forall(_.ok))
+    val walls = okRuns.map { case (k, rs) => k -> rs.flatMap(_.wallS).toSeq }
+    val total = walls.map(_._2.min).sum
+    val qs = obj(walls.map { case (k, ps) => k -> f"${ps.min}%.3f" })
+    val failedNames =
+      failedRuns.map(kv => "\"" + esc(kv._1) + "\"").mkString("[", ",", "]")
+
     // Self-describing default: driver-initiated refreshes don't set
     // SPARK_GRAFT_RUN_LABEL, and an empty label makes the bench_out.json
     // working-tree drift unreadable — stamp run time + HEAD instead.
@@ -159,42 +115,43 @@ object Bench {
         } catch { case _: Exception => "" }
       s"auto $ts$head"
     }
-    // JSON-escape the free-form label: an unescaped quote/backslash would
-    // reintroduce the exact parsed:null failure this file exists to avoid
-    val label = sys.env.get("SPARK_GRAFT_RUN_LABEL").filter(_.nonEmpty)
-      .getOrElse(defaultLabel).flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    // The HEADLINE line the driver parses stays short: two of the last
-    // three rounds lost their round-over-round table to "parsed": null,
-    // and the passes/cv maps roughly triple the line length (tail
-    // truncation risk). The per-pass raw seconds and CVs — the noise
-    // observability record — move to a SIDE file, bench_raw.json.
+    val label = esc(sys.env.get("SPARK_GRAFT_RUN_LABEL").filter(_.nonEmpty)
+      .getOrElse(defaultLabel))
+    val host = esc(java.net.InetAddress.getLocalHost.getHostName)
+    val cpusJson = if (cpus.forall(_.isDigit)) cpus else "\"" + esc(cpus) + "\""
+    // The HEADLINE line the driver parses stays short (a long line risks
+    // tail truncation and a "parsed": null round). Per-pass seconds, CVs
+    // and the per-query run records go to the SIDE file bench_raw.json.
     val json =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","reps":$reps,"label":"$label","load_avg_start":$loadStart%.2f,"load_avg_end":$loadEnd%.2f}"""
-    // task_sec sums ALL reps' task time; divide by reps for a per-run
-    // figure. task_sec/(reps × min wall) ≫ 1 ⇒ the query parallelizes.
-    val taskJson = results.map { case (k, _, _) =>
-      val tn = Option(taskNanos.get(k)).map(_.get).getOrElse(0L)
-      "\"" + k + f"\":${tn / 1e9}%.2f"
-    }.mkString("{", ",", "}")
-    val rawSideJson =
-      f"""{"label":"$label","reps":$reps,"passes":$rawJson,"cv":$cvJson,"task_sec":$taskJson}"""
-    // Belt-and-braces for the driver's parser (BENCH_r04/r05 both recorded
-    // "parsed": null): the JSON goes to a file in the repo root AND is the
-    // final stdout line of the run. Filtered (SPARK_GRAFT_ONLY) runs skip
-    // the files so a focused re-measure can't clobber the canonical
-    // full-suite record.
-    if (only.isEmpty) try {
-      val w = new java.io.PrintWriter("bench_out.json", "UTF-8")
-      try w.println(json) finally w.close()
-      val wr = new java.io.PrintWriter("bench_raw.json", "UTF-8")
-      try wr.println(rawSideJson) finally wr.close()
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] bench_out.json write failed: ${e.getMessage}")
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":$failedNames,"sf":"${esc(sfDir)}","reps":$reps,"cpus":$cpusJson,"host":"$host","label":"$label","load_avg_start":$loadStart%.2f,"load_avg_end":$loadEnd%.2f}"""
+
+    def perQuery(f: Seq[RunRecord] => String) =
+      obj(records.map { case (k, rs) => k -> f(rs.toSeq) })
+    def arr(xs: Seq[Double]) = xs.map(x => f"$x%.3f").mkString("[", ",", "]")
+    val cv = obj(walls.map { case (k, ps) =>
+      val mean = ps.sum / ps.size
+      val c = if (mean > 0 && ps.size > 1)
+        math.sqrt(ps.map(p => (p - mean) * (p - mean)).sum / ps.size) / mean
+      else 0.0
+      k -> f"$c%.2f"
+    })
+    // task_sec sums ALL reps' task time; task_sec/(reps × min wall) ≫ 1
+    // ⇒ the query parallelizes. jobs is per pass (identical across passes
+    // for a deterministic plan).
+    val raw = s"""{"label":"$label","reps":$reps,"cpus":$cpusJson,"host":"$host",""" +
+      s""""passes":${obj(walls.map { case (k, ps) => k -> arr(ps) })},""" +
+      s""""cv":$cv,""" +
+      s""""build_s":${perQuery(rs => arr(rs.flatMap(_.buildS)))},""" +
+      s""""jobs":${perQuery(rs => rs.last.jobs.toString)},""" +
+      s""""task_sec":${perQuery(rs => f"${rs.map(_.taskS).sum}%.2f")},""" +
+      s""""failed":${obj(failedRuns.map { case (k, rs) =>
+        k -> ("\"" + esc(rs.flatMap(_.error).head) + "\"") })}}"""
+    // The JSON goes to a file in the repo root AND is the final stdout
+    // line of the run. Filtered (SPARK_GRAFT_ONLY) runs skip the files so
+    // a focused re-measure can't clobber the canonical full-suite record.
+    if (only.isEmpty) {
+      write("bench_out.json", json)
+      write("bench_raw.json", raw)
     }
     spark.stop()
     println(json)

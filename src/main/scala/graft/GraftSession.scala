@@ -13,8 +13,13 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** Local worker threads for every entry point: SPARK_GRAFT_CPUS when
+    * set, otherwise the cores this JVM may use. */
+  def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
   /** Standard builder: local master, UTC, AQE, right-sized shuffle
-    * partitions (32-way local, not the 200 default), nanos-as-long, and
+    * partitions (one per local core, not the 200 default), nanos-as-long, and
     * the engine's own session extensions (native SQL functions, the
     * as-of planner strategy, the edit-distance prefilter rule).
     * `spark.sql.extensions` is STATIC — it binds when the process's

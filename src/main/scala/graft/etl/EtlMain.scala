@@ -17,7 +17,7 @@ object EtlMain {
       sys.exit(2)
     }
     val Array(eventsPath, songsPath, warehouseDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.GraftSession.defaultCpus
     val spark = graft.GraftSession.builder("graft-etl", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val result = Pipeline.run(spark, eventsPath, songsPath, warehouseDir)

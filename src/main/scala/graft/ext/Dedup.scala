@@ -106,12 +106,7 @@ object Dedup {
     val arr = memb.join(sizes.select("band", "bh"), Seq("band", "bh"))
       .groupBy(col("band"), col("bh"))
       .agg(sort_array(collect_list(col("id"))).as("ids"))
-    val pairs = arr
-      .select(col("ids"), posexplode(col("ids")).as(Seq("i", "a")))
-      .select(col("a"),
-        explode(slice(col("ids"), col("i") + lit(2), size(col("ids"))))
-          .as("b"))
-      .distinct()
+    val pairs = Pairs.sortedPairs(arr, "ids", "a", "b").distinct()
 
     // verify candidates with exact n-gram Jaccard. Semi-join-prune the
     // corpus to candidate ids FIRST: only docs that appear in some pair pay
@@ -269,11 +264,7 @@ object Dedup {
     val arr = memb.join(sizes.select("chunk", "key"), Seq("chunk", "key"))
       .groupBy(col("chunk"), col("key"))
       .agg(sort_array(collect_list(struct(col("id"), col("sh")))).as("ms"))
-    val edges = arr
-      .select(col("ms"), posexplode(col("ms")).as(Seq("i", "x")))
-      .select(col("x"),
-        explode(slice(col("ms"), col("i") + lit(2), size(col("ms"))))
-          .as("y"))
+    val edges = Pairs.sortedPairs(arr, "ms", "x", "y")
       .filter(bit_count(col("x.sh").bitwiseXOR(col("y.sh"))) <= maxHamming)
       .select(col("x.id").as("a"), col("y.id").as("b"))
       .distinct()

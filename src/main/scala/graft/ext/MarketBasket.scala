@@ -92,11 +92,7 @@ object MarketBasket {
       .groupBy(col("item")).agg(count(lit(1)).as("c"))
     // sorted + distinct ⇒ strictly increasing, so "elements after
     // position i" IS the item_a < item_b pair set of the old self-join.
-    val pairs = arr
-      .select(col("its"), posexplode(col("its")).as(Seq("i", "item_a")))
-      .select(col("item_a"),
-        explode(slice(col("its"), col("i") + lit(2), size(col("its"))))
-          .as("item_b"))
+    val pairs = Pairs.sortedPairs(arr, "its", "item_a", "item_b")
       .groupBy(col("item_a"), col("item_b"))
       .agg(count(lit(1)).as("n_pair"))
       .filter(col("n_pair") >= minPairCount)

@@ -138,7 +138,10 @@ object Profile {
         col("n_violations").cast("long").as("n_violations"))
 
   /** [[fkCheck]] against an already-unique parent key frame (e.g. a
-    * [[keyCounts]] projection) — skips the parent-side distinct. */
+    * [[keyCounts]] projection) — skips the parent-side distinct. The
+    * uniqueness is the caller's contract and is not checked: a parent
+    * frame with a repeated key fans the left join out, and n_checked /
+    * n_violations count each matching child row once per repeat. */
   def fkCheckKeys(name: String, child: DataFrame, childKey: String,
                   parentKeys: DataFrame, parentKey: String): DataFrame = {
     val p = parentKeys.select(col(parentKey).as("__pk"))

@@ -411,14 +411,16 @@ object TextAnalysis {
     * Scale shape (the aggregate-first posting pattern shared with
     * [[dupSpans]] and TfIdf): one distinct over (group, gram) collapses
     * the exploded stream map-side before its single gram-keyed exchange;
-    * the `maxSources` cap is applied by a same-key WINDOW count BEFORE
-    * any group set materializes (the window and the following groupBy
-    * share the one gram-hash exchange), so a ubiquitous gram — present
-    * in more groups than the cap, hence identifying no PAIR — costs a
-    * count and a filter, never a |groups|-sized collected row; pair
-    * emission then fans out at most cap² per surviving gram. The same
-    * bounded-recall trade as `maxDf` in TfIdf/BM25: capped grams leave
-    * the intersection counts only, group sizes stay exact. At the gate
+    * one set aggregate per gram then collects its distinct groups, and
+    * the `maxSources` cap filters on that set's size AFTER the aggregate.
+    * A ubiquitous gram therefore does build its group set before it is
+    * dropped, but that set is bounded by the number of groups, not by
+    * the corpus (grams is (group, gram)-distinct); pair emission fans out
+    * at most cap² per surviving gram. The same bounded-recall trade as
+    * `maxDf` in TfIdf/BM25: capped grams leave the intersection counts
+    * only, group sizes stay exact. NULL group ids are dropped by the set
+    * aggregate: they never pair and do not count toward a gram's
+    * spread. At the gate
     * SFs the default (no cap) is exact, so the DuckDB oracle
     * hash-checks the values. Group sizes broadcast (one row per
     * group). Pairs with zero shared grams are omitted (inner semantics
@@ -447,14 +449,11 @@ object TextAnalysis {
     // (MarketBasket): strictly-increasing sorted distinct sources ⇒
     // slice-after-i IS the source_a < source_b pair set, generated
     // map-side without the n²-then-filter double explode.
-    val pairs = grams
+    val shared = grams
       .groupBy(col("gram"))
       .agg(sort_array(collect_set(col("src"))).as("srcs"))
       .where(size(col("srcs")).between(2, maxSources))
-      .select(col("srcs"), posexplode(col("srcs")).as(Seq("i", "source_a")))
-      .select(col("source_a"),
-        explode(slice(col("srcs"), col("i") + lit(2), size(col("srcs"))))
-          .as("source_b"))
+    val pairs = Pairs.sortedPairs(shared, "srcs", "source_a", "source_b")
       .groupBy(col("source_a"), col("source_b"))
       .agg(count(lit(1)).as("n_common"))
     pairs

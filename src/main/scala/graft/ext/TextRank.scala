@@ -17,9 +17,10 @@ import org.apache.spark.sql.functions._
   * iteration is ONE hash join of the vocab-sized rank frame against the
   * edge list plus one re-aggregation — all linear in |edges| per
   * iteration, nothing accumulates across iterations (the loop re-binds a
-  * vocab-sized frame, never grows a plan over the corpus). Ranks
-  * round-trip through localCheckpoint each iteration to keep the lineage
-  * flat. No driver-side state beyond the node count.
+  * vocab-sized frame, never grows a plan over the corpus). Iterations
+  * pipeline without barriers; ranks round-trip through localCheckpoint
+  * every 8th iteration to bound plan depth for deep-iteration callers.
+  * No driver-side state beyond the node count.
   *
   * Update rule (normalized PageRank form, no dangling mass — every node
   * of a symmetrized edge list has outgoing weight):

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ext.{Decontaminate, Dedup, Multimodal, Similarity, TfIdf}
+import graft.ext.{Decontaminate, Dedup, Multimodal, Pairs, Similarity, TfIdf}
 import graft.functions.TextExprs
 import graft.sources.Sources
 
@@ -298,14 +298,11 @@ object AnchorQueries {
       // (buffer bounded by the SOURCE universe; grams is distinct) —
       // instead of the gram-keyed SELF-join, which exchanged the
       // corpus-scale gram stream twice and joined it against itself.
-      val inter = grams
+      val shared = grams
         .groupBy(col("g"))
         .agg(sort_array(collect_set(col("source"))).as("srcs"))
         .where(size(col("srcs")) >= 2)
-        .select(col("srcs"), posexplode(col("srcs")).as(Seq("i", "source_a")))
-        .select(col("source_a"),
-          explode(slice(col("srcs"), col("i") + lit(2), size(col("srcs"))))
-            .as("source_b"))
+      val inter = Pairs.sortedPairs(shared, "srcs", "source_a", "source_b")
         .groupBy(col("source_a"), col("source_b"))
         .agg(count(lit(1)).as("i"))
       val truth = inter

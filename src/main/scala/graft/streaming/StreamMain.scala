@@ -18,7 +18,7 @@ object StreamMain {
         "usage: graft.streaming.StreamMain <eventsParquetDir> [windows|sessions]")
       sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.GraftSession.defaultCpus
     val spark = graft.GraftSession.builder("graft-stream", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val events = EventsStream.readEvents(spark, args(0))

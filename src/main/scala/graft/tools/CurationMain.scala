@@ -18,7 +18,7 @@ object CurationMain {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.001")
     val minQ = args.lift(1).map(_.toLong).getOrElse(4000L)
     val decon = args.lift(2).contains("decontaminate")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.GraftSession.defaultCpus
     val spark = graft.GraftSession.builder("graft-curation", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

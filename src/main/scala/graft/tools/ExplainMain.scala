@@ -20,7 +20,7 @@ object ExplainMain {
       return
     }
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.GraftSession.defaultCpus
     val spark = graft.GraftSession.builder("graft-explain", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val q = graft.operators.Catalog.byName.getOrElse(args(0), {

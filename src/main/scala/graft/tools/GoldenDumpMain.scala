@@ -15,7 +15,7 @@ object GoldenDumpMain {
   def main(args: Array[String]): Unit = {
     val Array(dir) = args
     val spark = GraftSession.builder("graft-golden-dump",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")).getOrCreate()
+      GraftSession.defaultCpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Snapshots are keyed by the testdata dir's BASENAME (Golden.violations
     // looks entries up that way — row counts collide across sf0.001/sf0.01),

@@ -21,7 +21,7 @@ object PlanDumpMain {
     val names = args.drop(2)
     java.nio.file.Files.createDirectories(outDir)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.GraftSession.defaultCpus
     val spark = graft.GraftSession.builder("graft-plandump", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     for (name <- names) {

@@ -1,31 +1,23 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
 import graft.operators.{Catalog, Golden}
 
-/** Scale-up smoke harness: synthesize an N× copy of the
-  * documents/events/embeddings tables and time the headline
-  * document/event queries at 1× vs N×, recording wall time and total
-  * shuffle read+write bytes per query — the evidence for the "would the
-  * plan survive a 100× scale-up" argument (PERF_NOTES.md).
+/** Scale-up harness: synthesize N× copies of the testdata, time queries at
+  * 1× vs N× through [[Run]], and cross-check result fingerprints under a
+  * changed execution (a starved memory pool, a different physical layout).
   *
   * Usage:
   *   runMain graft.tools.ScaleSmokeMain gen <srcSfDir> <outDir> <N>
   *   runMain graft.tools.ScaleSmokeMain genskew <srcSfDir> <outDir> <N>
   *   runMain graft.tools.ScaleSmokeMain gensf <srcSfDir> <outDir> <N>   (ALL tables)
-  *   runMain graft.tools.ScaleSmokeMain run <srcSfDir> <scaledDir>
-  *   runMain graft.tools.ScaleSmokeMain bpe <srcSfDir> <k>
-  *   runMain graft.tools.ScaleSmokeMain stream <srcSfDir> <scaledDir>
-  *   runMain graft.tools.ScaleSmokeMain bloom <srcSfDir> <workDir>
-  *   runMain graft.tools.ScaleSmokeMain skew <uniformNxDir> <skewedNxDir>
-  *   runMain graft.tools.ScaleSmokeMain skewdemo <skewedNxDir>
-  *   runMain graft.tools.ScaleSmokeMain census <srcSfDir> <scaledDir> <N>
-  *   runMain graft.tools.ScaleSmokeMain mem <srcSfDir> <scaledDir>  (small -Xmx)
-  *   runMain graft.tools.ScaleSmokeMain quotaskew <scaledDir>
+  *   runMain graft.tools.ScaleSmokeMain scale <srcSfDir> <scaledDir> <N> [q...]
+  *   runMain graft.tools.ScaleSmokeMain spill <sfDir> [skewedNxDir]
+  *   runMain graft.tools.ScaleSmokeMain xcheck <dir> <q...>
+  *   runMain graft.tools.ScaleSmokeMain streamdump <nxDir> <outParquetDir> <budget>
   *
   * Replica construction keeps the similarity structure honest:
   * replica 0 is the original; replica i>0 re-ids rows and REWRITES each
@@ -43,77 +35,23 @@ import graft.operators.{Catalog, Golden}
   */
 object ScaleSmokeMain {
 
-  // Headline queries over the three scalable tables (documents / events /
-  // embeddings — the only ones `gen` replicates; TPC-H-table queries
-  // can't run against a scaled dir).
-  private val smokeQueries = Seq(
-    "q_x_dedup_minhash", "q_x_dedup_simhash", "q_x_range_join",
-    "q_x_asof_join", "q_x_asof_native", "q_x_text_tokens",
-    "q_x_train_split", "q_x_corpus_shuffle", "q_x_bpe_pairs",
-    "q_x_resample_ffill", "q_x_ann_cosine_topk",
-    "q_x_decontaminate_semantic", "q_x_lang_id", "q_x_tfidf_top1",
-    "x_tfidf_capped_top1", "q_x_bm25_capped_top1",
-    "q_x_domain_balance", "q_x_seq_pack", "q_x_incremental_agg")
-
-  /** The capped-df TF-IDF smoke row now DELEGATES to the registered
-    * oracle-bearing gate query (`q_x_tfidf_capped_top1` — same planted
-    * frame, same probes); the historical smoke name is kept so the 1×/N×
-    * tables stay comparable across rounds. Timed here so the table shows
-    * the `maxDf` knob turning the uncapped form's super-linear shuffle
-    * growth back to ≈ data-ratio. */
-  private val extraQueries: Map[String, (SparkSession, String) => DataFrame] =
-    Map("x_tfidf_capped_top1" ->
-      Catalog.byName("q_x_tfidf_capped_top1").run)
-
   def main(args: Array[String]): Unit = args.toList match {
     case "gen" :: src :: out :: n :: Nil => gen(src, out, n.toInt)
     case "genskew" :: src :: out :: n :: Nil => gen(src, out, n.toInt, skew = true)
-    case "gensorted" :: src :: out :: Nil => gensorted(src, out)
     case "gensf" :: src :: out :: n :: Nil => gensf(src, out, n.toInt)
-    case "run" :: src :: scaled :: Nil => run(src, scaled)
-    case "bpe" :: src :: k :: Nil => bpe(src, k.toInt)
-    case "stream" :: src :: scaled :: Nil => stream(src, scaled)
-    case "bloom" :: src :: work :: Nil => bloom(src, work)
-    case "skew" :: uniform :: skewed :: Nil => skewRun(uniform, skewed)
-    case "census" :: src :: scaled :: n :: only =>
-      census(src, scaled, n.toInt, only.toSet)
-    case "mem" :: src :: scaled :: Nil => mem(src, scaled)
+    case "scale" :: src :: scaled :: n :: only => scale(src, scaled, n.toInt, only)
     case "spill" :: dir :: Nil => spillRun(dir, None)
     case "spill" :: dir :: skew :: Nil => spillRun(dir, Some(skew))
-    case "streamskew" :: uniform :: skewed :: only =>
-      streamSkew(uniform, skewed, only.toSet)
-    case "cc" :: skewed :: Nil => ccRun(skewed)
-    case "quotaskew" :: dir :: Nil => quotaSkew(dir)
-    case "scd2skew" :: dir :: Nil => scd2Skew(dir)
-    case "vocabcensus" :: dir :: Nil => vocabCensus(dir)
     case "xcheck" :: dir :: queries => xcheck(dir, queries)
     case "streamdump" :: dir :: out :: budget :: Nil =>
       streamDump(dir, out, budget.toInt)
-    case "skewdemo" :: skewed :: Nil =>
-      val spark = session()
-      val durations =
-        new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
-      spark.sparkContext.addSparkListener(new SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (te.taskInfo != null) durations.add(te.taskInfo.duration)
-      })
-      skewDemos(spark, durations, skewed)
-      spark.stop()
     case _ =>
       System.err.println(
         "usage: ScaleSmokeMain gen <srcSfDir> <outDir> <N> | " +
-          "genskew <srcSfDir> <outDir> <N> | " +
-          "run <srcSfDir> <scaledDir> | bpe <srcSfDir> <k> | " +
-          "stream <srcSfDir> <scaledDir> | bloom <srcSfDir> <workDir> | " +
-          "skew <uniformNxDir> <skewedNxDir> | " +
-          "census <srcSfDir> <scaledDir> <N> [q...] | " +
-          "mem <srcSfDir> <scaledDir>   (run under a small -Xmx) | " +
+          "genskew <srcSfDir> <outDir> <N> | gensf <srcSfDir> <outDir> <N> | " +
+          "scale <srcSfDir> <scaledDir> <N> [q...] | " +
           "spill <sfDir> [skewedNxDir]   (run with SPARK_DRIVER_MEM=3g) | " +
-          "streamskew <uniformNxDir> <skewedNxDir> [op...] | " +
-          "scd2skew <sfDir>   (whale-user PIT lookup vs interval join) | " +
-          "streamdump <nxDir> <outParquetDir> <budget> | " +
-          "cc <skewedNxDir> | quotaskew <scaledDir> | vocabcensus <scaledDir>")
+          "xcheck <dir> <q...> | streamdump <nxDir> <outParquetDir> <budget>")
       sys.exit(2)
   }
 
@@ -121,9 +59,9 @@ object ScaleSmokeMain {
     * content-exact external comparison — the verification path for the
     * ACTIVE-suppression configuration, which the gate row
     * (`q_s_stream_join_capped`, budget far above gate-SF candidate
-    * counts) deliberately does not exercise. The whale smoke
-    * (`streamskew ss_budget`) proves COUNTS (kept + audits = emitted,
-    * kept + suppressed = the unbudgeted join's output); this dump lets
+    * counts) deliberately does not exercise. The retired whale smoke
+    * (`streamskew ss_budget`, PERF_NOTES) proved COUNTS (kept + audits =
+    * emitted, kept + suppressed = the unbudgeted join's output); this dump lets
     * an external oracle prove the SELECTION — that the kept pairs are
     * exactly the `budget` latest in-window clicks by (event-time ms,
     * event_id) per ripe purchase, and each audit row carries the exact
@@ -149,85 +87,66 @@ object ScaleSmokeMain {
     spark.stop()
   }
 
-  /** Memory-pressure smoke: the shuffle/agg/window-heavy queries under a
-    * CONSTRAINED heap (launch this subcommand with e.g. -Xmx8g against
-    * the 10× corpus — 1/16th of the sandbox default), recording per-query
-    * wall time, spill bytes (memory + disk), and peak per-task execution
-    * memory. The 100 TB claim under test: when the working set outgrows
-    * the heap, the hash-agg / sort-merge / window paths SPILL and finish
-    * rather than OOM — executor sizing changes throughput, not
-    * correctness. Scalable-table queries run at the scaled dir; the
-    * TPC-H shapes (which `gen` can't replicate) run at the 1× src dir
-    * under the same heap. */
-  private def mem(src: String, scaled: String): Unit = {
+  /** Wall time, jobs and shuffle bytes per query at 1× vs N×, the
+    * evidence for "would the plan survive an N× scale-up": every catalog
+    * query, or only the named ones, after one unmeasured 1× warm pass.
+    * The (query × scale) grid runs SPARK_GRAFT_REPS times (default 1) end
+    * to end, each cell keeping its min wall as in Bench; shuffle bytes are
+    * exact per run (see [[Run]]). A query that fails at N× (a `gen` dir
+    * holds only the documents/events/embeddings tables) is listed as
+    * failed and skips its 1× cell. A row is flagged SUPER-LINEAR when its
+    * N× shuffle grows faster than the data ratio (20% slack) and clears a
+    * 5 MB floor — a 30× ratio on tens of kilobytes is result-row
+    * metadata, not data movement. */
+  private def scale(src: String, scaled: String, n: Int,
+                    only: List[String]): Unit = {
+    val names = if (only.isEmpty) Catalog.all.map(_.name) else only
+    val unknown = names.filterNot(Catalog.byName.contains)
+    require(unknown.isEmpty, s"scale: unknown query ${unknown.mkString(", ")}")
+    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "1").toInt
+    require(reps >= 1, s"SPARK_GRAFT_REPS must be >= 1, got $reps")
     val spark = session()
-    val heapMb = Runtime.getRuntime.maxMemory / (1 << 20)
-    println(s"[scale-smoke] mem smoke under ${heapMb} MB heap")
-    // The 10× corpus never pressures even a 3 GiB heap (measured: zero
-    // spill at -Xmx3g), so the spill machinery itself would go untested;
-    // SPARK_GRAFT_SPILL_THRESHOLD=N forces the window / sort-merge-join
-    // buffers to spill past N in-memory rows — the claim under test
-    // becomes "the spill path executes and the queries still finish ok",
-    // which is the part of the 100 TB story a small corpus can exercise.
-    sys.env.get("SPARK_GRAFT_SPILL_THRESHOLD").foreach { t =>
-      spark.conf.set("spark.sql.windowExec.buffer.spill.threshold", t)
-      spark.conf.set("spark.sql.sortMergeJoinExec.buffer.spill.threshold", t)
-      println(s"[scale-smoke] forced window/SMJ buffer spill past $t rows")
+    def once(name: String, dir: String): RunRecord = {
+      GraftSession.dropCachedBlocks(spark)
+      Run.query(spark, name, Catalog.byName(name).run(spark, dir), Run.noop)
     }
-    val spillMem = new java.util.concurrent.atomic.AtomicLong(0)
-    val spillDisk = new java.util.concurrent.atomic.AtomicLong(0)
-    val peakTask = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          spillMem.addAndGet(m.memoryBytesSpilled)
-          spillDisk.addAndGet(m.diskBytesSpilled)
-          peakTask.getAndUpdate(p => math.max(p, m.peakExecutionMemory))
-        }
+    names.foreach(once(_, src))
+    val runs = (1 to reps).flatMap { pass =>
+      val r = names.map { q =>
+        val nx = once(q, scaled)
+        (q, if (nx.ok) once(q, src) else nx, nx)
       }
-    })
-    val cases: Seq[(String, String)] = Seq(
-      "q_x_dedup_minhash" -> scaled, "q_x_dedup_simhash" -> scaled,
-      "q_x_tfidf_top1" -> scaled, "x_tfidf_capped_top1" -> scaled,
-      "q_x_bm25_top1" -> scaled, "q_x_bm25_capped_top1" -> scaled,
-      "q_w_sessionize" -> scaled, "q_x_resample_ffill" -> scaled,
-      "q_x_corpus_shuffle" -> scaled, "q_x_seq_pack" -> scaled,
-      "q_tpch_q21_waiting" -> src, "q_tpch_q9_profit" -> src,
-      "q_tpch_q18_large_orders" -> src)
-    println(f"${"query"}%-24s ${"dir"}%-6s ${"wall_s"}%7s ${"spill_mem"}%10s ${"spill_disk"}%10s ${"peak_task"}%10s ${"status"}%8s")
-    // After an OutOfMemoryError the JVM's executor state is undefined —
-    // subsequent rows' spill/peak numbers would be garbage — so an OOM
-    // prints its row and ABORTS the remaining cases (exit 1; rerun with a
-    // larger heap or a lower forced threshold).
-    var oomAbort = false
-    cases.foreach { case (name, dir) =>
-      if (!oomAbort) {
-        val run = extraQueries.getOrElse(name, Catalog.byName(name).run)
-        GraftSession.dropCachedBlocks(spark)
-        spillMem.set(0); spillDisk.set(0); peakTask.set(0)
-        val t0 = System.nanoTime()
-        val status =
-          try {
-            run(spark, dir).write.format("noop").mode("overwrite").save()
-            "ok"
-          } catch {
-            case e: Throwable =>
-              if (e.toString.contains("OutOfMemory")) "OOM"
-              else s"FAIL:${e.getClass.getSimpleName}"
-          }
-        val dt = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(500) // listener drain
-        val tag = if (dir == scaled) "10x" else "1x"
-        println(f"$name%-24s $tag%-6s $dt%7.1f ${spillMem.get / 1e6}%9.1fM ${spillDisk.get / 1e6}%9.1fM ${peakTask.get / 1e6}%9.1fM $status%8s")
-        if (status == "OOM") {
-          println(s"[scale-smoke] OOM in $name — JVM state undefined, aborting remaining cases")
-          oomAbort = true
-        }
+      System.err.println(s"[scale-smoke] pass $pass/$reps done")
+      r
+    }.groupBy(_._1)
+    val floorBytes = 5e6
+    def mb(b: Long) = f"${b / 1e6}%.1fM"
+    println(f"${"query"}%-36s ${"t_1x"}%8s ${"t_Nx"}%8s ${"ratio"}%6s " +
+      f"${"jobs"}%9s ${"shuf_1x"}%10s ${"shuf_Nx"}%10s ${"shufR"}%6s")
+    val flagged = names.flatMap { name =>
+      val cells = runs(name)
+      cells.flatMap(c => Seq(c._2, c._3)).find(!_.ok) match {
+        case Some(bad) =>
+          println(s"$name FAILED: ${bad.error.getOrElse("")}"); None
+        case None =>
+          val (one, nx) = (cells.map(_._2), cells.map(_._3))
+          val (t1, tn) = (one.flatMap(_.wallS).min, nx.flatMap(_.wallS).min)
+          def shuffle(r: RunRecord) = r.shuffleReadBytes + r.shuffleWriteBytes
+          val (s1, sn) = (shuffle(one.last), shuffle(nx.last))
+          val r = if (s1 > 0) sn.toDouble / s1 else if (sn == 0) 0.0 else -1.0
+          val superLinear = (r > n * 1.2 || r < 0) && sn > floorBytes
+          val jobs = s"${one.last.jobs}/${nx.last.jobs}"
+          println(f"$name%-36s $t1%8.2f $tn%8.2f ${tn / t1}%6.1f $jobs%9s " +
+            f"${mb(s1)}%10s ${mb(sn)}%10s " +
+            f"${if (r >= 0) f"$r%.1f" else "inf"}%6s" +
+            (if (superLinear) " <-- SUPER-LINEAR" else ""))
+          if (superLinear) Some(name) else None
       }
     }
+    println(f"[scale-smoke] super-linear (>${n * 1.2}%.0fx and " +
+      f">${floorBytes / 1e6}%.0fMB at Nx): ${flagged.size}%d" +
+      (if (flagged.nonEmpty) " — " + flagged.mkString(", ") else ""))
     spark.stop()
-    if (oomAbort) sys.exit(1)
   }
 
   /** The spill-path heavyweights: one per operator family whose 100 TB
@@ -239,20 +158,15 @@ object ScaleSmokeMain {
     "q_x_dedup_minhash", "q_w_sessionize", "q_x_ppl_buckets",
     "q_tpch_q21_waiting", "q_tpch_q18_large_orders", "q_s_stream_join")
 
-  /** Forced-spill smoke: the claim `mem` could NOT test. The 10× corpus
-    * never pressures even a 3 GiB heap (zero spill measured), so "spills
-    * and finishes rather than OOMs" stayed an argument. Here the
-    * EXECUTION POOL is shrunk out from under the same queries —
-    * `spark.memory.fraction` cut ~15× below default at session build —
-    * so the task memory manager genuinely refuses allocations and the
-    * hash-agg / sort / window / shuffle paths hit their real spill
-    * machinery (UnsafeExternalSorter & co.), not a forced row-count
-    * threshold. Protocol: phase A runs every case under a normal pool
-    * and records the [[Golden.fingerprint]] of each result; phase B
-    * rebuilds the context with the starved pool, re-runs, and compares
-    * fingerprints — bitwise-equal output, nonzero spill bytes, no OOM is
-    * the pass condition. Launch with SPARK_DRIVER_MEM=3g against the
-    * persisted sf1 dir (gensf) so data-per-task is meaningful. */
+  /** Forced-spill smoke. The EXECUTION POOL is shrunk out from under the
+    * spill-path heavyweights — `spark.memory.fraction` cut ~10× below
+    * default at session build — so the task memory manager genuinely
+    * refuses allocations and the hash-agg / sort / window / shuffle paths
+    * hit their real spill machinery (UnsafeExternalSorter & co.), not a
+    * forced row-count threshold. Pass condition (see [[crossCheck]]):
+    * bitwise-equal output, nonzero spill bytes, no OOM. Launch with
+    * SPARK_DRIVER_MEM=3g against the persisted sf1 dir (gensf) so
+    * data-per-task is meaningful. */
   private def spillRun(dir: String, skew: Option[String]): Unit = {
     val heapMb = Runtime.getRuntime.maxMemory / (1 << 20)
     println(s"[scale-smoke] spill smoke under ${heapMb} MB heap at $dir")
@@ -266,1066 +180,123 @@ object ScaleSmokeMain {
       spillCases.map(q => (q, q, dir)) ++
         skew.map(sk => ("q_w_sessionize[whale]", "q_w_sessionize", sk)).toSeq
 
-    val ref = session()
-    val want = cases.map { case (label, q, d) =>
-      val r = Golden.fingerprint(Catalog.byName(q).run(ref, d)).head()
-      GraftSession.dropCachedBlocks(ref)
-      label -> ((r.getLong(0), r.getString(1)))
-    }.toMap
-    println(s"[scale-smoke] reference fingerprints collected (normal pool)")
-    ref.stop()
-
     // A starved pool still has to honor Tungsten's floor: consumers
     // acquire page-granular chunks, so cores × page must fit the
     // EXECUTION share or the allocator throws before the spill machinery
-    // gets a chance (measured here: fraction 0.04-0.05 under default 0.5
+    // gets a chance (measured: fraction 0.04-0.05 under default 0.5
     // storageFraction dies with AGGREGATE_OUT_OF_MEMORY on a 1 MiB
     // RowBasedKeyValueBatch page — the minhash localCheckpoint blocks
     // squat on the protected storage half of the pool). The smoke
     // therefore pins the same sizing rule a real cluster applies —
     // 1 MiB pages, storageFraction 0.1 so cached blocks evict to disk
-    // instead of starving tasks, fraction 0.1 ≈ 8 MB per task — and the
-    // claim under test stays honest: given the documented per-task
-    // minimum, working sets far beyond the pool spill and finish.
+    // instead of starving tasks — and the claim under test stays honest:
+    // given the documented per-task minimum, working sets far beyond the
+    // pool spill and finish.
     val fraction = sys.env.getOrElse("SPARK_GRAFT_MEM_FRACTION", "0.05")
-    val spark = GraftSession.builder("graft-spill-smoke", "32")
-      .config("spark.memory.fraction", fraction)
-      .config("spark.memory.storageFraction", "0.1")
-      .config("spark.buffer.pageSize", "1m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The window/SMJ paths buffer per-partition rows in an
-    // ExternalAppendOnlyUnsafeRowArray that only BECOMES a spillable
-    // sorter past `in.memory.threshold` rows and force-spills it past
-    // `spill.threshold` — the bounded-partition designs (per-user
-    // windows ~100 rows at sf1, binned joins) keep real buffers far
-    // below any threshold, so a per-user window (≈100 rows/partition at
-    // sf1) structurally CANNOT spill — its zero row below is the
-    // bounded-partition design holding, not an untested path. The
-    // whale-window shape that genuinely outgrows its share is the
-    // per-language ntile (q_x_ppl_buckets, ~10⁵-row partitions at sf1);
-    // 2000-row thresholds convert those to real sorters that then spill
-    // under the starved pool. Don't push the thresholds lower: each
-    // spill reader holds a ~1 MiB read-ahead buffer on the JVM heap, so
-    // 64-row force-spill (measured) kills the 3 GiB JVM with thousands
-    // of reader buffers — file-count, not pool pressure.
-    Seq("spark.sql.windowExec.buffer.in.memory.threshold",
-      "spark.sql.sortMergeJoinExec.buffer.in.memory.threshold",
-      "spark.sql.windowExec.buffer.spill.threshold",
-      "spark.sql.sortMergeJoinExec.buffer.spill.threshold")
-      .foreach(spark.conf.set(_, "2000"))
-    println(s"[scale-smoke] rebuilt context with spark.memory.fraction=$fraction, storageFraction=0.1, 1 MiB pages, window/SMJ buffer thresholds 2000")
-
-    val spillMem = new java.util.concurrent.atomic.AtomicLong(0)
-    val spillDisk = new java.util.concurrent.atomic.AtomicLong(0)
-    val peakTask = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          spillMem.addAndGet(m.memoryBytesSpilled)
-          spillDisk.addAndGet(m.diskBytesSpilled)
-          peakTask.getAndUpdate(p => math.max(p, m.peakExecutionMemory))
-        }
-      }
+    crossCheck("spill", cases, () => {
+      val spark = GraftSession.builder("graft-spill-smoke", GraftSession.defaultCpus)
+        .config("spark.memory.fraction", fraction)
+        .config("spark.memory.storageFraction", "0.1")
+        .config("spark.buffer.pageSize", "1m")
+        .getOrCreate()
+      // The window/SMJ paths buffer per-partition rows in an
+      // ExternalAppendOnlyUnsafeRowArray that only BECOMES a spillable
+      // sorter past `in.memory.threshold` rows and force-spills it past
+      // `spill.threshold`. A per-user window (≈100 rows/partition at sf1)
+      // structurally CANNOT spill — its zero row is the bounded-partition
+      // design holding, not an untested path. The whale-window shape that
+      // genuinely outgrows its share is the per-language ntile
+      // (q_x_ppl_buckets, ~10⁵-row partitions at sf1); 2000-row thresholds
+      // convert those to real sorters that then spill under the starved
+      // pool. Don't push the thresholds lower: each spill reader holds a
+      // ~1 MiB read-ahead buffer on the JVM heap, so 64-row force-spill
+      // (measured) kills a 3 GiB JVM with thousands of reader buffers.
+      Seq("spark.sql.windowExec.buffer.in.memory.threshold",
+        "spark.sql.sortMergeJoinExec.buffer.in.memory.threshold",
+        "spark.sql.windowExec.buffer.spill.threshold",
+        "spark.sql.sortMergeJoinExec.buffer.spill.threshold")
+        .foreach(spark.conf.set(_, "2000"))
+      println(s"[scale-smoke] rebuilt context with spark.memory.fraction=$fraction, " +
+        "storageFraction=0.1, 1 MiB pages, window/SMJ buffer thresholds 2000")
+      spark
     })
-
-    println(f"${"query"}%-24s ${"wall_s"}%7s ${"spill_mem"}%10s ${"spill_disk"}%10s ${"peak_task"}%10s ${"fp"}%6s ${"status"}%8s")
-    var failed = false
-    cases.foreach { case (label, q, d) =>
-      GraftSession.dropCachedBlocks(spark)
-      spillMem.set(0); spillDisk.set(0); peakTask.set(0)
-      val t0 = System.nanoTime()
-      var fpTag = "-"
-      val status =
-        try {
-          val r = Golden.fingerprint(Catalog.byName(q).run(spark, d)).head()
-          val got = (r.getLong(0), r.getString(1))
-          fpTag = if (got == want(label)) "match" else "DRIFT"
-          if (got != want(label)) failed = true
-          "ok"
-        } catch {
-          case e: Throwable =>
-            failed = true
-            if (e.toString.contains("OutOfMemory")) "OOM"
-            else s"FAIL:${e.getClass.getSimpleName}"
-        }
-      val dt = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500) // listener drain
-      println(f"$label%-24s $dt%7.1f ${spillMem.get / 1e6}%9.1fM ${spillDisk.get / 1e6}%9.1fM ${peakTask.get / 1e6}%9.1fM $fpTag%6s $status%8s")
-      if (status == "OOM") {
-        println(s"[scale-smoke] OOM in $label — the claim under test is FALSIFIED; aborting")
-        spark.stop(); sys.exit(1)
-      }
-    }
-    spark.stop()
-    if (failed) sys.exit(1)
-  }
-
-  /** Full-suite shuffle census: EVERY registered batch query that touches
-    * only the replicated tables runs ONCE at 1× and N×, recording total
-    * shuffle read+write bytes; any query whose shuffle grows faster than
-    * the data ratio (with 20% slack) is flagged. This closes the
-    * extrapolation gap the 17-query headline smoke leaves: the headline
-    * table argues the expensive queries scale; the census proves nobody
-    * in the long tail degenerates silently. Single-pass on purpose —
-    * shuffle bytes are a property of the executed plan, not the host
-    * (wall time is NOT reported here; `run` owns timing).
-    *
-    * Selection is by observed scan paths, not a hand-kept list: the
-    * analyzed plan's file-source locations must all sit under
-    * documents/events/embeddings (TPC-H-table queries can't run against
-    * a scaled dir that doesn't replicate their tables; q_s_ streaming
-    * queries are covered by the `stream` subcommand's state evidence). */
-  /** @param only when non-empty, restrict the sweep to these query names
-    *             (still subject to the scans-only-scalable-tables probe) —
-    *             the cheap way to census a newly added query without the
-    *             full 90-query double sweep. */
-  private def census(src: String, scaled: String, n: Int,
-                     only: Set[String] = Set.empty): Unit = {
-    val spark = session()
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        if (m != null) shuffleBytes.addAndGet(
-          m.shuffleWriteMetrics.bytesWritten + m.shuffleReadMetrics.totalBytesRead)
-      }
-    })
-    def drained(): Long = {
-      var last = shuffleBytes.get(); var stable = 0; var polls = 0
-      while (stable < 3 && polls < 100) {
-        Thread.sleep(100); polls += 1
-        val now = shuffleBytes.get()
-        if (now == last) stable += 1 else { stable = 0; last = now }
-      }
-      last
-    }
-    val scalable = Set("documents.parquet", "events.parquet",
-      "embeddings.parquet")
-    // Probe against the SCALED dir: a TPC-H-table query throws on the
-    // missing path and self-excludes. LogicalRDD leaves (eager
-    // localCheckpoints — tfidf postings, simhash membership, BPE vocab)
-    // count as scalable-neutral: the checkpoint was built IN this probe
-    // from the scaled dir, so its inputs already passed the path test —
-    // treating it as foreign (the first census did) silently dropped
-    // every checkpoint-backed query from the "nobody in the long tail
-    // degenerates" claim.
-    def scansOnlyScalable(name: String): Boolean =
-      try {
-        val df = Catalog.byName(name).run(spark, scaled)
-        val leaves = df.queryExecution.optimizedPlan.collectLeaves()
-        val paths = leaves.flatMap {
-          case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-            r.relation match {
-              case f: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-                f.location.rootPaths.map(_.getName)
-              case _ => Seq("?")
-            }
-          case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-            Seq.empty // literal frames (probe lists etc.) scale-free
-          case _: org.apache.spark.sql.execution.LogicalRDD =>
-            Seq.empty // eager checkpoint of data read from `scaled` above
-          case _ => Seq("?")
-        }
-        val rddLeaves = leaves.exists(
-          _.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
-        (paths.nonEmpty || rddLeaves) && paths.forall(scalable)
-      } catch { case _: Throwable => false }
-
-    // validate against the POST-exclusion name set: a q_s_ streaming name
-    // is in the catalog but not censusable (the noop batch write can't
-    // run a stream), so accepting it would reproduce the silent-0-sweep
-    // failure this guard exists to prevent
-    val censusable = Catalog.all.map(_.name)
-      .filterNot(_.startsWith("q_s_"))
-    val unknown = only -- censusable.toSet
-    require(unknown.isEmpty,
-      s"census: name(s) not censusable ${unknown.mkString(", ")} — " +
-        "either a typo or a q_s_ streaming query (use streamskew/stream " +
-        "for those); a bad name here would silently produce a 0-query " +
-        "sweep that reads as clean")
-    val names = censusable
-      .filter(nm => only.isEmpty || only(nm))
-      .filter(scansOnlyScalable)
-    println(s"[census] ${names.size} of ${Catalog.all.size} queries scan " +
-      s"only the replicated tables; data ratio $n, flag threshold ${n * 1.2}")
-
-    def bytesFor(name: String, dir: String): Long = {
-      GraftSession.dropCachedBlocks(spark)
-      val b0 = drained()
-      Catalog.byName(name).run(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      drained() - b0
-    }
-    // Flag only when the Nx absolute clears a floor: a 30x ratio on tens
-    // of kilobytes is result-row metadata (aggregate outputs, anchor
-    // violation frames), not data movement — the first census run
-    // false-flagged 28 such rows.
-    val floorBytes = 5e6
-    var flagged = List.empty[(String, Double)]
-    println(f"${"query"}%-36s ${"shuf_1x"}%10s ${"shuf_Nx"}%10s ${"ratio"}%6s")
-    names.foreach { name =>
-      try {
-        val s1 = bytesFor(name, src)
-        val sn = bytesFor(name, scaled)
-        val r = if (s1 > 0) sn.toDouble / s1 else if (sn == 0) 0.0 else -1.0
-        val mark = if ((r > n * 1.2 || r < 0) && sn > floorBytes) {
-          flagged ::= (name, r); " <-- SUPER-LINEAR"
-        } else ""
-        println(f"$name%-36s ${s1 / 1e6}%9.1fM ${sn / 1e6}%9.1fM ${if (r >= 0) f"$r%6.1f" else "  inf"}%6s$mark")
-      } catch { case e: Throwable => println(s"$name FAILED: ${e.getMessage}") }
-    }
-    println(f"[census] flagged super-linear (>${n * 1.2}%.0fx and >${floorBytes / 1e6}%.0fMB at Nx): ${flagged.size}%d" +
-      (if (flagged.nonEmpty) " — " + flagged.map(_._1).mkString(", ") else ""))
-    spark.stop()
-  }
-
-  /** Storage-layer scale evidence: Bloom-sidecar point-lookup pruning at
-    * 1× vs 10×. Both corpora are written range-clustered on the key with
-    * files ∝ corpus size (the 100 TB layout: fixed-size clustered files),
-    * indexed with [[graft.etl.BloomIndex]], and probed with the same key
-    * set. The claim under test: lookup cost is the number of files
-    * SCANNED, which stays ~1 while total files grow 10× — the sidecar
-    * prune, not the scan, absorbs corpus growth. */
-  private def bloom(src: String, work: String): Unit = {
-    val spark = session()
-    val docs = spark.read.parquet(s"$src/documents.parquet")
-      .select(col("doc_id"), col("source"), col("n_chars"))
-    val docOff = 10000000L
-    val docs10 = (0 until 10).map(i =>
-      docs.withColumn("doc_id", col("doc_id") + lit(i * docOff)))
-      .reduce(_.unionAll(_))
-
-    def prepare(d: DataFrame, nFiles: Int, out: String): String = {
-      d.repartitionByRange(nFiles, col("doc_id"))
-        .write.mode("overwrite").parquet(out)
-      graft.etl.BloomIndex.build(spark, out, "doc_id",
-        expectedPerFile = 1L << 16, numBits = 1L << 20)
-      out
-    }
-    val dir1 = prepare(docs, 8, s"$work/docs_1x")
-    val dirN = prepare(docs10, 80, s"$work/docs_10x")
-
-    // Deterministic probe set spread across the 10x id space (replica i,
-    // base id 137*i mod the ACTUAL 1x id range — hard-coding the range
-    // would let out-of-range probes prune every file and overstate the
-    // stat) — every probe exists in 10x; the first 10 also exist in 1x.
-    val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-    require(maxId >= 0, "bloom smoke expects non-negative 0-based doc_ids")
-    val probes = (0 until 20).map(i =>
-      (i % 10) * docOff + (137L * i) % (maxId + 1))
-    def stats(dir: String, ps: Seq[Long]): (Double, Int, Long) = {
-      var scanned = 0L; var total = 0
-      ps.foreach { p =>
-        val (rows, st) = graft.etl.BloomIndex.readPointLookup(
-          spark, dir, "doc_id", p)
-        rows.write.format("noop").mode("overwrite").save()
-        scanned += st.scannedFiles; total = st.totalFiles
-      }
-      (scanned.toDouble / ps.size, total, scanned)
-    }
-    val (avg1, tot1, _) = stats(dir1, probes.take(10).map(_ % docOff))
-    val (avgN, totN, _) = stats(dirN, probes)
-    println(f"[scale-smoke] bloom point lookup: 1x avg ${avg1}%.1f of $tot1 files scanned; " +
-      f"10x avg ${avgN}%.1f of $totN files scanned")
-    spark.stop()
-  }
-
-  /** Streaming state boundedness at 1× vs N×: run the stateful streaming
-    * operators over the events table at both scales and record, from
-    * `StreamingQueryProgress.stateOperators`, the peak state rows and
-    * state memory. The 100 TB claim under test: state scales with each
-    * operator's INTRINSIC cardinality — (window × event_type) for the
-    * windowed agg (constant in input rows, since replicas share the time
-    * range), distinct keys for dedup, watermark-buffered rows for the
-    * stream-stream join — never with raw input volume beyond that. */
-  private def stream(src: String, scaled: String): Unit = {
-    val spark = session()
-
-    def stage(dir: String): java.nio.file.Path = {
-      val st = java.nio.file.Files.createTempDirectory("graft-scale-stream")
-      try java.nio.file.Files.createSymbolicLink(
-        st.resolve("events.parquet"),
-        // absolutize: a relative target would resolve against the temp dir
-        java.nio.file.Paths.get(dir, "events.parquet").toAbsolutePath)
-      catch { case e: Throwable =>
-        java.nio.file.Files.deleteIfExists(st); throw e
-      }
-      st
-    }
-    def unstage(st: java.nio.file.Path): Unit = {
-      java.nio.file.Files.deleteIfExists(st.resolve("events.parquet"))
-      java.nio.file.Files.deleteIfExists(st)
-    }
-
-    // (input rows, peak state rows, peak state bytes) for one stream run.
-    // The testdata events.parquet is a single FILE (needs a staged symlink
-    // dir for the file source); the gen-written scaled one is a Spark
-    // DIRECTORY of part files, streamable directly.
-    def measure(label: String, dir: String,
-                mk: DataFrame => DataFrame, mode: String): (Long, Long, Long) = {
-      val evp = java.nio.file.Paths.get(dir, "events.parquet")
-      val st = if (java.nio.file.Files.isDirectory(evp)) None else Some(stage(dir))
-      val streamDir = st.fold(evp.toString)(_.toString)
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val events = graft.streaming.EventsStream.readEvents(spark, streamDir)
-        val name = s"smoke_${label}_${System.nanoTime()}"
-        val q = mk(events).writeStream.format("memory").queryName(name)
-          .outputMode(mode).start()
-        try {
-          try q.processAllAvailable() finally q.stop()
-          val ps = q.recentProgress.toSeq
-          def stateSum(f: org.apache.spark.sql.streaming.StateOperatorProgress => Long) =
-            ps.map(p => Option(p.stateOperators).map(_.map(f).sum).getOrElse(0L))
-          val inRows = ps.map(_.numInputRows).sum
-          val peakRows = (0L +: stateSum(_.numRowsTotal)).max
-          val peakBytes = (0L +: stateSum(_.memoryUsedBytes)).max
-          (inRows, peakRows, peakBytes)
-        } finally spark.catalog.dropTempView(name)
-      } finally {
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        st.foreach(unstage)
-      }
-    }
-
-    val ops: Seq[(String, DataFrame => DataFrame, String)] = Seq(
-      ("window_agg",
-        (e: DataFrame) => graft.streaming.EventsStream.windowedCounts(e),
-        "append"),
-      ("dedup",
-        (e: DataFrame) => graft.streaming.EventsStream
-          .dedupStream(e, Seq("user_id", "event_type")),
-        "append"),
-      ("ss_join",
-        (e: DataFrame) => graft.streaming.EventsStream.clickToPurchaseJoin(e),
-        "append"),
-      // state claim: ∝ users + watermark-lag buffer, never stream length
-      ("asof",
-        (e: DataFrame) => graft.streaming.EventsStream
-          .asofAttribution(e).toDF(),
-        "append"),
-      // state claim: one 3·capacity-long summary per open window,
-      // cardinality-independent
-      ("heavy",
-        (e: DataFrame) => graft.streaming.EventsStream
-          .windowedHeavyHitters(e),
-        "complete"),
-      // state claim: one EXACTLY-compacted funnel buffer per user (min
-      // view + dominated-pruned click/purchase candidates — O(1) per key
-      // on an in-order stream), evicted at watermark close
-      ("funnel",
-        (e: DataFrame) => graft.streaming.EventsStream
-          .funnelStream(e).toDF(),
-        "append"),
-      // state claim: dedup rows ∝ (user, hour) keys inside the 65-min
-      // horizon; window-agg rows ∝ open hours — both horizon-bounded
-      ("distinct",
-        (e: DataFrame) => graft.streaming.EventsStream
-          .windowedDistinctUsers(e),
-        "append"),
-      // state claim: |windows|·|types| rows — 4× tumbling (the overlap
-      // factor), calendar-bounded, cardinality-independent. Append, not
-      // complete: complete mode disables watermark eviction, so the
-      // measured state would (correctly) grow with every window ever
-      // opened — the gate row (q_s_stream_hopping) runs append too
-      ("hopping",
-        (e: DataFrame) => graft.streaming.EventsStream.hoppingCounts(e),
-        "append"),
-      // state claim: identical buffers to ss_join (same sides, same
-      // watermark bounds) — the outer flavor only adds null-row
-      // emission at eviction, not state
-      ("ss_join_outer",
-        (e: DataFrame) => graft.streaming.EventsStream
-          .clickToPurchaseLeftJoin(e, watermark = "1 hour"),
-        "append"))
-
-    println(f"${"op"}%-12s ${"in_1x"}%9s ${"state_1x"}%9s ${"MB_1x"}%7s ${"in_Nx"}%9s ${"state_Nx"}%9s ${"MB_Nx"}%7s ${"stateR"}%6s")
-    ops.foreach { case (label, mk, mode) =>
-      val (i1, r1, m1) = measure(label, src, mk, mode)
-      val (in, rn, mn) = measure(label, scaled, mk, mode)
-      println(f"$label%-12s $i1%9d $r1%9d ${m1 / 1e6}%7.1f $in%9d $rn%9d ${mn / 1e6}%7.1f ${if (r1 > 0) f"${rn.toDouble / r1}%.1f" else "-"}%6s")
-    }
-    spark.stop()
-  }
-
-  /** Whale-stratum quota smoke: the window quota (`domainQuota`) vs the
-    * bounded-heap quota (`domainQuotaExact`) over a corpus where one
-    * synthetic stratum holds 20% of all docs (`doc_id % 5 → "whale"`) —
-    * the shape where the window's per-domain sort partition becomes one
-    * whale task while the heap aggregates partially. Measures wall,
-    * max/median task millis, and total shuffle records for each path,
-    * then compares [[Golden.fingerprint]]s: bitwise-equal fingerprints
-    * prove the heap selected EXACTLY the window's rows at scale, so the
-    * whale-neutral plan is a drop-in replacement, not an approximation. */
-  private def quotaSkew(dir: String): Unit = {
-    val spark = session()
-    val durations = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
-    val shuffleRec = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        if (te.taskInfo != null) durations.add(te.taskInfo.duration)
-        val m = te.taskMetrics
-        if (m != null) shuffleRec.addAndGet(
-          m.shuffleWriteMetrics.recordsWritten)
-      }
-    })
-    val quota = 1000
-    def docs = graft.sources.Sources.table(spark, dir, "documents")
-      .withColumn("src",
-        when(col("doc_id") % 5 === 0, lit("whale")).otherwise(col("source")))
-      .select(col("doc_id"), col("src"))
-    def windowPath = graft.ext.Sampling
-      .domainQuota(docs, "doc_id", "src", quota)
-      .filter(col("kept") === 1L)
-      .select(col("src"), col("quota_rank"), col("doc_id"))
-    def heapPath = graft.ext.Sampling
-      .domainQuotaExact(docs, "doc_id", "src", quota)
-      .select(col("src"), col("quota_rank"), col("doc_id"))
-    val n = docs.count()
-    val whales = docs.filter(col("src") === "whale").count()
-    println(s"[scale-smoke] quota smoke: $n docs, whale stratum $whales " +
-      s"(${100 * whales / n}%), quota $quota")
-    // warm pass (file listing, codegen) so probe order doesn't bias
-    windowPath.write.format("noop").mode("overwrite").save()
-    heapPath.write.format("noop").mode("overwrite").save()
-    def probe(label: String, df: => DataFrame): org.apache.spark.sql.Row = {
-      GraftSession.dropCachedBlocks(spark)
-      durations.clear(); shuffleRec.set(0)
-      val t0 = System.nanoTime()
-      val fp = Golden.fingerprint(df).head()
-      val dt = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500) // listener drain
-      val (mx, med) = taskStats(durations)
-      println(f"[scale-smoke] $label%-22s: $dt%6.2f s, maxTask ${mx}%6d ms, " +
-        f"medTask ${med}%4d ms, max/med ${maxMedRatio(mx, med)}%5s, " +
-        f"shuffle ${shuffleRec.get()}%,d rows, kept ${fp.getLong(0)}%,d")
-      fp
-    }
-    val w = probe("quota window (whale)", windowPath)
-    val h = probe("quota heap   (whale)", heapPath)
-    val same = w == h
-    println(s"[scale-smoke] selection fingerprints ${if (same) "MATCH" else s"DIFFER: window=$w heap=$h"}")
-    spark.stop()
-    if (!same) sys.exit(1)
-  }
-
-  /** SCD2 point-in-time lookup under a whale user: the join-free
-    * union+window formulation ([[graft.ext.Scd2.pointInTime]]) vs the
-    * textbook interval join (equi-join on the key + range predicate). The
-    * interval join's matched-pair enumeration is facts_u × versions_u per
-    * user BEFORE its range filter rejects pairs, so concentrating a third
-    * of all events on one user makes it quadratic in that user's activity
-    * while the union+window path stays O(facts_u + versions_u). Both
-    * outputs are fingerprinted — the asymmetry is cost, not semantics. */
-  private def scd2Skew(dir: String): Unit = {
-    val spark = session()
-    val durations = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
-    val shuffleRec = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        if (te.taskInfo != null) durations.add(te.taskInfo.duration)
-        val m = te.taskMetrics
-        if (m != null) shuffleRec.addAndGet(
-          m.shuffleWriteMetrics.recordsWritten)
-      }
-    })
-    // whale: every third event (by id) is re-keyed to user 0
-    def ev = graft.sources.Sources.table(spark, dir, "events")
-      .withColumn("user_id",
-        when(col("event_id") % 3 === 0, lit(0L)).otherwise(col("user_id")))
-    def obs = ev.filter(col("event_type") === "purchase")
-      .withColumn("tier", when(col("value") >= 50, "gold").otherwise("basic"))
-    def facts = ev.filter(col("event_type") === "click")
-    val nObs = obs.count(); val nFacts = facts.count()
-    val whaleObs = obs.filter(col("user_id") === 0L).count()
-    val whaleFacts = facts.filter(col("user_id") === 0L).count()
-    println(s"[scale-smoke] scd2 whale: $nObs obs / $nFacts facts total, " +
-      s"whale user holds $whaleObs obs / $whaleFacts facts " +
-      s"(pair enumeration ${whaleObs * whaleFacts}%,d for the interval join)")
-    def pitPath = graft.ext.Scd2.pointInTime(facts, obs,
-        "user_id", "ts", "event_id", "tier", Seq("event_id"))
-      .select(col("event_id"), coalesce(col("tier"), lit("unknown")).as("tier"))
-    def joinPath = {
-      val hist = graft.ext.Scd2.buildHistory(obs, "user_id", "ts",
-        "event_id", "tier")
-      val f = facts.select(col("event_id"), col("user_id"),
-        unix_micros(col("ts")).as("__fts"))
-      f.join(hist, f("user_id") === hist("user_id") &&
-          f("__fts") >= hist("valid_from_us") &&
-          (hist("valid_to_us").isNull || f("__fts") < hist("valid_to_us")),
-        "left")
-        .select(f("event_id"),
-          coalesce(hist("tier"), lit("unknown")).as("tier"))
-    }
-    // warm pass (file listing, codegen) so probe order doesn't bias
-    pitPath.write.format("noop").mode("overwrite").save()
-    joinPath.write.format("noop").mode("overwrite").save()
-    def probe(label: String, df: => DataFrame): org.apache.spark.sql.Row = {
-      GraftSession.dropCachedBlocks(spark)
-      durations.clear(); shuffleRec.set(0)
-      val t0 = System.nanoTime()
-      val fp = Golden.fingerprint(df).head()
-      val dt = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500) // listener drain
-      val (mx, med) = taskStats(durations)
-      println(f"[scale-smoke] $label%-22s: $dt%6.2f s, maxTask ${mx}%6d ms, " +
-        f"medTask ${med}%4d ms, max/med ${maxMedRatio(mx, med)}%5s, " +
-        f"shuffle ${shuffleRec.get()}%,d rows, out ${fp.getLong(0)}%,d")
-      fp
-    }
-    val p = probe("pit union+window", pitPath)
-    val j = probe("pit interval join", joinPath)
-    val same = p == j
-    println(s"[scale-smoke] lookup fingerprints ${if (same) "MATCH" else s"DIFFER: pit=$p join=$j"}")
-    spark.stop()
-    if (!same) sys.exit(1)
-  }
-
-  /** Vocab-growth exchange decomposition: `census` flags
-    * `q_x_vocab_growth` super-linear (47.8× shuffle on 10× data), and
-    * this instrument pins WHY that is a task-granularity artifact, not a
-    * corpus-growth hazard. The gram-keyed min(shard) exchange carries
-    * Σ_task |task-local distinct grams| ≤ |map tasks|·|vocab| rows — at
-    * the 1×/10× comparison the map-task count itself grows (one small
-    * file vs 32), so the bound moves with BOTH factors; at a fixed
-    * cluster the task count is fixed and the exchange goes FLAT once
-    * per-task gram multiplicity absorbs corpus growth (|vocab| grows
-    * Heaps-sublinearly — measured 1.9× for 10× data). Protocol: the
-    * same aggregate over the same corpus at fine (default 128 MB) vs
-    * coarse (1 GB) input splits; pass = shuffle rows collapse toward
-    * |vocab| as tasks coarsen while the result fingerprint stays
-    * bitwise-equal. */
-  private def vocabCensus(dir: String): Unit = {
-    val spark = session()
-    val shufRows = new java.util.concurrent.atomic.AtomicLong(0)
-    val shufBytes = new java.util.concurrent.atomic.AtomicLong(0)
-    val mapTasks = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null && m.shuffleWriteMetrics.recordsWritten > 0) {
-          shufRows.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-          shufBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          mapTasks.incrementAndGet()
-        }
-      }
-    })
-    val docs = graft.sources.Sources.table(spark, dir, "documents")
-    val vocab = docs.select(explode(graft.functions.TextExprs
-        .gram_hashes(col("text"), 3)).as("g"))
-      .agg(countDistinct(col("g")).as("v"), count(lit(1)).as("stream"))
-      .head()
-    println(s"[scale-smoke] vocabcensus $dir: stream ${vocab.getLong(1)} " +
-      s"gram instances, vocab ${vocab.getLong(0)} distinct")
-    def probe(label: String, maxPart: Long, minParts: Int)
-        : org.apache.spark.sql.Row = {
-      spark.conf.set("spark.sql.files.maxPartitionBytes", maxPart.toString)
-      // the split formula targets totalBytes/defaultParallelism below
-      // maxPartitionBytes, so coarsening also needs the floor dropped
-      spark.conf.set("spark.sql.files.minPartitionNum", minParts.toString)
-      GraftSession.dropCachedBlocks(spark)
-      shufRows.set(0); shufBytes.set(0); mapTasks.set(0)
-      val t0 = System.nanoTime()
-      val fp = Golden.fingerprint(graft.ext.TextAnalysis
-        .vocabGrowth(docs, "doc_id", "text")).head()
-      val dt = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500) // listener drain
-      println(f"[scale-smoke] $label%-28s: $dt%5.2f s, " +
-        f"mapTasks ${mapTasks.get()}%3d, shuffle ${shufRows.get()}%,d rows " +
-        f"/ ${shufBytes.get() / 1e6}%.1f MB")
-      fp
-    }
-    probe("warm-up (unmeasured)", 128L << 20, 32)
-    val fine = probe("fine splits (32-way)", 128L << 20, 32)
-    val coarse = probe("coarse splits (1-way)", 1L << 30, 1)
-    val same = fine == coarse
-    println(s"[scale-smoke] curve fingerprints ${if (same) "MATCH" else "DIFFER"}")
-    spark.stop()
-    if (!same) sys.exit(1)
-  }
-
-  /** Connected-components fallback smoke: the >2M-edge distributed
-    * min-label path (`Dedup.distributedCC`) is spec-tested but was absent
-    * from the scale evidence. One verified minhash edge set is built over
-    * the skewed N× corpus (giant planted clusters — the worst CC shape:
-    * long label-propagation chains inside whale components), then BOTH
-    * clustering paths consume it: the driver union-find (the ≤limit fast
-    * path) and the distributed propagation (forced, as if the edges had
-    * overflowed the limit). Pass = identical cluster fingerprints
-    * (both label by component-min id), convergence in ≤ maxIter, and
-    * per-iteration shuffle recorded as bounded. */
-  private def ccRun(skewed: String): Unit = {
-    val spark = session()
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        if (m != null) shuffleBytes.addAndGet(
-          m.shuffleWriteMetrics.bytesWritten + m.shuffleReadMetrics.totalBytesRead)
-      }
-    })
-    val docs = graft.sources.Sources.table(spark, skewed, "documents")
-    // The production maxBucket=64 cap DROPS the ~1000-member whale
-    // buckets outright (cap filtering keeps or drops whole buckets), so
-    // the verified edge set stays tiny (~1.5k edges on the skewed 10×
-    // corpus) — fine for dedup, useless for stressing CC. A cap above
-    // the whale bucket size re-admits the giant planted clusters as
-    // dense cliques (~10⁵ verified edges per replica — past the 2M
-    // production limit, i.e. the regime where connectedComponents would
-    // choose the distributed path on its own); clustering semantics are
-    // identical at any cap (both paths label by component-min), so the
-    // comparison stays exact.
-    val maxBucket = sys.env.getOrElse("SPARK_GRAFT_CC_MAXBUCKET", "2048").toInt
-    println(s"[scale-smoke] building edges with maxBucket=$maxBucket")
-    graft.ext.Dedup.withMinhashEdges(docs, "doc_id", "text",
-      maxBucket = maxBucket) { (ids, edges) =>
-      val edgeSet = edges.localCheckpoint(true)
-      val nEdges = edgeSet.count()
-      val nodes = ids.select(col("id"))
-      println(s"[scale-smoke] verified edge set: $nEdges edges" +
-        (if (nEdges > 2000000L) " (ABOVE the 2M production limit — " +
-          "the distributed path is the one production would take)" else ""))
-
-      def fp(df: DataFrame): (Long, String) = {
-        val r = Golden.fingerprint(df).head()
-        (r.getLong(0), r.getString(1))
-      }
-
-      // smallEdgeLimit raised so THIS run stays on the driver union-find
-      // even when the edge set exceeds the production 2M limit — the
-      // point is an exact cross-check of the two paths on one input
-      shuffleBytes.set(0)
-      var t0 = System.nanoTime()
-      val fpDriver = fp(graft.ext.Dedup.connectedComponents(nodes, edgeSet,
-        smallEdgeLimit = 50000000L))
-      val wallDriver = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500)
-      val shufDriver = shuffleBytes.get()
-
-      val perIter = Seq.newBuilder[Long]
-      shuffleBytes.set(0)
-      t0 = System.nanoTime()
-      val fpDist = fp(graft.ext.Dedup.distributedCC(nodes, edgeSet,
-        maxIter = 15, onIter = _ => perIter += shuffleBytes.get()))
-      val wallDist = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500)
-      val shufDist = shuffleBytes.get()
-      val iters = perIter.result()
-      val deltas = (0L +: iters).sliding(2).map(w => w(1) - w(0)).toSeq
-
-      println(f"${"path"}%-12s ${"wall_s"}%7s ${"shuffle"}%9s ${"iters"}%6s")
-      println(f"${"driver-uf"}%-12s $wallDriver%7.1f ${shufDriver / 1e6}%8.1fM ${"-"}%6s")
-      println(f"${"distributed"}%-12s $wallDist%7.1f ${shufDist / 1e6}%8.1fM ${iters.size}%6d")
-      println(s"[scale-smoke] per-iteration shuffle MB: " +
-        deltas.map(d => f"${d / 1e6}%.1f").mkString(", "))
-      println(s"[scale-smoke] fingerprints ${if (fpDriver == fpDist) "MATCH" else s"DRIFT: $fpDriver vs $fpDist"}")
-      if (fpDriver != fpDist || iters.size >= 15) sys.exit(1)
-    }
-    spark.stop()
-  }
-
-  /** Streaming skew smoke: the batch surface got the adversarial-skew
-    * treatment (whale key, AQE plan assertions, salted joins); this runs
-    * the STATEFUL streams against the same whale — `genskew` redirects
-    * ~20% of ALL events to one `user_id`, the hot key for the
-    * stream-stream join, the per-user session state, and the dedup
-    * shuffle — and records what a cluster operator would watch: wall
-    * time, micro-batches, peak state rows/bytes (watermark-bounded claim)
-    * and the per-task duration max/median (single-partition-straggle
-    * claim). Both dirs must be gen-written Nx parquet DIRECTORIES so the
-    * file source streams them in place. */
-  /** @param only when non-empty, run just these ops (e.g. `asof` at a
-    *             scale where ss_join's quadratic output can't finish) —
-    *             unknown names fail fast like census. */
-  private def streamSkew(uniform: String, skewed: String,
-                         only: Set[String] = Set.empty): Unit = {
-    val spark = session()
-    val durations =
-      new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskInfo != null) durations.add(te.taskInfo.duration)
-    })
-
-    // noop sink ON PURPOSE: the whale join EMITS quadratically many rows
-    // (every hot-key click × in-window hot-key purchase), so a memory
-    // sink turns the smoke into a driver-heap test; the metrics — state
-    // rows/bytes, task durations, output cardinality — are what's under
-    // study, and the sink progress reports them all.
-    def measure(label: String, dir: String, mk: DataFrame => DataFrame,
-                mode: String): (Double, Int, Long, Long, Long, Long, Long, Long) = {
-      val evp = java.nio.file.Paths.get(dir, "events.parquet")
-      require(java.nio.file.Files.isDirectory(evp),
-        s"$evp must be a gen-written parquet directory")
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val events = graft.streaming.EventsStream.readEvents(spark, evp.toString)
-        val t0 = System.nanoTime()
-        val q = mk(events).writeStream.format("noop")
-          .outputMode(mode).start()
-        try q.processAllAvailable() finally q.stop()
-        val wall = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(500) // listener drain
-        val ps = q.recentProgress.toSeq
-        def stateSum(f: org.apache.spark.sql.streaming.StateOperatorProgress => Long) =
-          ps.map(p => Option(p.stateOperators).map(_.map(f).sum).getOrElse(0L))
-        val ds = {
-          val it = durations.iterator()
-          val b = Seq.newBuilder[Long]
-          while (it.hasNext) b += it.next()
-          durations.clear()
-          b.result().sorted
-        }
-        (wall, ps.count(_.numInputRows > 0),
-          ps.map(_.numInputRows).sum,
-          ps.map(p => Option(p.sink).map(_.numOutputRows).getOrElse(0L))
-            .filter(_ > 0).sum,
-          (0L +: stateSum(_.numRowsTotal)).max,
-          (0L +: stateSum(_.memoryUsedBytes)).max,
-          if (ds.nonEmpty) ds(ds.size / 2) else 0L,
-          if (ds.nonEmpty) ds.last else 0L)
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    }
-
-    val ops: Seq[(String, DataFrame => DataFrame, String)] = Seq(
-      ("ss_join",
-        (e: DataFrame) => graft.streaming.EventsStream.clickToPurchaseJoin(e),
-        "append"),
-      // the guardrailed interval join: same pair semantics, per-purchase
-      // candidate budget (here 100) + one audit row per truncation — under
-      // the whale, out_rows and task_max must stay bounded where ss_join's
-      // output is quadratic in the hot key's rate, and the audit rows ARE
-      // the explicit overflow count a production pipeline alerts on
-      ("ss_budget",
-        (e: DataFrame) => graft.streaming.EventsStream
-          .intervalJoinBudgeted(e, maxPairsPerPurchase = 100).toDF(),
-        "append"),
-      ("sessions",
-        (e: DataFrame) => graft.streaming.EventsStream
-          .sessionWindows(e, gapMinutes = 30).toDF(),
-        "append"),
-      ("dedup",
-        (e: DataFrame) => graft.streaming.EventsStream
-          .dedupStream(e, Seq("user_id", "event_type")),
-        "append"),
-      // the shipped top-1 mitigation for ss_join's hot-key output blowup:
-      // one row per purchase, clicks compact to a single best candidate —
-      // out_rows and state must stay linear where ss_join's pairing is
-      // quadratic in the whale's rate
-      ("asof",
-        (e: DataFrame) => graft.streaming.EventsStream
-          .asofAttribution(e).toDF(),
-        "append"),
-      // keyed by window, not user — a whale USER cannot concentrate work
-      // or state; the row pins that expectation with measurements
-      ("heavy",
-        (e: DataFrame) => graft.streaming.EventsStream
-          .windowedHeavyHitters(e),
-        "complete"),
-      // quiet-close EWMA: per-key state is a ≤16-row tail FOREVER plus
-      // the horizon-bounded pending buffer — a whale user can grow the
-      // in-flight buffer but never the resting state, and its denser
-      // timeline produces FEWER quiet closes, so out_rows should drop
-      // under the whale, not blow up
-      ("ewma",
-        (e: DataFrame) => graft.streaming.EventsStream.ewmaStream(e).toDF(),
-        "append"))
-
-    val unknownOps = only -- ops.map(_._1).toSet
-    require(unknownOps.isEmpty,
-      s"streamskew: unknown op(s) ${unknownOps.mkString(", ")} of " +
-        s"${ops.map(_._1).mkString("/")}")
-    val selected = ops.filter(o => only.isEmpty || only(o._1))
-    // Warm-up: the FIRST streaming query in a JVM pays ~4 s of
-    // JIT/codegen/state-store classloading, which used to inflate
-    // single-op invocations ~3× vs the full-sequence tables (a manual-lore
-    // caveat in PERF_NOTES until round 9). Run the first selected op once
-    // on the uniform dir, unmeasured, so every printed row — including a
-    // one-op run's first — is steady-state.
-    selected.headOption.foreach { case (label, mk, mode) =>
-      measure(label, uniform, mk, mode)
-      durations.clear()
-      println(s"[scale-smoke] warm-up pass ($label on uniform) done, unmeasured")
-    }
-    println(f"${"op"}%-10s ${"dir"}%-6s ${"wall_s"}%7s ${"batches"}%8s ${"in_rows"}%9s ${"out_rows"}%9s ${"state_rows"}%10s ${"state_MB"}%9s ${"task_med"}%9s ${"task_max"}%9s ${"mx/md"}%6s")
-    selected.foreach { case (label, mk, mode) =>
-      Seq("uni" -> uniform, "whale" -> skewed).foreach { case (tag, dir) =>
-        durations.clear()
-        val (wall, nb, in, out, sr, sb, med, mx) = measure(label, dir, mk, mode)
-        val ratio = if (med > 0) f"${mx.toDouble / med}%.1f" else "-"
-        println(f"$label%-10s $tag%-6s $wall%7.1f $nb%8d $in%9d $out%9d $sr%10d ${sb / 1e6}%8.1fM ${med}%8dms ${mx}%8dms $ratio%6s")
-      }
-    }
-    spark.stop()
-  }
-
-  /** Wall-clock learnMerges(k) over the documents vocabulary — the
-    * end-to-end tokenizer-induction number PERF_NOTES records (the
-    * bench's q_x_bpe_pairs covers only round-0 pair counting). */
-  private def bpe(src: String, k: Int): Unit = {
-    val spark = session()
-    val docs = spark.read.parquet(s"$src/documents.parquet")
-    val words = graft.ext.Bpe.wordCounts(docs, "text")
-    words.write.format("noop").mode("overwrite").save() // warm scan
-    val t0 = System.nanoTime()
-    val (merges, syms) = graft.ext.Bpe.learnMerges(words, k)
-    syms.write.format("noop").mode("overwrite").save()
-    val dt = (System.nanoTime() - t0) / 1e9
-    println(f"[scale-smoke] learnMerges(k=$k) at $src: $dt%.2f s, " +
-      s"${merges.size} merges learned")
-    spark.stop()
-  }
-
-  // Event/document headliners whose shuffle or window keys a whale
-  // user_id / hot dedup cluster actually hits.
-  private val skewQueries = Seq(
-    "q_w_sessionize", "q_w_sessionize_sharded", "q_w_session_window",
-    "q_x_asof_join", "q_x_asof_native", "q_x_range_join", "q_p9_pivot",
-    "q_x_dedup_minhash")
-
-  /** Skew robustness harness: the headline event/document queries at N×
-    * uniform vs N× Zipf-headed (see `gen(skew = true)`), with straggler
-    * evidence — max vs median task duration — next to wall time; then two
-    * mitigation probes on the whale-key join shape itself:
-    *  (a) AQE skew-split: a forced sort-merge join of the skewed events
-    *      against a per-user dim, skewJoin on vs off. The split thresholds
-    *      are lowered to match the smoke's MB-scale shuffle partitions —
-    *      at production scale the stock 256 MB threshold fires the same
-    *      way — and the run asserts the split ENGAGED (final AQE plan
-    *      prints the skew marker) rather than inferring it from timing.
-    *  (b) the explicit [[graft.operators.Skew.saltedJoin]] rewrite vs the
-    *      plain shuffle join under the same no-broadcast conditions with
-    *      AQE skew-split disabled — the mitigation for join shapes AQE
-    *      cannot split.
-    * Windows (sessionize / session_window) have no AQE escape hatch — a
-    * whale key's partition is irreducible for intra-key ordered state —
-    * so their numbers here document the per-key ceiling: max-task tracks
-    * the whale's row share, which is why per-user state paths must keep
-    * per-row cost O(1) (and why quota/shard operators shard BY something
-    * finer than the natural key). */
-  /** (max, median) task millis accumulated in `durations` since its last
-    * clear; short drain pause because the listener bus posts task events
-    * asynchronously. Shared by the skew sweep and the mitigation probes
-    * so both report the same statistic. */
-  private def taskStats(
-      durations: java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long])
-      : (Long, Long) = {
-    Thread.sleep(500)
-    val ds = durations.toArray(Array.empty[java.lang.Long])
-      .map(_.longValue).sorted
-    if (ds.isEmpty) (0L, 0L) else (ds.last, ds(ds.length / 2))
-  }
-
-  private def maxMedRatio(mx: Long, med: Long): String =
-    if (med > 0) f"${mx.toDouble / med}%.1f" else "-"
-
-  private def skewRun(uniform: String, skewed: String): Unit = {
-    val spark = session()
-    val durations = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskInfo != null) durations.add(te.taskInfo.duration)
-    })
-    def force(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    def timed(run: (SparkSession, String) => DataFrame,
-              dir: String): (Double, Long, Long) = {
-      GraftSession.dropCachedBlocks(spark)
-      durations.clear()
-      val t0 = System.nanoTime()
-      force(run(spark, dir))
-      val dt = (System.nanoTime() - t0) / 1e9
-      val (mx, med) = taskStats(durations)
-      (dt, mx, med)
-    }
-    def ratio(mx: Long, med: Long): String = maxMedRatio(mx, med)
-
-    // ---- query sweep: straggler profile under a Zipf head ----
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
-    println(f"${"query"}%-22s ${"t_uni"}%7s ${"t_skew"}%7s ${"maxT_u"}%7s ${"medT_u"}%7s ${"m/m_u"}%6s ${"maxT_s"}%7s ${"medT_s"}%7s ${"m/m_s"}%6s")
-    skewQueries.foreach { name =>
-      val run = Catalog.byName(name).run
-      try {
-        timed(run, uniform) // warm (codegen, file listing)
-        // keep the pass with the smallest max-task per cell: co-tenant
-        // noise only ever inflates a task, never deflates it
-        var (tu, xu, mu) = (Double.MaxValue, Long.MaxValue, 0L)
-        var (ts, xs, ms) = (Double.MaxValue, Long.MaxValue, 0L)
-        for (_ <- 1 to reps) {
-          val (a, ax, am) = timed(run, uniform)
-          if (ax < xu) { xu = ax; mu = am }
-          tu = math.min(tu, a)
-          val (b, bx, bm) = timed(run, skewed)
-          if (bx < xs) { xs = bx; ms = bm }
-          ts = math.min(ts, b)
-        }
-        println(f"$name%-22s $tu%7.2f $ts%7.2f ${xu}%7d ${mu}%7d ${ratio(xu, mu)}%6s ${xs}%7d ${ms}%7d ${ratio(xs, ms)}%6s")
-      } catch { case e: Throwable => println(s"$name FAILED: ${e.getMessage}") }
-    }
-
-    skewDemos(spark, durations, skewed)
-    spark.stop()
-  }
-
-  /** The mitigation probes on the whale-key join shape (part (a)/(b) of
-    * [[skewRun]]'s Scaladoc); standalone via the `skewdemo` subcommand. */
-  private def skewDemos(
-      spark: SparkSession,
-      durations: java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long],
-      skewed: String): Unit = {
-    def ratio(mx: Long, med: Long): String = maxMedRatio(mx, med)
-    if (sys.env.contains("SPARK_GRAFT_DEBUG"))
-      spark.sparkContext.setLogLevel("DEBUG")
-    // The per-user dim is MATERIALIZED to parquet first — the realistic
-    // dimension-table shape, and a load-bearing detail: OptimizeSkewedJoin
-    // only matches a join whose children are Sort-over-ShuffleQueryStage,
-    // so a dim that arrives pre-partitioned out of an upstream aggregate
-    // (Sort-over-HashAggregate-over-stage, no fresh exchange) makes the
-    // whole join unsplittable — THAT shape is exactly what saltedJoin
-    // covers below, and what its Scaladoc means by "the join side can't
-    // be split by AQE".
-    val dimDir = java.nio.file.Files
-      .createTempDirectory("graft-skewdemo-dim").toString + "/dim.parquet"
-    graft.sources.Sources.table(spark, skewed, "events")
-      .groupBy(col("user_id")).agg(count(lit(1)).as("n_user"))
-      .write.mode("overwrite").parquet(dimDir)
-    def hotJoin(s: SparkSession, dir: String): DataFrame = {
-      val e = graft.sources.Sources.table(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("value"))
-      val dim = s.read.parquet(dimDir)
-      e.join(dim, "user_id")
-        .groupBy().agg(sum(col("value") * col("n_user")).as("chk"))
-    }
-    def withConfs(pairs: (String, String)*)(body: => Unit): Unit = {
-      val saved = pairs.map { case (k, _) =>
-        k -> scala.util.Try(spark.conf.get(k)).toOption }
-      pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try body
-      finally saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    }
-    val thresh = sys.env.getOrElse("SPARK_GRAFT_SKEW_THRESHOLD", "1m")
-    val advisory = sys.env.getOrElse("SPARK_GRAFT_SKEW_ADVISORY", "256k")
-    val mbScaleThresholds = Seq(
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> thresh,
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> advisory)
-
-    def probe(label: String, df: => DataFrame,
-              confs: Seq[(String, String)]): Unit =
-      withConfs(confs: _*) {
-        val d = df
-        GraftSession.dropCachedBlocks(spark)
-        durations.clear()
-        val t0 = System.nanoTime()
-        d.collect()
-        val dt = (System.nanoTime() - t0) / 1e9
-        val (mx, med) = taskStats(durations)
-        val plan = d.queryExecution.executedPlan.toString
-        val engaged = plan.contains("skew=true")
-        println(f"[scale-smoke] $label%-42s: $dt%6.2f s, " +
-          f"maxTask ${mx}%5d ms, medTask ${med}%4d ms, " +
-          f"max/med ${ratio(mx, med)}%5s, skew-split engaged: $engaged")
-        if (sys.env.contains("SPARK_GRAFT_DEBUG"))
-          println(plan.linesIterator.take(40).mkString("\n"))
-      }
-
-    // unmeasured warm pass (file listing, codegen) so probe order doesn't
-    // bias the first row
-    withConfs(mbScaleThresholds: _*) { hotJoin(spark, skewed).collect() }
-
-    // (a) disk-dim join: children are fresh exchanges → AQE CAN split
-    probe("hot-user SMJ (disk dim), skewJoin=on",
-      hotJoin(spark, skewed), mbScaleThresholds :+
-        ("spark.sql.adaptive.skewJoin.enabled" -> "true"))
-    probe("hot-user SMJ (disk dim), skewJoin=off",
-      hotJoin(spark, skewed), mbScaleThresholds :+
-        ("spark.sql.adaptive.skewJoin.enabled" -> "false"))
-
-    // (b) agg-fed dim: the dim side arrives pre-partitioned out of its
-    // aggregate (no exchange under the join) → OptimizeSkewedJoin's
-    // pattern can't match even with skewJoin on — the documented
-    // can't-split shape...
-    def aggJoin: DataFrame = {
-      val e = graft.sources.Sources.table(spark, skewed, "events")
-        .select(col("event_id"), col("user_id"), col("value"))
-      val dim = e.groupBy(col("user_id")).agg(count(lit(1)).as("n_user"))
-      e.join(dim, "user_id")
-        .groupBy().agg(sum(col("value") * col("n_user")).as("chk"))
-    }
-    probe("hot-user SMJ (agg-fed dim), skewJoin=on",
-      aggJoin, mbScaleThresholds :+
-        ("spark.sql.adaptive.skewJoin.enabled" -> "true"))
-    // ...which the explicit salted rewrite covers: the whale's rows
-    // scatter across `salts` reducers regardless of plan shape
-    probe("hot-user saltedJoin(32) (agg-fed dim)",
-      {
-        val e = graft.sources.Sources.table(spark, skewed, "events")
-          .select(col("event_id"), col("user_id"), col("value"))
-        val dim = e.groupBy(col("user_id")).agg(count(lit(1)).as("n_user"))
-        graft.operators.Skew
-          .saltedJoin(e, dim, "user_id", salts = 32, saltBy = col("event_id"))
-          .groupBy().agg(sum(col("value") * col("n_user")).as("chk"))
-      }, mbScaleThresholds :+
-        ("spark.sql.adaptive.skewJoin.enabled" -> "false"))
-  }
-
-  private def session(): SparkSession = {
-    val s = GraftSession.builder("graft-scale-smoke", "32").getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
   }
 
   /** Layout-independence cross-check for queries whose ORACLE is
     * compute-infeasible at a large SF (the DuckDB minhash-family SQL at
-    * sf1): run each query under two deliberately different physical
-    * layouts — the canonical session vs one with a different shuffle
-    * fan-out, scan split size, and broadcast threshold (so scan
-    * partitioning, exchange placement, and join strategies all move) —
-    * and require bitwise-equal [[Golden.fingerprint]]s. This is the same
-    * evidence class the spill smoke uses (exact result invariance under
-    * a changed execution), aimed at the determinism half of correctness:
-    * a query whose answer depends on partition layout, task order, or a
-    * broadcast-vs-shuffle flip fails it. */
-  private def xcheck(dir: String, queries: List[String]): Unit = {
+    * sf1): the variant session changes the shuffle fan-out, scan split
+    * size and broadcast threshold (so scan partitioning, exchange
+    * placement and join strategies all move). A query whose answer
+    * depends on partition layout, task order, or a broadcast-vs-shuffle
+    * flip fails it. */
+  private def xcheck(dir: String, queries: List[String]): Unit =
+    crossCheck("xcheck", queries.map(q => (q, q, dir)), () =>
+      GraftSession.builder("graft-xcheck-alt", GraftSession.defaultCpus)
+        .config("spark.sql.shuffle.partitions", "53")
+        .config("spark.sql.files.maxPartitionBytes", (8 << 20).toString)
+        .config("spark.sql.autoBroadcastJoinThreshold", (256 << 10).toString)
+        .getOrCreate())
+
+  /** The reference-vs-variant loop behind `spill` and `xcheck`: each
+    * (label, query, dir) case's [[Golden.fingerprint]] under the canonical
+    * session, then again through [[Run]] under the rebuilt `variant`
+    * context, which must match bitwise. Prints wall, spill and peak task
+    * memory per case; exits 1 on any mismatch or failure. An
+    * OutOfMemoryError aborts the remaining cases: the JVM's executor state
+    * is undefined after it. */
+  private def crossCheck(mode: String, cases: Seq[(String, String, String)],
+                         variant: () => SparkSession): Unit = {
+    def fingerprint(spark: SparkSession, q: String, dir: String): DataFrame =
+      Golden.fingerprint(Catalog.byName(q).run(spark, dir))
     val ref = session()
-    val want = queries.map { q =>
-      val r = Golden.fingerprint(Catalog.byName(q).run(ref, dir)).head()
+    val want = cases.map { case (label, q, d) =>
+      val r = fingerprint(ref, q, d).head()
       GraftSession.dropCachedBlocks(ref)
-      q -> ((r.getLong(0), r.getString(1)))
-    }
+      label -> ((r.getLong(0), r.getString(1)))
+    }.toMap
+    println(s"[scale-smoke] $mode: reference fingerprints collected")
     ref.stop()
     SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    val alt = GraftSession.builder("graft-xcheck-alt", "32")
-      .config("spark.sql.shuffle.partitions", "53")
-      .config("spark.sql.files.maxPartitionBytes", (8 << 20).toString)
-      .config("spark.sql.autoBroadcastJoinThreshold", (256 << 10).toString)
-      .getOrCreate()
-    alt.sparkContext.setLogLevel("WARN")
+    val spark = variant()
+    spark.sparkContext.setLogLevel("WARN")
+
+    def mb(b: Long) = f"${b / 1e6}%.1fM"
+    println(f"${"query"}%-28s ${"rows"}%9s ${"wall_s"}%7s ${"spill_mem"}%10s " +
+      f"${"spill_disk"}%10s ${"peak_task"}%10s ${"fp"}%6s ${"status"}%8s")
     var bad = 0
-    want.foreach { case (q, (n, h)) =>
-      val r = Golden.fingerprint(Catalog.byName(q).run(alt, dir)).head()
-      GraftSession.dropCachedBlocks(alt)
-      val ok = r.getLong(0) == n && r.getString(1) == h
-      if (!ok) bad += 1
-      println(f"[scale-smoke] xcheck $q%-28s rows=$n%8d " +
-        s"${if (ok) "MATCH" else s"MISMATCH alt=(${r.getLong(0)},${r.getString(1)}) want=($n,$h)"}")
+    cases.foreach { case (label, q, d) =>
+      GraftSession.dropCachedBlocks(spark)
+      var got: (Long, String) = null
+      val r = Run.query(spark, label, fingerprint(spark, q, d),
+        df => { val row = df.head(); got = (row.getLong(0), row.getString(1)) })
+      val fp = if (!r.ok) "-" else if (got == want(label)) "match" else "DRIFT"
+      if (fp != "match") bad += 1
+      val status = r.error.fold("ok")(e =>
+        if (e.contains("OutOfMemory")) "OOM" else "failed")
+      println(f"$label%-28s ${want(label)._1}%9d ${r.wallS.getOrElse(Double.NaN)}%7.1f " +
+        f"${mb(r.spillMemBytes)}%10s ${mb(r.spillDiskBytes)}%10s " +
+        f"${mb(r.peakTaskMemBytes)}%10s $fp%6s $status%8s")
+      r.error.foreach(e => println(s"[scale-smoke] $label: $e"))
+      if (status == "OOM") {
+        println(s"[scale-smoke] OOM in $label — JVM state undefined; aborting")
+        spark.stop(); sys.exit(1)
+      }
     }
-    alt.stop()
-    println(s"[scale-smoke] xcheck ${want.size - bad}/${want.size} layouts agree")
+    spark.stop()
+    println(s"[scale-smoke] $mode: ${cases.size - bad}/${cases.size} fingerprints match")
     if (bad > 0) sys.exit(1)
   }
 
-  /** With `skew = true`, the N× tables get a Zipf-style head instead of
+  private def session(): SparkSession = {
+    val s = GraftSession.builder("graft-scale-smoke", GraftSession.defaultCpus)
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
+  /** The three scalable-table N× replica frames (documents, events,
+    * embeddings), built as described in the object doc. With
+    * `skew = true`, the N× tables get a Zipf-style head instead of
     * the uniform replica structure (ids/markers still applied so scale
     * stays honest):
     *  - events: ~20% of ALL rows (hash-selected, replica-independent)
@@ -1333,11 +304,8 @@ object ScaleSmokeMain {
     *  - documents: ~20% of each replica's docs are rewritten as near-dups
     *    of one replica-constant template (pairwise word-3-gram Jaccard
     *    ≈ 0.9 ≥ the 0.7 threshold) — one giant dedup cluster per replica,
-    *    the hot-LSH-bucket regime the `maxBucket` cap exists for. */
-  /** The three scalable-table N× replica frames (documents, events,
-    * embeddings) — the honesty-preserving construction described in the
-    * object doc, shared by `gen`/`genskew` and the persisted-SF
-    * generator [[gensf]]. */
+    *    the hot-LSH-bucket regime the `maxBucket` cap exists for.
+    * Shared by `gen`/`genskew` and the persisted-SF generator [[gensf]]. */
   private def scalableReplicas(spark: SparkSession, src: String, n: Int,
                                skew: Boolean)
       : (DataFrame, DataFrame, DataFrame) = {
@@ -1409,25 +377,6 @@ object ScaleSmokeMain {
     spark.stop()
   }
 
-  /** A time-CLUSTERED copy of a scaled dir's events (range-partitioned +
-    * sorted by ts — the layout a date-partitioned production ingest has
-    * for free). Evidence companion for the calendar-celled aggregates
-    * (hopping windows, hourly grids): their partial-agg exchange is
-    * |map tasks| · |cells touched per task|, so on time-interleaved
-    * replicas every task touches EVERY cell (the census's flagged
-    * constant), while on this layout each task touches only its time
-    * slice's cells and the exchange is row-linear. Same rows, same
-    * results — xcheck-equal by construction. */
-  private def gensorted(src: String, out: String): Unit = {
-    val spark = session()
-    spark.read.parquet(s"$src/events.parquet")
-      .repartitionByRange(32, col("ts"))
-      .sortWithinPartitions(col("ts"))
-      .write.mode("overwrite").parquet(s"$out/events.parquet")
-    println(s"[scale-smoke] wrote ts-clustered events to $out")
-    spark.stop()
-  }
-
   /** Persist a COMPLETE N×-scaled testdata dir — every table, not just
     * the three `gen` replicates — so the full canonical bench and the
     * DuckDB oracle run against a real on-disk scale factor (sf0.1 × 10 =
@@ -1478,102 +427,6 @@ object ScaleSmokeMain {
     wr(eventsN, "events")
     wr(embsN, "embeddings")
     println(s"[scale-smoke] wrote complete ${n}x testdata to $out")
-    spark.stop()
-  }
-
-  /** Wall time + shuffle bytes per query, 1× vs N×. Same noise protocol
-    * as Bench: the full (query × dir) grid runs `reps` times end-to-end
-    * and each cell keeps its min across passes, so a co-tenant burst
-    * (multi-minute, frequent on this host) inflates one pass, not every
-    * measurement of one cell. Shuffle bytes are deterministic per plan,
-    * but the listener bus is async — each pass's value is recorded after
-    * polling the counter to quiescence, and the report takes the per-cell
-    * MEDIAN across passes (flagged `!` on disagreement), so one pass with
-    * a late-posted stage event can't misattribute bytes silently. */
-  private def run(src: String, scaled: String): Unit = {
-    val spark = session()
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        if (m != null) shuffleBytes.addAndGet(
-          m.shuffleWriteMetrics.bytesWritten + m.shuffleReadMetrics.totalBytesRead)
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-
-    def force(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
-    // Poll the counter until it stops moving (3 consecutive quiet 100 ms
-    // polls, 10 s cap) — a fixed sleep loses the race against a slow
-    // listener-bus drain and attributes this query's bytes to the next.
-    def drainedBytes(): Long = {
-      var last = shuffleBytes.get(); var stable = 0; var polls = 0
-      while (stable < 3 && polls < 100) {
-        Thread.sleep(100); polls += 1
-        val now = shuffleBytes.get()
-        if (now == last) stable += 1 else { stable = 0; last = now }
-      }
-      // Cap exit with the counter still moving = the next cell's bytes are
-      // suspect; say so rather than letting a systematic slow drain agree
-      // across passes and dodge the `!` flag.
-      if (stable < 3) System.err.println(
-        "[scale-smoke] WARNING: listener bus still draining after 10 s; " +
-          "next shuffle-byte cell may be misattributed")
-      last
-    }
-
-    def timed(name: String, dir: String): (Double, Long) = {
-      val run = extraQueries.getOrElse(name, Catalog.byName(name).run)
-      GraftSession.dropCachedBlocks(spark)
-      val b0 = drainedBytes()
-      val t0 = System.nanoTime()
-      force(run(spark, dir))
-      val dt = (System.nanoTime() - t0) / 1e9
-      (dt, drainedBytes() - b0)
-    }
-
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    require(reps >= 1, s"SPARK_GRAFT_REPS must be >= 1, got $reps")
-    val t1 = scala.collection.mutable.Map[String, Double]().withDefaultValue(Double.MaxValue)
-    val tn = scala.collection.mutable.Map[String, Double]().withDefaultValue(Double.MaxValue)
-    val b1 = scala.collection.mutable.Map[String, scala.collection.mutable.ArrayBuffer[Long]]()
-    val bn = scala.collection.mutable.Map[String, scala.collection.mutable.ArrayBuffer[Long]]()
-    val failed = scala.collection.mutable.Set[String]()
-    // warm pass (codegen/classloading) on the small dir only
-    smokeQueries.foreach { name =>
-      try timed(name, src)
-      catch { case e: Throwable =>
-        println(s"$name FAILED: ${e.getMessage}"); failed += name }
-    }
-    for (pass <- 1 to reps) {
-      smokeQueries.filterNot(failed).foreach { name =>
-        try {
-          val (a, ba) = timed(name, src)
-          val (b, bb) = timed(name, scaled)
-          t1(name) = math.min(t1(name), a); tn(name) = math.min(tn(name), b)
-          b1.getOrElseUpdate(name,
-            scala.collection.mutable.ArrayBuffer[Long]()) += ba
-          bn.getOrElseUpdate(name,
-            scala.collection.mutable.ArrayBuffer[Long]()) += bb
-        } catch {
-          case e: Throwable =>
-            println(s"$name FAILED: ${e.getMessage}"); failed += name
-        }
-      }
-      System.err.println(s"[scale-smoke] pass $pass/$reps done")
-    }
-    // Median across passes; `!` marks cells whose passes disagreed (a
-    // late-posted stage event landed in the wrong query's window).
-    def med(xs: Seq[Long]): Long = { val s = xs.sorted; s(s.size / 2) }
-    def flag(xs: Seq[Long]): String = if (xs.distinct.size > 1) "!" else ""
-    println(f"${"query"}%-24s ${"t_1x"}%8s ${"t_Nx"}%8s ${"ratio"}%6s ${"shuf_1x"}%10s ${"shuf_Nx"}%10s ${"shufR"}%6s")
-    smokeQueries.filterNot(failed).foreach { name =>
-      def mb(x: Long) = f"${x / 1e6}%.1fMB"
-      val (s1, sn) = (med(b1(name).toSeq), med(bn(name).toSeq))
-      println(f"$name%-24s ${t1(name)}%8.2f ${tn(name)}%8.2f ${tn(name) / t1(name)}%6.1f ${mb(s1) + flag(b1(name).toSeq)}%10s ${mb(sn) + flag(bn(name).toSeq)}%10s ${if (s1 > 0) f"${sn.toDouble / s1}%.1f" else "-"}%6s")
-    }
     spark.stop()
   }
 }

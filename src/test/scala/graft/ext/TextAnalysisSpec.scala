@@ -293,6 +293,26 @@ class TextAnalysisSpec extends AnyFunSuite {
     assert(r.getDouble(4) == 0.667)            // 2 / |A| with |A| = 3
   }
 
+  test("sourceOverlap: NULL sources never pair and do not count toward maxSources") {
+    val spark0 = spark
+    import spark0.implicits._
+    // abc is in A, B and a NULL source: the NULL is not one of its
+    // sources, so under maxSources = 2 it still attributes A∩B; xyz
+    // (A and NULL) identifies no pair at all
+    val docs = Seq[(Long, String, String)](
+      (1L, "a b c", "A"), (2L, "x y z", "A"),
+      (3L, "a b c", "B"),
+      (4L, "a b c", null), (5L, "x y z", null)
+    ).toDF("doc_id", "text", "source")
+    val capped = TextAnalysis.sourceOverlap(docs, "source", "text",
+        maxSources = 2).collect()
+    assert(capped.length == 1)
+    val r = capped.head
+    assert((r.getString(0), r.getString(1), r.getLong(2)) == (("A", "B", 1L)))
+    assert(r.getDouble(3) == 0.5)              // 1 / (2 + 1 - 1)
+    assert(r.getDouble(4) == 0.5)              // 1 / |A| with |A| = 2
+  }
+
   test("sourceOverlap vs minhash signature: exact within k=128 estimator error") {
     // the exact matrix is the ground truth for q_x_source_signature's
     // minhash estimate (identical shingle family: token trigram hashes),
