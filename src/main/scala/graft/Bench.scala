@@ -1,5 +1,6 @@
 package graft
 
+import scala.collection.immutable.ListMap
 import scala.collection.mutable
 
 import graft.tools.{Run, RunRecord}
@@ -16,17 +17,6 @@ import graft.tools.{Run, RunRecord}
   * just those queries, min of n, without touching the banked files.
   */
 object Bench {
-  /** JSON string body escape (quote, backslash, control characters). */
-  private def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
-  private def obj(kvs: Iterable[(String, String)]): String =
-    kvs.map { case (k, v) => "\"" + esc(k) + "\":" + v }.mkString("{", ",", "}")
-
   private def write(file: String, line: String): Unit =
     try {
       val w = new java.io.PrintWriter(file, "UTF-8")
@@ -95,9 +85,6 @@ object Bench {
     val (okRuns, failedRuns) = records.toSeq.partition(_._2.forall(_.ok))
     val walls = okRuns.map { case (k, rs) => k -> rs.flatMap(_.wallS).toSeq }
     val total = walls.map(_._2.min).sum
-    val qs = obj(walls.map { case (k, ps) => k -> f"${ps.min}%.3f" })
-    val failedNames =
-      failedRuns.map(kv => "\"" + esc(kv._1) + "\"").mkString("[", ",", "]")
 
     // Self-describing default: driver-initiated refreshes don't set
     // SPARK_GRAFT_RUN_LABEL, and an empty label makes the bench_out.json
@@ -115,37 +102,43 @@ object Bench {
         } catch { case _: Exception => "" }
       s"auto $ts$head"
     }
-    val label = esc(sys.env.get("SPARK_GRAFT_RUN_LABEL").filter(_.nonEmpty)
-      .getOrElse(defaultLabel))
-    val host = esc(java.net.InetAddress.getLocalHost.getHostName)
-    val cpusJson = if (cpus.forall(_.isDigit)) cpus else "\"" + esc(cpus) + "\""
+    val label = sys.env.get("SPARK_GRAFT_RUN_LABEL").filter(_.nonEmpty)
+      .getOrElse(defaultLabel)
+    val host = java.net.InetAddress.getLocalHost.getHostName
+    val cpusJson: Any = cpus.toIntOption.getOrElse(cpus)
+    def d3(x: Double) = Json.fixed(x, 3)
     // The HEADLINE line the driver parses stays short (a long line risks
     // tail truncation and a "parsed": null round). Per-pass seconds, CVs
     // and the per-query run records go to the SIDE file bench_raw.json.
-    val json =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":$failedNames,"sf":"${esc(sfDir)}","reps":$reps,"cpus":$cpusJson,"host":"$host","label":"$label","load_avg_start":$loadStart%.2f,"load_avg_end":$loadEnd%.2f}"""
+    val json = Json.write(ListMap(
+      "metric" -> "total", "value" -> d3(total), "unit" -> "sec",
+      "queries" -> ListMap.from(walls.map { case (k, ps) => k -> d3(ps.min) }),
+      "failed" -> failedRuns.map(_._1), "sf" -> sfDir, "reps" -> reps,
+      "cpus" -> cpusJson, "host" -> host, "label" -> label,
+      "load_avg_start" -> Json.fixed(loadStart, 2),
+      "load_avg_end" -> Json.fixed(loadEnd, 2)))
 
-    def perQuery(f: Seq[RunRecord] => String) =
-      obj(records.map { case (k, rs) => k -> f(rs.toSeq) })
-    def arr(xs: Seq[Double]) = xs.map(x => f"$x%.3f").mkString("[", ",", "]")
-    val cv = obj(walls.map { case (k, ps) =>
+    def perQuery(f: Seq[RunRecord] => Any) =
+      ListMap.from(records.map { case (k, rs) => k -> f(rs.toSeq) })
+    val cv = ListMap.from(walls.map { case (k, ps) =>
       val mean = ps.sum / ps.size
       val c = if (mean > 0 && ps.size > 1)
         math.sqrt(ps.map(p => (p - mean) * (p - mean)).sum / ps.size) / mean
       else 0.0
-      k -> f"$c%.2f"
+      k -> Json.fixed(c, 2)
     })
     // task_sec sums ALL reps' task time; task_sec/(reps × min wall) ≫ 1
     // ⇒ the query parallelizes. jobs is per pass (identical across passes
     // for a deterministic plan).
-    val raw = s"""{"label":"$label","reps":$reps,"cpus":$cpusJson,"host":"$host",""" +
-      s""""passes":${obj(walls.map { case (k, ps) => k -> arr(ps) })},""" +
-      s""""cv":$cv,""" +
-      s""""build_s":${perQuery(rs => arr(rs.flatMap(_.buildS)))},""" +
-      s""""jobs":${perQuery(rs => rs.last.jobs.toString)},""" +
-      s""""task_sec":${perQuery(rs => f"${rs.map(_.taskS).sum}%.2f")},""" +
-      s""""failed":${obj(failedRuns.map { case (k, rs) =>
-        k -> ("\"" + esc(rs.flatMap(_.error).head) + "\"") })}}"""
+    val raw = Json.write(ListMap(
+      "label" -> label, "reps" -> reps, "cpus" -> cpusJson, "host" -> host,
+      "passes" -> ListMap.from(walls.map { case (k, ps) => k -> ps.map(d3) }),
+      "cv" -> cv,
+      "build_s" -> perQuery(_.flatMap(_.buildS).map(d3)),
+      "jobs" -> perQuery(_.last.jobs),
+      "task_sec" -> perQuery(rs => Json.fixed(rs.map(_.taskS).sum, 2)),
+      "failed" -> ListMap.from(failedRuns.map { case (k, rs) =>
+        k -> rs.flatMap(_.error).head })))
     // The JSON goes to a file in the repo root AND is the final stdout
     // line of the run. Filtered (SPARK_GRAFT_ONLY) runs skip the files so
     // a focused re-measure can't clobber the canonical full-suite record.

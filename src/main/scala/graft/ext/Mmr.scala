@@ -43,21 +43,6 @@ import org.apache.spark.sql.functions._
   */
 object Mmr {
 
-  /** Test-only seam for plan guardrails: when set, every frame that
-    * [[mmrRerank]] is ABOUT to eagerly localCheckpoint is passed here
-    * first — the checkpoint truncates lineage, so a sweep over the final
-    * `executedPlan` never sees the corpus-scan subtree (where a
-    * CartesianProduct regression would hide). PlanSweepSpec registers a
-    * collector here and sweeps the pre-checkpoint plans too. */
-  private[graft] val preCheckpointProbe =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame => Unit](null)
-
-  private def ckpt(df: DataFrame): DataFrame = {
-    val probe = preCheckpointProbe.get()
-    if (probe != null) probe(df)
-    df.localCheckpoint(true)
-  }
-
   /** exact integer dot product of two equal-length long arrays */
   private def dotL(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
@@ -105,7 +90,7 @@ object Mmr {
     // reference and the corpus scan behind it runs 3×, which at 100 TB
     // triples the dominant cost (the tfidf postings / simhash membership
     // idiom).
-    val cands = ckpt(qv.join(broadcast(probes), col("vid") =!= col("query_id"))
+    val cands = qv.join(broadcast(probes), col("vid") =!= col("query_id"))
       .select(col("query_id"), col("vid").as("cand_id"),
         dotL(col("qvec"), col("pvec")).as("rel"), col("qvec"))
       .groupBy(col("query_id"))
@@ -115,7 +100,8 @@ object Mmr {
         .as("top"))
       .select(col("query_id"), explode(col("top")).as("s"))
       .select(col("query_id"), col("s.neighbor_id").as("cand_id"),
-        col("s.cos").cast("long").as("rel"), col("s.payload").as("qvec")))
+        col("s.cos").cast("long").as("rel"), col("s.payload").as("qvec"))
+      .localCheckpoint(true)
 
     // pairwise candidate similarities: |probes|·topEach² bounded rows
     val pairs = cands.select(col("query_id"), col("cand_id").as("ca"),

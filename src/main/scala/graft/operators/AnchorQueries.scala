@@ -722,20 +722,17 @@ object AnchorQueries {
       // one parquet row group). An explicit numPartitions is exempt from
       // AQE coalescing, and at scale the same P-way spread is simply the
       // right width for a value-domain-bounded histogram.
-      val hist0 = t(s, dir, "lineitem")
+      val hist = t(s, dir, "lineitem")
         .select(round(col("l_extendedprice") * 100).cast("long").as("c"))
         .repartition(s.sparkContext.defaultParallelism, col("c"))
         .groupBy(col("c")).agg(count(lit(1)).as("cnt"))
-      graft.tools.PlanTrace.trace("histogram, pre-checkpoint (the one corpus scan)", hist0)
-      val hist = hist0.localCheckpoint(true) // feeds digest + rank probes
+        .localCheckpoint(true) // feeds digest + rank probes
       val qd = udaf(new QDigestWeightedAgg(bits, k),
         org.apache.spark.sql.Encoders.tuple(
           org.apache.spark.sql.Encoders.scalaLong,
           org.apache.spark.sql.Encoders.scalaLong))
-      val aggDf = hist.agg(qd(col("c"), col("cnt")).as("digest"),
-        sum(col("cnt")).as("n"))
-      graft.tools.PlanTrace.trace("weighted digest UDAF over the checkpointed histogram", aggDf)
-      val agg = aggDf.head()
+      val agg = hist.agg(qd(col("c"), col("cnt")).as("digest"),
+        sum(col("cnt")).as("n")).head()
       val digest = agg.getAs[scala.collection.Seq[Long]]("digest").toArray
       val n = agg.getAs[Long]("n")
       val qs = Seq(0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99)

@@ -13,51 +13,24 @@ object StreamingQueries {
 
   private val nextId = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** The file stream source needs a DIRECTORY; stage the fixture as a
-    * symlink (no copy) in a fresh temp dir. Callers must pair with
-    * `unstage` — bench reps reuse one JVM, so leaked dirs accumulate. */
-  private def stageEvents(dir: String): java.nio.file.Path = {
-    val stage = java.nio.file.Files.createTempDirectory("graft-stream-q")
-    java.nio.file.Files.createSymbolicLink(
-      stage.resolve("events.parquet"),
-      // absolutize: a relative target would resolve against the temp dir
-      java.nio.file.Paths.get(dir, "events.parquet").toAbsolutePath)
-    stage
-  }
-
-  private def unstage(stage: java.nio.file.Path): Unit = {
-    java.nio.file.Files.deleteIfExists(stage.resolve("events.parquet"))
-    java.nio.file.Files.deleteIfExists(stage)
-  }
-
-  /** Stage the fixture, run the streaming transform built on it, clean the
-    * staging dir once the query has drained (the file source only reads
-    * during the run; the returned frame is materialized off it). The
-    * driver testdata keeps events as a single FILE (which the file
-    * source can't open in place — hence the symlink dir); a generated
-    * scale dir (ScaleSmokeMain gensf) writes a parquet DIRECTORY of part
-    * files, streamable directly with no staging. */
-  private def withStagedEvents(dir: String)(f: String => DataFrame): DataFrame = {
-    val evp = java.nio.file.Paths.get(dir, "events.parquet")
-    if (java.nio.file.Files.isDirectory(evp)) f(evp.toString)
-    else {
-      val stage = stageEvents(dir)
-      try f(stage.toString) finally unstage(stage)
-    }
-  }
-
-  /** [[withStagedEvents]] for the documents table (the streaming ingest
-    * gates read docs, not events): stage the single-file driver fixture
-    * behind a symlink dir, stream a generated parquet DIRECTORY as-is. */
-  private def withStagedDocs(dir: String)(f: String => DataFrame): DataFrame = {
-    val p = java.nio.file.Paths.get(dir, "documents.parquet")
+  /** Run the streaming transform `f` on a streamable directory holding
+    * `table` from `dir`. A generated scale dir (ScaleSmokeMain gensf)
+    * writes a parquet DIRECTORY of part files, streamed as-is. The driver
+    * testdata keeps each table as a single FILE, which the file stream
+    * source can't open in place: it goes behind a symlink (no copy) in a
+    * fresh temp dir, removed once the query has drained (the file source
+    * only reads during the run; the returned frame is materialized off
+    * it). Bench reps reuse one JVM, so a leaked dir would accumulate. */
+  private def withStaged(dir: String, table: String)(f: String => DataFrame): DataFrame = {
+    val p = java.nio.file.Paths.get(dir, s"$table.parquet")
     if (java.nio.file.Files.isDirectory(p)) f(p.toString)
     else {
       val stage = java.nio.file.Files.createTempDirectory("graft-stream-q")
-      java.nio.file.Files.createSymbolicLink(
-        stage.resolve("documents.parquet"), p.toAbsolutePath)
+      val link = stage.resolve(s"$table.parquet")
+      // absolutize: a relative target would resolve against the temp dir
+      java.nio.file.Files.createSymbolicLink(link, p.toAbsolutePath)
       try f(stage.toString) finally {
-        java.nio.file.Files.deleteIfExists(stage.resolve("documents.parquet"))
+        java.nio.file.Files.deleteIfExists(link)
         java.nio.file.Files.deleteIfExists(stage)
       }
     }
@@ -127,7 +100,7 @@ object StreamingQueries {
   val streamDedup = Q(
     "q_s_stream_dedup",
     "Streaming dedup (dropDuplicatesWithinWatermark) key-set = batch DISTINCT",
-    (s, dir) => withStagedEvents(dir) { staged =>
+    (s, dir) => withStaged(dir, "events") { staged =>
       val src = graft.streaming.EventsStream.readEvents(s, staged)
       val out = graft.streaming.EventsStream
         .dedupStream(src, Seq("user_id", "event_type"), watermark = "365 days")
@@ -143,7 +116,7 @@ object StreamingQueries {
   val streamWindow = Q(
     "q_s_stream_window",
     "Streaming watermarked hourly windows = batch GROUP BY date_trunc",
-    (s, dir) => withStagedEvents(dir) { staged =>
+    (s, dir) => withStaged(dir, "events") { staged =>
       val src = graft.streaming.EventsStream.readEvents(s, staged)
       val out = graft.streaming.EventsStream.windowedCounts(src)
       runToMemory(s, out, "complete", "graft_stream_win")
@@ -163,7 +136,7 @@ object StreamingQueries {
   val streamJoin = Q(
     "q_s_stream_join",
     "Stream-stream interval join (click→purchase) = batch self-join",
-    (s, dir) => withStagedEvents(dir) { staged =>
+    (s, dir) => withStaged(dir, "events") { staged =>
       val src = graft.streaming.EventsStream.readEvents(s, staged)
       val out = graft.streaming.EventsStream
         .clickToPurchaseJoin(src, windowHours = 24, watermark = "365 days")
@@ -193,7 +166,7 @@ object StreamingQueries {
   val streamJoinCapped = Q(
     "q_s_stream_join_capped",
     "Budgeted stream-stream interval join = batch self-join + zero audits",
-    (s, dir) => withStagedEvents(dir) { staged =>
+    (s, dir) => withStaged(dir, "events") { staged =>
       val src = graft.streaming.EventsStream.readEvents(s, staged)
       val out = graft.streaming.EventsStream
         .intervalJoinBudgeted(src, windowHours = 24,
@@ -217,7 +190,7 @@ object StreamingQueries {
   val streamEnrich = Q(
     "q_s_stream_enrich",
     "Stream-static broadcast enrichment = batch dim join",
-    (s, dir) => withStagedEvents(dir) { staged =>
+    (s, dir) => withStaged(dir, "events") { staged =>
       val src = graft.streaming.EventsStream.readEvents(s, staged)
       val dim = graft.sources.Sources.table(s, dir, "customer")
       val out = graft.streaming.EventsStream
@@ -246,7 +219,7 @@ object StreamingQueries {
   val streamSession = Q(
     "q_s_stream_session",
     "Stateful streaming gap-sessions = batch islands (emission-pinned)",
-    (s, dir) => withStagedEvents(dir) { staged =>
+    (s, dir) => withStaged(dir, "events") { staged =>
       val src = graft.streaming.EventsStream.readEvents(s, staged)
       val out = graft.streaming.EventsStream
         .sessionWindows(src, gapMinutes = 30).toDF()
@@ -287,7 +260,7 @@ object StreamingQueries {
   val streamAsof = Q(
     "q_s_stream_asof",
     "Streaming as-of attribution (latest click per purchase) = batch window",
-    (s, dir) => withStagedEvents(dir) { staged =>
+    (s, dir) => withStaged(dir, "events") { staged =>
       val src = graft.streaming.EventsStream.readEvents(s, staged)
       val out = graft.streaming.EventsStream.asofAttribution(src).toDF()
       runToMemory(s, out, "append", "graft_stream_asof")
@@ -318,7 +291,7 @@ object StreamingQueries {
   val streamHeavy = Q(
     "q_s_stream_heavy",
     "Streaming windowed SpaceSaving top-k = exact counts under capacity",
-    (s, dir) => withStagedEvents(dir) { staged =>
+    (s, dir) => withStaged(dir, "events") { staged =>
       val src = graft.streaming.EventsStream.readEvents(s, staged)
       val out = graft.streaming.EventsStream.windowedHeavyHitters(src)
       val raw = runToMemory(s, out, "complete", "graft_stream_heavy")
@@ -349,7 +322,7 @@ object StreamingQueries {
   val streamScd2 = Q(
     "q_s_stream_scd2",
     "Streaming SCD2 versions = batch history, closed below the watermark",
-    (s, dir) => withStagedEvents(dir) { staged =>
+    (s, dir) => withStaged(dir, "events") { staged =>
       val src = graft.streaming.EventsStream.readEvents(s, staged)
       val out = graft.streaming.EventsStream.scd2Stream(src).toDF()
       runToMemory(s, out, "append", "graft_stream_scd2")
@@ -387,7 +360,7 @@ object StreamingQueries {
   val streamEwma = Q(
     "q_s_stream_ewma",
     "Streaming quiet-close EWMA levels = batch trailing-16 window",
-    (s, dir) => withStagedEvents(dir) { staged =>
+    (s, dir) => withStaged(dir, "events") { staged =>
       val src = graft.streaming.EventsStream.readEvents(s, staged)
       val out = graft.streaming.EventsStream.ewmaStream(src).toDF()
       runToMemory(s, out, "append", "graft_stream_ewma")
@@ -430,7 +403,7 @@ object StreamingQueries {
   val streamFunnel = Q(
     "q_s_stream_funnel",
     "Streaming ordered funnel stage per user = batch funnel, final users",
-    (s, dir) => withStagedEvents(dir) { staged =>
+    (s, dir) => withStaged(dir, "events") { staged =>
       val src = graft.streaming.EventsStream.readEvents(s, staged)
       val out = graft.streaming.EventsStream.funnelStream(src).toDF()
       runToMemory(s, out, "append", "graft_stream_funnel")
@@ -470,7 +443,7 @@ object StreamingQueries {
   val streamDistinct = Q(
     "q_s_stream_distinct",
     "Streaming dedup+window chain = batch COUNT(DISTINCT) per hour",
-    (s, dir) => withStagedEvents(dir) { staged =>
+    (s, dir) => withStaged(dir, "events") { staged =>
       val src = graft.streaming.EventsStream.readEvents(s, staged)
       val out = graft.streaming.EventsStream.windowedDistinctUsers(src)
       runToMemory(s, out, "append", "graft_stream_distinct")
@@ -498,7 +471,7 @@ object StreamingQueries {
   val streamHopping = Q(
     "q_s_stream_hopping",
     "Streaming sliding windows(1h,15m), append mode = finalized batch windows",
-    (s, dir) => withStagedEvents(dir) { staged =>
+    (s, dir) => withStaged(dir, "events") { staged =>
       val src = graft.streaming.EventsStream.readEvents(s, staged)
       val out = graft.streaming.EventsStream.hoppingCounts(src)
       runToMemory(s, out, "append", "graft_stream_hop")
@@ -528,7 +501,7 @@ object StreamingQueries {
   val streamJoinOuter = Q(
     "q_s_stream_join_outer",
     "Streaming LEFT OUTER interval join = batch pairs + evicted NULL rows",
-    (s, dir) => withStagedEvents(dir) { staged =>
+    (s, dir) => withStaged(dir, "events") { staged =>
       val src = graft.streaming.EventsStream.readEvents(s, staged)
       val out = graft.streaming.EventsStream.clickToPurchaseLeftJoin(src)
       runToMemory(s, out, "append", "graft_stream_join_outer")
@@ -572,7 +545,7 @@ object StreamingQueries {
   val streamLate = Q(
     "q_s_stream_late",
     "Streaming late-data quarantine = batch frontier-regression audit",
-    (s, dir) => withStagedEvents(dir) { staged =>
+    (s, dir) => withStaged(dir, "events") { staged =>
       val src = graft.streaming.EventsStream.readEvents(s, staged)
         .withColumn("arrival_seq",
           expr("((event_id DIV 50) * 7 + event_id % 7) * 10000000" +
@@ -607,7 +580,7 @@ object StreamingQueries {
   val streamBudget = Q(
     "q_s_stream_budget",
     "Streaming budget admission (take-while prefix) = batch cumsum cut",
-    (s, dir) => withStagedEvents(dir) { staged =>
+    (s, dir) => withStaged(dir, "events") { staged =>
       val src = graft.streaming.EventsStream.readEvents(s, staged)
       val out = graft.streaming.EventsStream
         .budgetAdmission(src, budgetCenti = 300000L)
@@ -643,7 +616,7 @@ object StreamingQueries {
   val streamDrift = Q(
     "q_s_stream_drift",
     "Streaming per-window rate-drift cells vs static expected rates",
-    (s, dir) => withStagedEvents(dir) { staged =>
+    (s, dir) => withStaged(dir, "events") { staged =>
       val batchEv = graft.sources.Sources.table(s, dir, "events")
       val nh = batchEv.select(date_trunc("hour", col("ts")))
         .distinct().count()
@@ -677,7 +650,7 @@ object StreamingQueries {
   val streamSample = Q(
     "q_s_stream_sample",
     "Streaming per-window E-S weighted sample = batch key ranking",
-    (s, dir) => withStagedEvents(dir) { staged =>
+    (s, dir) => withStaged(dir, "events") { staged =>
       val src = graft.streaming.EventsStream.readEvents(s, staged)
       val out = graft.streaming.EventsStream.windowedWeightedSample(src)
       runToMemory(s, out, "append", "graft_stream_sample")
@@ -706,7 +679,7 @@ object StreamingQueries {
   val streamQuality = Q(
     "q_s_stream_quality",
     "Streaming quality+langid admission gate = batch scoring",
-    (s, dir) => withStagedDocs(dir) { staged =>
+    (s, dir) => withStaged(dir, "documents") { staged =>
       val src = graft.streaming.DocsStream.readDocuments(s, staged)
       val out = graft.streaming.DocsStream.qualityAdmission(src, minBp = 5000L)
       runToMemory(s, out, "append", "graft_stream_quality")

@@ -1,38 +1,60 @@
 package graft.tools
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.GraftBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Interior-plan capture for the optimization evidence trail.
   *
-  * Several operators eagerly materialize (localCheckpoint / driver probes)
-  * mid-construction, so the frame a query RETURNS is a degenerate
-  * `LocalTableScan` / `Scan ExistingRDD` and `explain` on it proves nothing
-  * about the work — the r13 verdict flagged exactly this for the q-digest /
-  * assoc-rules / dsir dumps. Operators call [[trace]] on the interesting
-  * interior frames right BEFORE materializing them; outside a capture the
-  * call is a ThreadLocal read and a no-op (Bench/Verify pay nothing), and
-  * inside [[PlanDumpMain]]'s capture the formatted plan of the frame as it
-  * is about to execute is appended to the dump.
+  * Several operators eagerly materialize mid-construction (localCheckpoint,
+  * driver probes, writes), so the frame a query RETURNS is often a
+  * degenerate `Scan ExistingRDD` and `explain` on it says nothing about
+  * the work. [[capture]] records the plans that did run instead: while the
+  * body runs, the calling thread carries a job tag, and every SQL execution
+  * started under that tag (each `localCheckpoint`, `count`, `head`,
+  * `collect` and write goes through one) posts its formatted physical plan
+  * on the listener bus, where one listener keeps it.
+  *
+  * The tag is a thread-local property, so a thread started inside the
+  * body inherits it: the micro-batch plans of a streaming query started
+  * there are captured too, while those of a stream started before the
+  * capture run on a thread without the tag and are not. Work that runs no
+  * SQL execution (RDD actions such as `df.rdd.count()`) is never captured.
   */
 object PlanTrace {
-  private val sink = new ThreadLocal[StringBuilder]()
+  private val ids = new AtomicLong
 
-  /** Record `df`'s formatted physical plan under `label` when a capture is
-    * active on this thread; no-op otherwise. */
-  def trace(label: String, df: DataFrame): Unit = {
-    val sb = sink.get()
-    if (sb != null) {
-      sb.append(s"\n== Interior plan: $label ==\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
+  /** Run `f` and return its result with the physical plan of every SQL
+    * execution started under its tag, in execution order. The tag and the
+    * listener are removed whether or not `f` throws. */
+  def capture[T](spark: SparkSession)(f: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val tag = s"graft-plan-trace-${ids.incrementAndGet()}"
+    val plans = new ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.jobTags.contains(tag) =>
+          plans.add(s.physicalPlanDescription)
+        case _ =>
+      }
     }
-  }
-
-  /** Run `f` with interior-plan capture active on this thread; returns
-    * (result, captured text — empty when nothing traced). */
-  def capture[T](f: => T): (T, String) = {
-    val sb = new StringBuilder
-    sink.set(sb)
-    try { val r = f; (r, sb.toString) } finally sink.remove()
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
+    try {
+      val r = f
+      if (!GraftBus.drain(sc, Run.DrainTimeoutMs)) System.err.println(
+        s"[plan-trace] listener bus still busy after ${Run.DrainTimeoutMs / 1000} s; " +
+          "captured plans may be missing")
+      (r, plans.asScala.toSeq)
+    } finally {
+      sc.removeJobTag(tag)
+      sc.removeSparkListener(listener)
+    }
   }
 }

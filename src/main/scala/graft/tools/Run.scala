@@ -43,7 +43,7 @@ final case class RunRecord(
   */
 object Run {
   val QueryKey = "graft.query"
-  private val DrainTimeoutMs = 60000L
+  private[tools] val DrainTimeoutMs = 60000L
 
   /** Execute the full plan and discard the rows: the `noop` DataSource-V2
     * sink computes every projected column, where `count()` would let

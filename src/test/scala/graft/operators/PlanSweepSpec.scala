@@ -68,26 +68,21 @@ class PlanSweepSpec extends AnyFunSuite {
     "q_x_kn_doc_logprob",          // the same single-row distinct-bigram
                                    // total B broadcast join as
                                    // q_x_kneser_ney, on the scoring side
-    "q_x_mmr_rerank")              // ≤64 probe vectors broadcast vs corpus
-                                   // (the bruteForceTopK =!= shape); the
-                                   // eager localCheckpoint hides it from
-                                   // the executedPlan sweep, so the
-                                   // pre-checkpoint sweep below covers it
+    "q_x_mmr_rerank",              // ≤64 probe vectors broadcast vs corpus
+                                   // (the bruteForceTopK =!= shape), in
+                                   // the plan of its eager localCheckpoint
+    "q_x_dedup_simhash_anchor")    // brute-force all-pairs hamming join:
+                                   // the exact re-derivation the simhash
+                                   // banding is checked against, run in
+                                   // its eager probe
 
   Catalog.all.filterNot(_.name.startsWith("q_s_")).foreach { q =>
     test(s"${q.name}: no CartesianProduct; BNLJ only by design") {
-      // Eager localCheckpoints truncate lineage, so the executedPlan sweep
-      // below is blind to any subtree behind one (q_x_mmr_rerank's corpus
-      // scan). Capture each pre-checkpoint frame's plan via the Mmr seam
-      // and sweep those too — a CartesianProduct regression in the hidden
-      // subtree fails here instead of surfacing at scale.
-      val preCkpt = scala.collection.mutable.ArrayBuffer.empty[String]
-      graft.ext.Mmr.preCheckpointProbe.set(
-        df => preCkpt += df.queryExecution.executedPlan.toString)
-      val plan =
-        try q.run(spark, sfDir).queryExecution.executedPlan.toString
-        finally graft.ext.Mmr.preCheckpointProbe.set(null)
-      (plan +: preCkpt.toSeq).foreach { p =>
+      // Eager work (localCheckpoint, probe collects) truncates lineage, so
+      // the final plan alone is blind to any subtree behind it. Sweep the
+      // plan of every SQL execution that ran while the query was built too.
+      val (df, executed) = graft.tools.PlanTrace.capture(spark)(q.run(spark, sfDir))
+      (df.queryExecution.executedPlan.toString +: executed).foreach { p =>
         assert(!p.contains("CartesianProduct"),
           s"${q.name} degenerated to a cartesian product:\n$p")
         if (!bnljByDesign(q.name)) {

@@ -1,0 +1,75 @@
+package graft.tools
+
+import org.apache.spark.ListenerCount
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.TestSpark
+import graft.operators.Catalog
+
+/** [[PlanTrace.capture]] on the shared session: it returns the plan of
+  * every SQL execution its body ran, in order, and nothing else. */
+class PlanTraceSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+  private val sfDir = "/root/testdata/sf0.001"
+
+  private def traceTags: Set[String] =
+    spark.sparkContext.getJobTags().filter(_.startsWith("graft-plan-trace"))
+
+  test("a CartesianProduct behind an eager localCheckpoint is captured") {
+    val (df, plans) = PlanTrace.capture(spark) {
+      val a = spark.range(0, 20, 1, 2).toDF("a")
+      val b = spark.range(0, 5, 1, 2).toDF("b")
+      a.hint("SHUFFLE_REPLICATE_NL").crossJoin(b).localCheckpoint(true)
+        .selectExpr("a + b AS s")
+    }
+    assert(!df.queryExecution.executedPlan.toString.contains("CartesianProduct"))
+    assert(plans.size == 1 && plans.head.contains("CartesianProduct"), plans)
+  }
+
+  test("two captures back to back get disjoint plan lists, in execution order") {
+    val (_, first) = PlanTrace.capture(spark) {
+      spark.range(3).toDF("trace_first").collect()
+      spark.range(4).toDF("trace_second").collect()
+    }
+    val (_, second) = PlanTrace.capture(spark) {
+      spark.range(5).toDF("trace_third").collect()
+    }
+    assert(first.size == 2 && second.size == 1)
+    assert(first(0).contains("trace_first") && !first(0).contains("trace_second"))
+    assert(first(1).contains("trace_second"))
+    assert(second.head.contains("trace_third"))
+    assert(!first.exists(_.contains("trace_third")))
+  }
+
+  test("a body that throws still removes the tag and the listener") {
+    val sc = spark.sparkContext
+    val listeners = ListenerCount(sc)
+    val e = intercept[IllegalStateException] {
+      PlanTrace.capture(spark) {
+        spark.range(3).collect()
+        throw new IllegalStateException("boom")
+      }
+    }
+    assert(e.getMessage == "boom")
+    assert(traceTags.isEmpty)
+    assert(ListenerCount(sc) == listeners)
+  }
+
+  test("a query with no eager work yields no captured plans") {
+    val (df, plans) = PlanTrace.capture(spark)(
+      Catalog.byName("q_p1_scan_project").run(spark, sfDir))
+    assert(plans.isEmpty)
+    assert(df.queryExecution.executedPlan.toString.contains("FileScan"))
+    assert(traceTags.isEmpty)
+  }
+
+  test("PlanDumpMain: two dumps of one query are byte-identical") {
+    val q = Catalog.byName("q_x_assoc_rules")
+    val first = PlanDumpMain.dump(spark, q, sfDir)
+    graft.GraftSession.dropCachedBlocks(spark)
+    val second = PlanDumpMain.dump(spark, q, sfDir)
+    graft.GraftSession.dropCachedBlocks(spark)
+    assert(first.contains("== Executed while building (1 of "))
+    assert(first == second)
+  }
+}
