@@ -137,6 +137,10 @@ object Bench {
       "build_s" -> perQuery(_.flatMap(_.buildS).map(d3)),
       "jobs" -> perQuery(_.last.jobs),
       "task_sec" -> perQuery(rs => Json.fixed(rs.map(_.taskS).sum, 2)),
+      // Per pass, JVM-wide (see RunRecord): 0 once a query's generated
+      // classes are all in the codegen cache.
+      "compiles" -> perQuery(_.map(_.compiles)),
+      "compile_s" -> perQuery(_.map(r => d3(r.compileS))),
       "failed" -> ListMap.from(failedRuns.map { case (k, rs) =>
         k -> rs.flatMap(_.error).head })))
     // The JSON goes to a file in the repo root AND is the final stdout

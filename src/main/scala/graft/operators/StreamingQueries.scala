@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.state.GraftStateStores
 import org.apache.spark.sql.functions._
 
 /** Driver-visible checks for the Structured Streaming surface. The
@@ -76,7 +77,10 @@ object StreamingQueries {
   /** Run a streaming frame to completion into a memory sink; materialize
     * the result OFF the sink and drop the sink table, so repeated
     * invocations in one JVM (bench reps) don't accumulate driver-held
-    * sink rows. */
+    * sink rows. For the same reason the stopped run's state-store
+    * providers are unloaded at once instead of at the next store
+    * maintenance: left loaded, every run kept its providers (16 for
+    * q_s_stream_distinct) and their state rows on a long-lived JVM's heap. */
   private def runToMemory(s: SparkSession, out: DataFrame, mode: String,
                           prefix: String): DataFrame =
     withStatePartitions(s,
@@ -84,7 +88,10 @@ object StreamingQueries {
       val name = s"${prefix}_${nextId.incrementAndGet()}"
       val q = out.writeStream.format("memory").queryName(name)
         .outputMode(mode).start()
-      try q.processAllAvailable() finally q.stop()
+      try q.processAllAvailable() finally {
+        q.stop()
+        GraftStateStores.unload(q.runId)
+      }
       val result = s.table(name).localCheckpoint(true)
       s.catalog.dropTempView(name)
       result

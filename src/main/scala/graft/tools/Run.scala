@@ -4,15 +4,21 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.{GraftBus, SparkContext}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** What one query run cost, split into the two layers a caller can time
   * from the driver: `buildS` is the eager work inside the query's
   * construction (localCheckpoint, probe collects, streaming drains) and
   * `execS` the action over the frame it returned. A failed run carries no
   * timing at all: a failure's seconds are not a measurement of the query.
-  * The counters sum over every task of every job the run submitted. */
+  * The counters sum over every task of every job the run submitted,
+  * except `compiles` and `compileS`: the classes the engine's code
+  * generator compiled during the run and the seconds it spent compiling
+  * them. Those are JVM-wide deltas, not attributed per job, so they
+  * include what any other thread compiled meanwhile. */
 final case class RunRecord(
     name: String,
     status: String,
@@ -25,7 +31,9 @@ final case class RunRecord(
     shuffleWriteBytes: Long,
     spillMemBytes: Long,
     spillDiskBytes: Long,
-    peakTaskMemBytes: Long) {
+    peakTaskMemBytes: Long,
+    compiles: Long,
+    compileS: Double) {
   def ok: Boolean = status == "ok"
   def wallS: Option[Double] = for (b <- buildS; e <- execS) yield b + e
 }
@@ -81,6 +89,11 @@ object Run {
     }
   }
 
+  /** Classes the code generator has compiled in this JVM, and the
+    * nanoseconds it spent on them. Cache hits count in neither. */
+  private def compileCounters: (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+
   private var listeningOn: SparkContext = _
 
   private def listen(sc: SparkContext): Unit = synchronized {
@@ -97,6 +110,7 @@ object Run {
     val acc = new Acc
     require(Metrics.byQuery.putIfAbsent(name, acc) == null,
       s"a run named $name is already in progress")
+    val (compiles0, compileNs0) = compileCounters
     val prev = sc.getLocalProperty(QueryKey)
     sc.setLocalProperty(QueryKey, name)
     val (timing, error) =
@@ -111,11 +125,13 @@ object Run {
     if (!GraftBus.drain(sc, DrainTimeoutMs)) System.err.println(
       s"[run] listener bus still busy after ${DrainTimeoutMs / 1000} s; " +
         s"counters of $name may be short")
+    val (compiles1, compileNs1) = compileCounters
     Metrics.byQuery.remove(name)
     Metrics.byStage.values.removeIf(_ eq acc)
     RunRecord(name, if (error.isEmpty) "ok" else "failed", error,
       timing.map(_._1), timing.map(_._2), acc.jobs.get,
       acc.taskNanos.get / 1e9, acc.shuffleRead.get, acc.shuffleWrite.get,
-      acc.spillMem.get, acc.spillDisk.get, acc.peakTaskMem.get)
+      acc.spillMem.get, acc.spillDisk.get, acc.peakTaskMem.get,
+      compiles1 - compiles0, (compileNs1 - compileNs0) / 1e9)
   }
 }

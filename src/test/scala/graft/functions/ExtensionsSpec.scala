@@ -22,6 +22,11 @@ class ExtensionsSpec extends AnyFunSuite {
         .config("spark.ui.enabled", "false")
         .withExtensions(new graft.GraftExtensions)
         .getOrCreate()
+      // Built on the context `base` created, this session inherits its
+      // codegen cache cap: it cannot be the one that binds CodeGenerator
+      // to Spark's default of 100 entries (see CodegenCacheSpec).
+      assert(s.conf.get("spark.sql.codegen.cache.maxEntries") ==
+        graft.GraftSession.CodegenCacheEntries.toString)
       val row = s.sql(
         """SELECT simhash64('a b c') AS sh,
           |  ngram_jaccard('a b c d', 'a b c d') AS j,
