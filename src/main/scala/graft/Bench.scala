@@ -3,7 +3,7 @@ package graft
 import scala.collection.immutable.ListMap
 import scala.collection.mutable
 
-import graft.tools.{Run, RunRecord}
+import graft.tools.{Run, RunRecord, StreamPhases}
 
 /** Benchmark main — driver contract: run the query surface on
   * SPARK_GRAFT_SF_DIR, print ONE JSON line with per-query seconds.
@@ -141,6 +141,13 @@ object Bench {
       // classes are all in the codegen cache.
       "compiles" -> perQuery(_.map(_.compiles)),
       "compile_s" -> perQuery(_.map(r => d3(r.compileS))),
+      // Per pass, for the queries that drain streams: batches, empty
+      // batches and the summed phase milliseconds from their progress.
+      "stream" -> ListMap.from(records.collect {
+        case (k, rs) if rs.exists(_.stream.nonEmpty) => k -> rs.toSeq.map(_.stream.map(p =>
+          ListMap("batches" -> p.batches, "empty_batches" -> p.emptyBatches) ++
+            StreamPhases.Keys.map(key => s"${key}_ms" -> p.durationMs(key))).orNull)
+      }),
       "failed" -> ListMap.from(failedRuns.map { case (k, rs) =>
         k -> rs.flatMap(_.error).head })))
     // The JSON goes to a file in the repo root AND is the final stdout

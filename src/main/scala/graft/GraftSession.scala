@@ -54,7 +54,29 @@ object GraftSession {
     *    whenever the order changed. With both confs above, a second
     *    full sweep still compiled 90 classes at sf0.001, most of them
     *    for this reason. The stage number stays in EXPLAIN output
-    *    (`*(6)`); only generated class names lose it. */
+    *    (`*(6)`); only generated class names lose it.
+    *
+    * Two confs ([[graft.sources.LocalFs.Confs]]) give `file://` paths a
+    * local filesystem that starts no processes. Without the native Hadoop
+    * library, Hadoop's `RawLocalFileSystem` forked a `chmod` from
+    * `setPermission` for every file and directory it created (stream
+    * offset/commit logs, state-store delta files, parquet part files and
+    * all their `.crc` files) and a `readlink` from `FileUtil.readLink`
+    * (`getFileLinkStatus`) on every `FileContext` rename, which is how
+    * Spark commits checkpoint and state-store files. 40 SIGQUIT thread
+    * dumps of a pipeline_barriers benchmark run on 4 vCPUs held 285
+    * `org.apache.hadoop.util.Shell` frames without these confs and none
+    * with them. Checkpoint checksums
+    * (`spark.sql.streaming.checkpoint.fileChecksum.enabled`) stay on.
+    * Without the conf, `file://` resolved to Hive's `ProxyLocalFileSystem`
+    * (listed for ServiceLoader by the bundled hive-exec jar), a stock
+    * `LocalFileSystem` whose `rename` returns false, moving nothing, when
+    * the target is an existing file; Hadoop's own local filesystem, and
+    * this one, replace the file. Like the codegen cap, `fs.file.impl`
+    * binds ONCE per JVM: Hadoop's JVM-wide `FileSystem` cache keeps the
+    * class of the first `file://` filesystem any code asks for, whatever
+    * conf a later caller carries. `fs.AbstractFileSystem.file.impl` is
+    * read on every `FileContext`. */
   def builder(appName: String, cpus: String,
               shufflePartitions: Option[String] = None): SparkSession.Builder =
     SparkSession.builder()
@@ -80,6 +102,7 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.codegen.useIdInClassName", "false")
+      .config(graft.sources.LocalFs.Confs)
 
   /** Entries of the JVM-wide generated-code cache (see [[builder]]). */
   val CodegenCacheEntries = 4096

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.state.GraftStateStores
 import org.apache.spark.sql.functions._
 
+import graft.tools.Run
+
 /** Driver-visible checks for the Structured Streaming surface. The
   * streaming operators are spec-verified in EventsStreamSpec; these entries
   * additionally run them under the driver's correctness gate: a bounded
@@ -66,7 +68,15 @@ object StreamingQueries {
     * fixed per-query machinery — query start/plan (~0.3-0.8 s), two
     * micro-batches (the second is the watermark-advance emission batch,
     * required by append-mode semantics), state commit, stop — not a
-    * tunable I/O cost at this state volume. */
+    * tunable I/O cost at this state volume.
+    * Those r14 numbers came from a 32-core host whose Hadoop local
+    * filesystem still forked a `chmod`/`readlink` process per checkpoint
+    * and state-store file (see GraftSession.builder). Much of that
+    * "fixed machinery" was those forks. Without them, on 4 cores, 8
+    * state partitions run as two task waves per stateful stage, yet
+    * `min(8, defaultParallelism)` (4 here) did not pay: six alternating
+    * pipeline_barriers pairs (seeds 1541-1546, 25 s runs) gave wall_s
+    * medians of 3.83 s at 8 and 3.98 s at 4, with 4 winning 3 of 6. */
   private def withStatePartitions[A](s: SparkSession, n: String)(f: => A): A = {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
@@ -80,7 +90,9 @@ object StreamingQueries {
     * sink rows. For the same reason the stopped run's state-store
     * providers are unloaded at once instead of at the next store
     * maintenance: left loaded, every run kept its providers (16 for
-    * q_s_stream_distinct) and their state rows on a long-lived JVM's heap. */
+    * q_s_stream_distinct) and their state rows on a long-lived JVM's heap.
+    * Before the stop, the query's own progress reports go to the
+    * [[graft.tools.Run]] in progress (its `RunRecord.stream`). */
   private def runToMemory(s: SparkSession, out: DataFrame, mode: String,
                           prefix: String): DataFrame =
     withStatePartitions(s,
@@ -88,7 +100,10 @@ object StreamingQueries {
       val name = s"${prefix}_${nextId.incrementAndGet()}"
       val q = out.writeStream.format("memory").queryName(name)
         .outputMode(mode).start()
-      try q.processAllAvailable() finally {
+      try {
+        q.processAllAvailable()
+        Run.recordStream(s.sparkContext, q.recentProgress.toSeq)
+      } finally {
         q.stop()
         GraftStateStores.unload(q.runId)
       }

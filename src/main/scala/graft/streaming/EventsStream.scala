@@ -1,6 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
@@ -20,6 +23,25 @@ import org.apache.spark.sql.types._
   * to the batch shuffle layout.
   */
 object EventsStream {
+
+  /** One state encoder per state class that holds a collection, built
+    * and resolved once per JVM. A collection field's (de)serializer
+    * carries `MapObjects` lambda variables numbered from a JVM-global
+    * counter, and the numbers are part of the generated code's text.
+    * Spark numbers them afresh each time it turns an `Encoder` into an
+    * `ExpressionEncoder` (the serializer) and each time it resolves the
+    * deserializer (`resolveAndBind`, which finds nothing left to resolve
+    * here), so with `spark.implicits._` each run of these streams
+    * recompiled its state projections (3 classes). */
+  private object StateEncoders {
+    private def resolved[T: TypeTag]: Encoder[T] = ExpressionEncoder[T]().resolveAndBind()
+    val intervalJoin = resolved[IntervalJoinState]
+    val asof = resolved[AsofState]
+    val scd2 = resolved[Scd2State]
+    val ewma = resolved[EwmaState]
+    val budget = resolved[BudgetState]
+    val funnel = resolved[FunnelState]
+  }
 
   /** Raw schema of the streaming source, parameterized by the physical
     * type `ts` was written with — the testdata has shipped int64-nanos,
@@ -438,7 +460,7 @@ object EventsStream {
             state.setTimeoutTimestamp(math.max(wake, wm + 1))
           }
           out.iterator
-      }
+      }(StateEncoders.intervalJoin, implicitly[Encoder[IntervalPair]])
   }
 
   /** Per-user buffered state for the streaming as-of join: the single
@@ -543,7 +565,7 @@ object EventsStream {
             state.setTimeoutTimestamp(
               math.max(keep.map(_._1).max + 1, wm + 1))
           out.iterator
-      }
+      }(StateEncoders.asof, implicitly[Encoder[AsofMatch]])
   }
 
   /** Streaming exact dedup — the unbounded-corpus counterpart of
@@ -625,7 +647,7 @@ object EventsStream {
               math.max(keep.map(_._1).min / 1000L + 1L,
                 state.getCurrentWatermarkMs() + 1L))
           out.iterator
-      }
+      }(StateEncoders.scd2, implicitly[Encoder[Scd2Version]])
   }
 
   /** State of [[ewmaStream]]: the ≤k newest FINALIZED observations
@@ -741,7 +763,7 @@ object EventsStream {
           if (deadlines.nonEmpty)
             state.setTimeoutTimestamp(math.max(deadlines.min, wmMs + 1L))
           out.iterator
-      }
+      }(StateEncoders.ewma, implicitly[Encoder[EwmaLevel]])
   }
 
   def dedupStream(events: DataFrame, keyCols: Seq[String],
@@ -950,7 +972,7 @@ object EventsStream {
               math.max(st.lastMs, state.getCurrentWatermarkMs() + 1))
             Iterator.empty
           }
-      }
+      }(StateEncoders.budget, implicitly[Encoder[BudgetRow]])
   }
 
   /** Running stats + last-seen event-time ms — the timeout anchor that
@@ -1074,7 +1096,7 @@ object EventsStream {
               math.max(st.lastMs + 1, state.getCurrentWatermarkMs() + 1))
             Iterator.empty
           }
-      }
+      }(StateEncoders.funnel, implicitly[Encoder[FunnelStage]])
   }
 
   /** Streaming exact distinct users per hour — chained stateful

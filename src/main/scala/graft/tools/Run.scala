@@ -1,13 +1,14 @@
 package graft.tools
 
 import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong, AtomicReference}
 
 import org.apache.spark.{GraftBus, SparkContext}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.streaming.StreamingQueryProgress
 
 /** What one query run cost, split into the two layers a caller can time
   * from the driver: `buildS` is the eager work inside the query's
@@ -18,7 +19,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   * except `compiles` and `compileS`: the classes the engine's code
   * generator compiled during the run and the seconds it spent compiling
   * them. Those are JVM-wide deltas, not attributed per job, so they
-  * include what any other thread compiled meanwhile. */
+  * include what any other thread compiled meanwhile. `stream` sums the
+  * micro-batches of the streams the run drained, if it drained any. */
 final case class RunRecord(
     name: String,
     status: String,
@@ -33,9 +35,32 @@ final case class RunRecord(
     spillDiskBytes: Long,
     peakTaskMemBytes: Long,
     compiles: Long,
-    compileS: Double) {
+    compileS: Double,
+    stream: Option[StreamPhases]) {
   def ok: Boolean = status == "ok"
   def wallS: Option[Double] = for (b <- buildS; e <- execS) yield b + e
+}
+
+/** Where a run's streams spent their micro-batches, from the queries' own
+  * progress reports: how many batches ran, how many of them read no input
+  * rows (the watermark-advance batch), and the summed milliseconds of the
+  * phases in [[StreamPhases.Keys]]. */
+final case class StreamPhases(batches: Int, emptyBatches: Int, durationMs: Map[String, Long]) {
+  def +(o: StreamPhases): StreamPhases = StreamPhases(batches + o.batches,
+    emptyBatches + o.emptyBatches,
+    StreamPhases.Keys.map(k => k -> (durationMs(k) + o.durationMs(k))).toMap)
+}
+
+object StreamPhases {
+  val Keys = Seq("addBatch", "walCommit", "commitOffsets", "queryPlanning")
+
+  /** Only triggers that ran a batch count (they time `addBatch`); an idle
+    * trigger's report has no batch to attribute. */
+  def of(progress: Seq[StreamingQueryProgress]): StreamPhases = {
+    val ran = progress.filter(_.durationMs.containsKey("addBatch"))
+    StreamPhases(ran.size, ran.count(_.numInputRows == 0), Keys.map(k =>
+      k -> ran.map(p => Option(p.durationMs.get(k)).fold(0L)(_.longValue)).sum).toMap)
+  }
 }
 
 /** The one query runner behind Bench and ScaleSmokeMain.
@@ -62,6 +87,7 @@ object Run {
     val jobs = new AtomicInteger
     val taskNanos, shuffleRead, shuffleWrite = new AtomicLong
     val spillMem, spillDisk, peakTaskMem = new AtomicLong
+    val stream = new AtomicReference[Option[StreamPhases]](None)
   }
 
   private object Metrics extends SparkListener {
@@ -93,6 +119,16 @@ object Run {
     * nanoseconds it spent on them. Cache hits count in neither. */
   private def compileCounters: (Long, Long) =
     (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+
+  /** Add a drained stream's progress reports to the run named by the
+    * calling thread's `graft.query` local property; outside a run, they
+    * are dropped. */
+  def recordStream(sc: SparkContext, progress: Seq[StreamingQueryProgress]): Unit =
+    Option(sc.getLocalProperty(QueryKey)).flatMap(q => Option(Metrics.byQuery.get(q)))
+      .foreach { acc =>
+        val phases = StreamPhases.of(progress)
+        acc.stream.getAndUpdate(prev => Some(prev.fold(phases)(_ + phases)))
+      }
 
   private var listeningOn: SparkContext = _
 
@@ -132,6 +168,6 @@ object Run {
       timing.map(_._1), timing.map(_._2), acc.jobs.get,
       acc.taskNanos.get / 1e9, acc.shuffleRead.get, acc.shuffleWrite.get,
       acc.spillMem.get, acc.spillDisk.get, acc.peakTaskMem.get,
-      compiles1 - compiles0, (compileNs1 - compileNs0) / 1e9)
+      compiles1 - compiles0, (compileNs1 - compileNs0) / 1e9, acc.stream.get)
   }
 }

@@ -41,6 +41,13 @@ class CodegenCacheSpec extends AnyFunSuite {
     assert(compilesOf("q_s_stream_distinct") == 0)
   }
 
+  test("a typed-state stream run twice compiles nothing the second time") {
+    // Its state class holds lists; a state encoder built afresh per run
+    // numbered their lambda variables anew, and recompiled.
+    compilesOf("q_s_stream_join_capped")
+    assert(compilesOf("q_s_stream_join_capped") == 0)
+  }
+
   test("the cache holds more than Spark's default 100 entries") {
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
       GraftSession.CodegenCacheEntries.toString)

@@ -34,6 +34,20 @@ class RunSpec extends AnyFunSuite {
     assert((a.jobs, b.jobs) == ((2, 4)))
   }
 
+  test("a run that drains a stream carries its micro-batch phases") {
+    val r = Run.query(spark, "run_spec_stream",
+      graft.operators.Catalog.byName("q_s_stream_distinct").run(spark, "/root/testdata/sf0.001"),
+      Run.noop)
+    graft.GraftSession.dropCachedBlocks(spark)
+    assert(r.ok, r.error)
+    val p = r.stream.getOrElse(fail("no stream phases"))
+    // the data batch, then the watermark-advance batch that reads nothing
+    assert(p.batches >= 2 && p.emptyBatches >= 1 && p.emptyBatches < p.batches)
+    assert(p.durationMs.keySet == StreamPhases.Keys.toSet)
+    assert(p.durationMs("addBatch") > 0 && p.durationMs.values.forall(_ >= 0))
+    assert(run("run_spec_no_stream", eager = 0).stream.isEmpty)
+  }
+
   test("a query that throws is failed and carries no timing") {
     val r = Run.query(spark, "run_spec_fail",
       throw new IllegalStateException("boom"), _ => ())
