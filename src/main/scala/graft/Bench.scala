@@ -141,6 +141,8 @@ object Bench {
       // classes are all in the codegen cache.
       "compiles" -> perQuery(_.map(_.compiles)),
       "compile_s" -> perQuery(_.map(r => d3(r.compileS))),
+      // Per pass, JVM-wide: MB of heap allocated while the query ran.
+      "alloc_mb" -> perQuery(_.map(r => Json.fixed(r.allocBytes / 1048576.0, 1))),
       // Per pass, for the queries that drain streams: batches, empty
       // batches and the summed phase milliseconds from their progress.
       "stream" -> ListMap.from(records.collect {

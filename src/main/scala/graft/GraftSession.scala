@@ -76,7 +76,34 @@ object GraftSession {
     * binds ONCE per JVM: Hadoop's JVM-wide `FileSystem` cache keeps the
     * class of the first `file://` filesystem any code asks for, whatever
     * conf a later caller carries. `fs.AbstractFileSystem.file.impl` is
-    * read on every `FileContext`. */
+    * read on every `FileContext`.
+    *
+    * Two confs size Tungsten memory for this engine's partitions, which
+    * hold kilobytes to a few megabytes:
+    *  - `spark.buffer.pageSize` = [[PageSize]] (2 MiB). Unset, Spark takes
+    *    nextPow2(execution pool / cores / 16), clamped to 1-64 MiB; with
+    *    an 8 GB heap on 4 cores that is 64 MiB. Four sites take a whole
+    *    page however few rows they hold: the fast map of every
+    *    hash-aggregate task (`RowBasedKeyValueBatch`), the
+    *    `BytesToBytesMap` it falls back to on its first insert, the
+    *    in-memory sorter of every sort task, and the `BytesToBytesMap`
+    *    of every broadcast hash relation. The last one lives on: a heap
+    *    dump of the sparkify_etl benchmark right after a full collection
+    *    held a live 64 MiB `long[]` reached from a `BytesToBytesMap` page
+    *    through `UnsafeHashedRelation.binaryMap` and a
+    *    `DeserializedMemoryEntry` in the block manager's memory store,
+    *    kept there until `ContextCleaner` drops the broadcast. A 1,000-row
+    *    sort or a 10-group aggregate peaked at 64 MiB of task memory; at
+    *    2 MiB pages they peak at about 2 MiB, and a batch that outgrows a
+    *    page simply takes another one. The page size binds when the
+    *    SparkContext is created (`SparkEnv`'s memory manager reads it
+    *    once); a session built over an existing context keeps the
+    *    context's value.
+    *  - `spark.broadcast.blockSize` = 1m (Spark: 4m). `TorrentBroadcast`
+    *    serializes every broadcast into chunks of this size and allocates
+    *    the first one whole, so each broadcast relation and each stage's
+    *    task binary (also a broadcast) cost a 4 MiB array even when they
+    *    serialize to a few kilobytes. */
   def builder(appName: String, cpus: String,
               shufflePartitions: Option[String] = None): SparkSession.Builder =
     SparkSession.builder()
@@ -103,9 +130,14 @@ object GraftSession {
       .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.codegen.useIdInClassName", "false")
       .config(graft.sources.LocalFs.Confs)
+      .config("spark.buffer.pageSize", PageSize.toString)
+      .config("spark.broadcast.blockSize", "1m")
 
   /** Entries of the JVM-wide generated-code cache (see [[builder]]). */
   val CodegenCacheEntries = 4096
+
+  /** Bytes in one Tungsten memory page (see [[builder]]). */
+  val PageSize: Long = 2L << 20
 
   /** The conf a NON-graft-built session must carry to read the events
     * table; `Sources.table` asserts it with this key. */

@@ -72,10 +72,10 @@ object Stats {
         cols.map(n => sum(dec38(col(n) * col(n))).as(s"ss_$n")) ++
         pairs.map { case (a, b) =>
           sum(dec38(col(a) * col(b))).as(s"sp_${a}_$b") }
-    // one 1-row moments frame feeding k(k-1)/2 union legs: materialize it
-    // once (the MarketBasket/TfIdf localCheckpoint idiom) or every leg
-    // re-runs the full scan+aggregate subtree
-    val m = d.agg(moments.head, moments.tail: _*).localCheckpoint(true)
+    // one 1-row moments frame; every pair is a struct over that same row,
+    // and inline() turns the array of k(k-1)/2 structs into rows, so the
+    // scan and aggregate run once in one plan (no checkpoint, no union)
+    val m = d.agg(moments.head, moments.tail: _*)
     val rows = pairs.map { case (a, b) =>
       val num = (col("n") * col(s"sp_${a}_$b") - col(s"s_$a") * col(s"s_$b"))
         .cast("double")
@@ -86,12 +86,12 @@ object Stats {
       // zero-variance guard (acf's convention): a constant column makes
       // num and den both 0 and Spark's 0.0/0.0 is NaN while DuckDB's
       // differs by build flag — emit NULL, the only bit-stable answer.
-      m.select(
+      struct(
         lit(a).as("col_a"), lit(b).as("col_b"),
         col("n").cast("long").as("n"),
         when(den =!= 0.0, round(num / den, 6)).as("corr"))
     }
-    rows.reduce(_ unionByName _)
+    m.select(inline(array(rows: _*)))
   }
 
   /** Mutual information between two categorical columns, emitted as one

@@ -177,67 +177,141 @@ object QDigestAgg {
     out
   }
 
-  /** Sort by nodeId, sum duplicate ids, then run the q-digest compression
-    * bottom-up: merge any sibling pair (plus parent) carrying ≤ ⌊n/k⌋
-    * total mass into the parent. Returns a fresh canonical array. */
+  /** Sum duplicate node ids, sort by id, then run the q-digest
+    * compression bottom-up: merge any sibling pair (plus parent) carrying
+    * ≤ ⌊n/k⌋ total mass into the parent. Returns a fresh canonical array.
+    *
+    * Primitive arrays throughout: an open-addressing table sums the
+    * duplicates, `Arrays.sort` orders the ids, and since a node's level is
+    * the position of its highest bit, the sorted ids fall into one
+    * contiguous run per tree level. Compression is then one ascending
+    * merge-walk of level L against level L−1 per level, leaves first. A
+    * sibling pair's decision reads only its own two counts and its
+    * parent's, and only that pair writes the parent, so deciding the
+    * pairs of a level in one pass is exact; the parents it creates join
+    * level L−1 before that level is walked, which keeps one call within
+    * the paper's ≤ 3k size bound. Zero counts are dropped. */
   private[functions] def canonicalize(pairs: Array[Long], bits: Int,
                                       k: Int): Array[Long] = {
     if (pairs.isEmpty) return pairs
-    // Boxed values on purpose: j.u.TreeMap.get on a missing key returns
-    // null, and a scala.Long value type would silently unbox that to 0.
-    val m = new java.util.TreeMap[java.lang.Long, java.lang.Long]()
-    def getOr0(id: Long): Long = {
-      val v = m.get(id)
-      if (v == null) 0L else v.longValue()
+    // Node ids are >= 1 (root = 1), so 0 marks an empty slot; at least
+    // two slots per pair keep the table at most half full.
+    var slots = 2
+    while (slots < pairs.length) slots <<= 1
+    val mask = slots - 1
+    val keys = new Array[Long](slots)
+    val sums = new Array[Long](slots)
+    def slotOf(id: Long): Int = {
+      var s = ((id * 0x9E3779B97F4A7C15L) >>> 32).toInt & mask
+      while (keys(s) != 0L && keys(s) != id) s = (s + 1) & mask
+      s
     }
-    var i = 0
     var n = 0L
+    var d = 0
+    var i = 0
     while (i < pairs.length) {
       val id = pairs(i); val c = pairs(i + 1)
-      if (c != 0L) m.merge(id, c, (x, y) => java.lang.Long.valueOf(x + y))
       n += c
+      if (c != 0L) {
+        require(id > 0L, s"q-digest node id must be positive, got $id")
+        val s = slotOf(id)
+        if (keys(s) == 0L) { keys(s) = id; d += 1 }
+        sums(s) += c
+      }
       i += 2
     }
+    val ids = new Array[Long](d)
+    var j = 0
+    i = 0
+    while (i < slots) { if (keys(i) != 0L) { ids(j) = keys(i); j += 1 }; i += 1 }
+    java.util.Arrays.sort(ids)
+    val cnt = new Array[Long](d)
+    i = 0
+    while (i < d) { cnt(i) = sums(slotOf(ids(i))); i += 1 }
+
     val threshold = n / k
-    // Bottom-up BY LEVEL (leaves first): merges at level L create parents
-    // at L-1 that the next iteration reconsiders, so one call compresses
-    // to the paper's ≤ 3k size bound — a single sweep over a pre-merge id
-    // snapshot would skip those new parents and leave the digest oversized.
-    if (threshold > 0) {
-      var level = bits
-      while (level >= 1) {
-        val lo = 1L << level
-        val hi = (1L << (level + 1)) - 1L
-        val ids = m.subMap(lo, true, hi, true).keySet()
-          .toArray(new Array[java.lang.Long](0))
-        var j = 0
-        while (j < ids.length) {
-          val id = ids(j).longValue()
-          if (m.containsKey(id)) { // may have been absorbed as its twin's sibling
-            val sib = id ^ 1L
-            val par = id >>> 1
-            val cur = getOr0(id)
-            val cSib = getOr0(sib)
-            val cPar = getOr0(par)
-            if (cur + cSib + cPar <= threshold) {
-              m.remove(id); m.remove(sib)
-              m.put(par, cPar + cur + cSib)
-            }
-          }
-          j += 1
-        }
-        level -= 1
-      }
-    }
-    val out = new Array[Long](2 * m.size())
-    val it = m.entrySet().iterator()
-    var o = 0
-    while (it.hasNext) {
-      val e = it.next()
-      out(o) = e.getKey; out(o + 1) = e.getValue
-      o += 2
+    val (outIds, outCnt, from) =
+      if (threshold > 0) compress(ids, cnt, bits, threshold) else (ids, cnt, 0)
+    val out = new Array[Long](2 * (d - from))
+    i = from
+    while (i < d) {
+      out(2 * (i - from)) = outIds(i); out(2 * (i - from) + 1) = outCnt(i)
+      i += 1
     }
     out
+  }
+
+  /** The level walk of [[canonicalize]] over distinct sorted `ids` with
+    * their counts. Returns arrays whose slots `[from, ids.length)` hold the
+    * surviving nodes in ascending id order. */
+  private def compress(ids: Array[Long], cnt: Array[Long], bits: Int,
+                       threshold: Long): (Array[Long], Array[Long], Int) = {
+    val d = ids.length
+    // start(L): index of the first id at level >= L (ids in [2^L, 2^(L+1)))
+    val start = new Array[Int](bits + 2)
+    var lvl = 0
+    var i = 0
+    while (lvl <= bits + 1) {
+      while (i < d && ids(i) < (1L << lvl)) i += 1
+      start(lvl) = i
+      lvl += 1
+    }
+    // Finished levels fill the output from the top down. Ids past the leaf
+    // level are outside the tree and stay as they are.
+    val outIds = new Array[Long](d)
+    val outCnt = new Array[Long](d)
+    var top = start(bits + 1)
+    System.arraycopy(ids, top, outIds, top, d - top)
+    System.arraycopy(cnt, top, outCnt, top, d - top)
+    // The level being walked, and the next one up it builds; the live
+    // node count never exceeds d, so d slots hold either.
+    var curIds = new Array[Long](d); var curCnt = new Array[Long](d)
+    var nxtIds = new Array[Long](d); var nxtCnt = new Array[Long](d)
+    val keepIds = new Array[Long](d); val keepCnt = new Array[Long](d)
+    var nc = start(bits + 1) - start(bits)
+    System.arraycopy(ids, start(bits), curIds, 0, nc)
+    System.arraycopy(cnt, start(bits), curCnt, 0, nc)
+    lvl = bits
+    while (lvl >= 1) {
+      val pe = start(lvl)
+      var p = start(lvl - 1)
+      var nn = 0
+      var nk = 0
+      i = 0
+      while (i < nc) {
+        val id = curIds(i); val c = curCnt(i)
+        val pair = (id & 1L) == 0L && i + 1 < nc && curIds(i + 1) == id + 1
+        val cSib = if (pair) curCnt(i + 1) else 0L
+        val par = id >>> 1
+        while (p < pe && ids(p) < par) {
+          nxtIds(nn) = ids(p); nxtCnt(nn) = cnt(p); nn += 1; p += 1
+        }
+        val hasPar = p < pe && ids(p) == par
+        val cPar = if (hasPar) cnt(p) else 0L
+        if (hasPar) p += 1
+        if (c + cSib + cPar <= threshold) {
+          nxtIds(nn) = par; nxtCnt(nn) = cPar + c + cSib; nn += 1
+        } else {
+          if (hasPar) { nxtIds(nn) = par; nxtCnt(nn) = cPar; nn += 1 }
+          keepIds(nk) = id; keepCnt(nk) = c; nk += 1
+          if (pair) { keepIds(nk) = id + 1; keepCnt(nk) = cSib; nk += 1 }
+        }
+        i += (if (pair) 2 else 1)
+      }
+      while (p < pe) { nxtIds(nn) = ids(p); nxtCnt(nn) = cnt(p); nn += 1; p += 1 }
+      top -= nk
+      System.arraycopy(keepIds, 0, outIds, top, nk)
+      System.arraycopy(keepCnt, 0, outCnt, top, nk)
+      val ti = curIds; curIds = nxtIds; nxtIds = ti
+      val tc = curCnt; curCnt = nxtCnt; nxtCnt = tc
+      nc = nn
+      lvl -= 1
+    }
+    // level 0: the root, if present or created
+    top -= nc
+    System.arraycopy(curIds, 0, outIds, top, nc)
+    System.arraycopy(curCnt, 0, outCnt, top, nc)
+    (outIds, outCnt, top)
   }
 
   private def leafRange(id: Long, bits: Int): (Long, Long) = {

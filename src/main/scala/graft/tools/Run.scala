@@ -3,6 +3,8 @@ package graft.tools
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong, AtomicReference}
 
+import java.lang.management.ManagementFactory
+
 import org.apache.spark.{GraftBus, SparkContext}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
@@ -16,11 +18,13 @@ import org.apache.spark.sql.streaming.StreamingQueryProgress
   * `execS` the action over the frame it returned. A failed run carries no
   * timing at all: a failure's seconds are not a measurement of the query.
   * The counters sum over every task of every job the run submitted,
-  * except `compiles` and `compileS`: the classes the engine's code
-  * generator compiled during the run and the seconds it spent compiling
-  * them. Those are JVM-wide deltas, not attributed per job, so they
-  * include what any other thread compiled meanwhile. `stream` sums the
-  * micro-batches of the streams the run drained, if it drained any. */
+  * except `compiles`, `compileS` and `allocBytes`: the classes the
+  * engine's code generator compiled during the run, the seconds it spent
+  * compiling them, and the heap bytes the JVM's threads allocated
+  * meanwhile (`getTotalThreadAllocatedBytes`). Those are JVM-wide deltas, not
+  * attributed per job, so they include what any other thread compiled or
+  * allocated meanwhile. `stream` sums the micro-batches of the streams
+  * the run drained, if it drained any. */
 final case class RunRecord(
     name: String,
     status: String,
@@ -36,6 +40,7 @@ final case class RunRecord(
     peakTaskMemBytes: Long,
     compiles: Long,
     compileS: Double,
+    allocBytes: Long,
     stream: Option[StreamPhases]) {
   def ok: Boolean = status == "ok"
   def wallS: Option[Double] = for (b <- buildS; e <- execS) yield b + e
@@ -120,6 +125,13 @@ object Run {
   private def compileCounters: (Long, Long) =
     (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
 
+  private val threads = ManagementFactory.getThreadMXBean
+    .asInstanceOf[com.sun.management.ThreadMXBean]
+
+  /** Heap bytes the JVM's threads have allocated so far, ended threads
+    * included. */
+  private def allocated: Long = threads.getTotalThreadAllocatedBytes
+
   /** Add a drained stream's progress reports to the run named by the
     * calling thread's `graft.query` local property; outside a run, they
     * are dropped. */
@@ -147,6 +159,7 @@ object Run {
     require(Metrics.byQuery.putIfAbsent(name, acc) == null,
       s"a run named $name is already in progress")
     val (compiles0, compileNs0) = compileCounters
+    val alloc0 = allocated
     val prev = sc.getLocalProperty(QueryKey)
     sc.setLocalProperty(QueryKey, name)
     val (timing, error) =
@@ -162,12 +175,14 @@ object Run {
       s"[run] listener bus still busy after ${DrainTimeoutMs / 1000} s; " +
         s"counters of $name may be short")
     val (compiles1, compileNs1) = compileCounters
+    val alloc1 = allocated
     Metrics.byQuery.remove(name)
     Metrics.byStage.values.removeIf(_ eq acc)
     RunRecord(name, if (error.isEmpty) "ok" else "failed", error,
       timing.map(_._1), timing.map(_._2), acc.jobs.get,
       acc.taskNanos.get / 1e9, acc.shuffleRead.get, acc.shuffleWrite.get,
       acc.spillMem.get, acc.spillDisk.get, acc.peakTaskMem.get,
-      compiles1 - compiles0, (compileNs1 - compileNs0) / 1e9, acc.stream.get)
+      compiles1 - compiles0, (compileNs1 - compileNs0) / 1e9, alloc1 - alloc0,
+      acc.stream.get)
   }
 }

@@ -87,7 +87,8 @@ object ScaleSmokeMain {
     spark.stop()
   }
 
-  /** Wall time, jobs and shuffle bytes per query at 1× vs N×, the
+  /** Wall time, jobs, shuffle bytes and peak task memory (the largest
+    * over the N× runs) per query at 1× vs N×, the
     * evidence for "would the plan survive an N× scale-up": every catalog
     * query, or only the named ones, after one unmeasured 1× warm pass.
     * The (query × scale) grid runs SPARK_GRAFT_REPS times (default 1) end
@@ -122,7 +123,7 @@ object ScaleSmokeMain {
     val floorBytes = 5e6
     def mb(b: Long) = f"${b / 1e6}%.1fM"
     println(f"${"query"}%-36s ${"t_1x"}%8s ${"t_Nx"}%8s ${"ratio"}%6s " +
-      f"${"jobs"}%9s ${"shuf_1x"}%10s ${"shuf_Nx"}%10s ${"shufR"}%6s")
+      f"${"jobs"}%9s ${"shuf_1x"}%10s ${"shuf_Nx"}%10s ${"shufR"}%6s ${"peak_Nx"}%10s")
     val flagged = names.flatMap { name =>
       val cells = runs(name)
       cells.flatMap(c => Seq(c._2, c._3)).find(!_.ok) match {
@@ -138,7 +139,8 @@ object ScaleSmokeMain {
           val jobs = s"${one.last.jobs}/${nx.last.jobs}"
           println(f"$name%-36s $t1%8.2f $tn%8.2f ${tn / t1}%6.1f $jobs%9s " +
             f"${mb(s1)}%10s ${mb(sn)}%10s " +
-            f"${if (r >= 0) f"$r%.1f" else "inf"}%6s" +
+            f"${if (r >= 0) f"$r%.1f" else "inf"}%6s " +
+            f"${mb(nx.map(_.peakTaskMemBytes).max)}%10s" +
             (if (superLinear) " <-- SUPER-LINEAR" else ""))
           if (superLinear) Some(name) else None
       }

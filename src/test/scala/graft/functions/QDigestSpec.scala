@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.scalacheck.{Gen, Prop, Test, rng}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Q-digest invariants (Shrivastava et al. 2004): quantile reads stay
@@ -139,5 +140,89 @@ class QDigestSpec extends AnyFunSuite {
     val agg = new QDigestWeightedAgg(bits, k)
     intercept[IllegalArgumentException](agg.reduce(agg.zero, (3L, -1L)))
     intercept[IllegalArgumentException](agg.reduce(agg.zero, (1024L, 1L)))
+  }
+
+  test("property: the primitive-array kernel equals the TreeMap reference") {
+    // Node ids cluster around one leaf range and are lifted to random
+    // levels, so the inputs carry duplicates, sibling pairs, ancestors and
+    // inner nodes; counts include zeros; k from 1 (everything merges to
+    // the root) to 2048 (nothing merges).
+    val input: Gen[(Int, Int, Array[Long])] = for {
+      bits <- Gen.choose(1, 24)
+      k <- Gen.oneOf(Gen.choose(1, 16), Gen.choose(1, 2048))
+      center <- Gen.choose(0L, (1L << bits) - 1)
+      node = for {
+        off <- Gen.choose(0L, 63L)
+        level <- Gen.frequency(3 -> Gen.const(bits), 1 -> Gen.choose(0, bits))
+      } yield (1L << level) + (math.min(center + off, (1L << bits) - 1) >>> (bits - level))
+      count = Gen.frequency(1 -> Gen.const(0L), 6 -> Gen.choose(1L, 50L),
+        1 -> Gen.choose(1L, 100000L))
+      pairs <- Gen.choose(0, 300).flatMap(n => Gen.listOfN(n, Gen.zip(node, count)))
+    } yield (bits, k, pairs.flatMap { case (id, c) => Seq(id, c) }.toArray)
+    val prop = Prop.forAll(input) { case (bits, k, pairs) =>
+      java.util.Arrays.equals(QDigestAgg.canonicalize(pairs.clone(), bits, k),
+        QDigestSpec.treeMapCanonicalize(pairs, bits, k))
+    }
+    val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(2000)
+      .withInitialSeed(rng.Seed(20041105L)), prop)
+    assert(result.passed, result.status.toString)
+  }
+}
+
+object QDigestSpec {
+
+  /** The boxed `TreeMap` canonicalization the primitive-array kernel
+    * replaced, kept as the reference its output must equal bit for bit. */
+  def treeMapCanonicalize(pairs: Array[Long], bits: Int, k: Int): Array[Long] = {
+    if (pairs.isEmpty) return pairs
+    val m = new java.util.TreeMap[java.lang.Long, java.lang.Long]()
+    def getOr0(id: Long): Long = {
+      val v = m.get(id)
+      if (v == null) 0L else v.longValue()
+    }
+    var i = 0
+    var n = 0L
+    while (i < pairs.length) {
+      val id = pairs(i); val c = pairs(i + 1)
+      if (c != 0L) m.merge(id, c, (x, y) => java.lang.Long.valueOf(x + y))
+      n += c
+      i += 2
+    }
+    val threshold = n / k
+    if (threshold > 0) {
+      var level = bits
+      while (level >= 1) {
+        val lo = 1L << level
+        val hi = (1L << (level + 1)) - 1L
+        val ids = m.subMap(lo, true, hi, true).keySet()
+          .toArray(new Array[java.lang.Long](0))
+        var j = 0
+        while (j < ids.length) {
+          val id = ids(j).longValue()
+          if (m.containsKey(id)) {
+            val sib = id ^ 1L
+            val par = id >>> 1
+            val cur = getOr0(id)
+            val cSib = getOr0(sib)
+            val cPar = getOr0(par)
+            if (cur + cSib + cPar <= threshold) {
+              m.remove(id); m.remove(sib)
+              m.put(par, cPar + cur + cSib)
+            }
+          }
+          j += 1
+        }
+        level -= 1
+      }
+    }
+    val out = new Array[Long](2 * m.size())
+    val it = m.entrySet().iterator()
+    var o = 0
+    while (it.hasNext) {
+      val e = it.next()
+      out(o) = e.getKey; out(o + 1) = e.getValue
+      o += 2
+    }
+    out
   }
 }

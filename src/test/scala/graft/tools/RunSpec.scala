@@ -28,6 +28,15 @@ class RunSpec extends AnyFunSuite {
     assert(r.wallS == Some(r.buildS.get + r.execS.get))
   }
 
+  test("a query that allocates reports a positive allocBytes") {
+    // JVM-wide, so only a lower bound holds: 100k rows collected to the
+    // driver allocate at least the array of 100k longs.
+    val r = Run.query(spark, "run_spec_alloc", spark.range(0, 100000, 1, 4).toDF(),
+      df => assert(df.collect().length == 100000))
+    assert(r.ok, r.error)
+    assert(r.allocBytes >= 100000L * 8, s"allocBytes ${r.allocBytes}")
+  }
+
   test("two queries back to back get disjoint, exact job counts") {
     val a = run("run_spec_a", eager = 1)
     val b = run("run_spec_b", eager = 3)
