@@ -116,7 +116,7 @@ object GraftSession {
       // sized for small executors; at 128 GiB a 64 MB dim broadcast is
       // routine). Paired with ACCURATE stats on materialized frames
       // (persist+count, never stats-blind localCheckpoint, on every
-      // corpus-scale join input — the MarketBasket driver-bomb fix),
+      // corpus-scale join input; README "When an operator materializes"),
       // this keeps join planning size-aware at every scale: the sf1
       // membership/shingle tables (~40-100 MB) broadcast, a 100 TB one
       // sort-merges. Raising the threshold WITHOUT honest stats would

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextExprs._
+import graft.sources.Sources
 
 /** Deduplication operator family for training-data pipelines:
   * exact, MinHash+LSH, SimHash — each returning a full cluster assignment
@@ -81,10 +82,10 @@ object Dedup {
     // sketch twice (each side of a self-join re-executes its plan).
     // persist, NOT localCheckpoint: the membership table is CORPUS-scale
     // (docs × bands rows), and a checkpoint's snapshot stats let Catalyst
-    // broadcast it into the self-join regardless of size — the
-    // MarketBasket driver-bomb class; the counted cache carries exact
+    // broadcast it into the self-join regardless of size (PERF_NOTES
+    // "Stats-blind broadcast"); the counted cache carries exact
     // sizeInBytes so the join stays size-aware at every scale
-    val memb = fanOut(ids).select(col("id"),
+    val memb = Sources.fanOut(ids, col("id")).select(col("id"),
         posexplode(band_hashes(
           minhash_sig(col("text"), numHashes, shingleN), bands))
           .as(Seq("band", "bh")))
@@ -215,22 +216,19 @@ object Dedup {
       .withColumn("__rn", row_number().over(byDoc))
       .filter(col("__rn") <= maxMatchesPerDoc)
       .drop("__rn")
-      .persist()
-    try {
-      val newSh = newDocs.select(col(idCol).as("new_id"),
-        sorted_shingles(col(textCol), shingleN).as("sh_new"))
-      val corpusSh = corpus
-        .join(cand.select(col("corpus_id").as(idCol)).distinct(),
-          Seq(idCol), "left_semi")
-        .select(col(idCol).as("corpus_id"),
-          sorted_shingles(col(textCol), shingleN).as("sh_old"))
-      cand.join(newSh, Seq("new_id"))
-        .join(corpusSh, Seq("corpus_id"))
-        .withColumn("jac",
-          round(array_jaccard(col("sh_new"), col("sh_old")), 3))
-        .filter(col("jac") >= threshold)
-        .select(col("new_id"), col("corpus_id"), col("jac"))
-    } finally cand.unpersist(blocking = false)
+    val newSh = newDocs.select(col(idCol).as("new_id"),
+      sorted_shingles(col(textCol), shingleN).as("sh_new"))
+    val corpusSh = corpus
+      .join(cand.select(col("corpus_id").as(idCol)).distinct(),
+        Seq(idCol), "left_semi")
+      .select(col(idCol).as("corpus_id"),
+        sorted_shingles(col(textCol), shingleN).as("sh_old"))
+    cand.join(newSh, Seq("new_id"))
+      .join(corpusSh, Seq("corpus_id"))
+      .withColumn("jac",
+        round(array_jaccard(col("sh_new"), col("sh_old")), 3))
+      .filter(col("jac") >= threshold)
+      .select(col("new_id"), col("corpus_id"), col("jac"))
   }
 
   /** SimHash near-dup clustering: 64-bit sketch (map-only), candidates =
@@ -238,7 +236,8 @@ object Dedup {
     * least one chunk equal), verified by exact hamming distance. */
   def simhashDedup(df: DataFrame, idCol: String, textCol: String,
                    maxHamming: Int = 3, maxBucket: Int = 64): DataFrame = {
-    val ids = fanOut(df.select(col(idCol).as("id"), col(textCol).as("text")))
+    val ids = Sources.fanOut(
+        df.select(col(idCol).as("id"), col(textCol).as("text")), col("id"))
       .select(col("id"), simhash(col("text")).as("sh"))
 
     // chunk c key = (sh >>> 16c) & 0xffff; persist+count so the self-join
@@ -307,22 +306,6 @@ object Dedup {
   }
 
   // ---------------------------------------------------------- internals --
-
-  /** Sketching is CPU-bound: when the input has fewer partitions than the
-    * cluster has slots (tiny files locally; a handful of giant files at
-    * scale), repartition up so the map-only sketch pass uses every core.
-    * A no-op when the source is already well-partitioned.
-    *
-    * The partition probe uses `inputFiles` (a FileIndex listing — already
-    * cached by the read) rather than `df.rdd.getNumPartitions`, which
-    * forces full physical planning + RDD DAG construction just to read a
-    * count. A file-backed source with ≥ slots files has ≥ slots scan
-    * partitions; a non-file source (empty listing) conservatively fans out. */
-  private def fanOut(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    val nFiles = try df.inputFiles.length catch { case _: Exception => 0 }
-    if (nFiles >= target) df else df.repartition(target)
-  }
 
   /** Connected components over the verified edge set.
     *

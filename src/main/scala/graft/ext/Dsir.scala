@@ -100,7 +100,7 @@ object Dsir {
       .agg(count(lit(1)).as("n_tok"),
         sum(col("lambda_milli")).as("dsir_milli"))
     // doc-count-sized result; checkpoint eagerly so the corpus-scale
-    // token cache can drop now (the MarketBasket/SimilarityJoin pattern)
+    // token cache can drop now (the SimilarityJoin pattern)
     try scored.localCheckpoint(true)
     finally toks.unpersist(blocking = false)
   }

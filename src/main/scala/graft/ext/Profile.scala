@@ -41,12 +41,10 @@ object Profile {
     * are all map-side partial and Expand-free, so they share a single
     * aggregate over the union of the pruned columns — r13, was one scan
     * per column serialized through per-column checkpoints) plus one
-    * two-level distinct aggregate per column. The moments frame is
-    * materialized once (localCheckpoint) because six union legs per
-    * column reference it; each distinct aggregate feeds exactly one leg,
-    * so those stay LAZY union subtrees — the final query runs them as
-    * independent pruned scans inside one job instead of N sequential
-    * driver-blocking checkpoint jobs.
+    * two-level distinct aggregate per column, all in one plan: the six
+    * moment metrics of every column are structs over the 1-row moments
+    * frame, which `inline` turns into rows, and each distinct aggregate
+    * is its own union leg.
     */
   def profile(df: DataFrame, numericCols: Seq[String],
               stringCols: Seq[String]): DataFrame = {
@@ -58,26 +56,27 @@ object Profile {
       min(v(c, isStr)).as(s"mn_$c"), max(v(c, isStr)).as(s"mx_$c"),
       sum(v(c, isStr).cast("decimal(38,6)")).as(s"s_$c"))
     }
-    val stats = df.agg(momentCols.head, momentCols.tail: _*)
-      .localCheckpoint(true)
-    val rows = cols.flatMap { case (c, isStr) =>
-      val dist = df.select(col(c).as("__c"))
+    def row(c: String, metric: String, value: Column): Column =
+      struct(lit(c).as("col_name"), lit(metric).as("metric"),
+        value.cast("double").as("value"))
+    val moments = df.agg(momentCols.head, momentCols.tail: _*)
+      .select(inline(array(cols.flatMap { case (c, isStr) => Seq(
+        row(c, "count", col(s"cnt_$c")),
+        row(c, "nulls", col(s"n_$c") - col(s"cnt_$c")),
+        row(c, "completeness",
+          round(col(s"cnt_$c").cast("double") / col(s"n_$c"), 6)),
+        row(c, if (isStr) "min_len" else "min", col(s"mn_$c")),
+        row(c, if (isStr) "max_len" else "max", col(s"mx_$c")),
+        row(c, if (isStr) "avg_len" else "mean",
+          round(col(s"s_$c").cast("double") / col(s"cnt_$c"), 6)))
+    }: _*)))
+    val distincts = cols.map { case (c, _) =>
+      df.select(col(c).as("__c"))
         .agg(count_distinct(col("__c")).as("dv"))
-      def row(metric: String, value: Column, from: DataFrame): DataFrame =
-        from.select(lit(c).as("col_name"), lit(metric).as("metric"),
-          value.cast("double").as("value"))
-      Seq(
-        row("count", col(s"cnt_$c"), stats),
-        row("nulls", col(s"n_$c") - col(s"cnt_$c"), stats),
-        row("completeness",
-          round(col(s"cnt_$c").cast("double") / col(s"n_$c"), 6), stats),
-        row("distinct", col("dv"), dist),
-        row(if (isStr) "min_len" else "min", col(s"mn_$c"), stats),
-        row(if (isStr) "max_len" else "max", col(s"mx_$c"), stats),
-        row(if (isStr) "avg_len" else "mean",
-          round(col(s"s_$c").cast("double") / col(s"cnt_$c"), 6), stats))
+        .select(lit(c).as("col_name"), lit("distinct").as("metric"),
+          col("dv").cast("double").as("value"))
     }
-    rows.reduce(_ unionByName _)
+    (moments +: distincts).reduce(_ unionByName _)
   }
 
   /** One audit row: (check, n_checked, n_violations). */

@@ -1,6 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Exact distributional statistics — the feature-engineering /
@@ -21,9 +22,10 @@ import org.apache.spark.sql.functions._
   * aggregation — the correlation matrix reduces to a single 1-row frame
   * of O(k²) exact moments (k = #columns, so 20 sums for k=4 — driver-free
   * and broadcast-free), mutual information to one (a,b) grouped count
-  * plus two marginal aggregates of at most |domain| rows, Benford to a
-  * 9-row digit aggregate. Nothing here is quadratic in rows and nothing
-  * collects.
+  * whose marginals and total are window sums over its cells in one task
+  * (so both columns must be categorical: the task holds |A|·|B| rows),
+  * Benford to a 9-row digit aggregate with a window total. Nothing here
+  * is quadratic in rows and nothing collects.
   */
 object Stats {
 
@@ -105,19 +107,18 @@ object Stats {
   def mutualInfoCells(df: DataFrame, aCol: String, bCol: String): DataFrame = {
     val base = df.select(col(aCol).as("a"), col(bCol).as("b"))
     // ONE scan: the joint table is the sufficient statistic — marginals
-    // and the total are exact sums over its <=|A|*|B| rows, so the input
-    // is read once and everything downstream is cell-count arithmetic
+    // and the total are exact window sums over its <=|A|*|B| rows, so the
+    // input is read once and everything downstream is cell-count
+    // arithmetic in the same plan
     val joint = base.groupBy(col("a"), col("b"))
-      .agg(count(lit(1)).as("n_ab")).localCheckpoint(true)
-    val ma = joint.groupBy(col("a")).agg(sum(col("n_ab")).as("n_a"))
-    val mb = joint.groupBy(col("b")).agg(sum(col("n_ab")).as("n_b"))
-    val n = joint.agg(sum(col("n_ab")).as("n_total"))
+      .agg(count(lit(1)).as("n_ab"))
+      .withColumn("n_a", sum(col("n_ab")).over(Window.partitionBy(col("a"))))
+      .withColumn("n_b", sum(col("n_ab")).over(Window.partitionBy(col("b"))))
+      .withColumn("n_total", sum(col("n_ab")).over())
+      // a NULL category counts toward the marginals and N but is no cell
+      .filter(col("a").isNotNull && col("b").isNotNull)
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    joint
-      .join(broadcast(ma), "a")
-      .join(broadcast(mb), "b")
-      .crossJoin(broadcast(n))
-      .select(col("a"), col("b"), col("n_ab"),
+    joint.select(col("a"), col("b"), col("n_ab"),
         round(
           log(2.0,
             (dec(col("n_ab")) * col("n_total")).cast("double") /
@@ -145,12 +146,10 @@ object Stats {
       .select(substring(centi(col(valueCol)).cast("string"), 1, 1)
         .cast("long").as("digit"))
       .groupBy(col("digit")).agg(count(lit(1)).as("n"))
-      // <=9 rows feeding both the output and its own total: one scan
-      .localCheckpoint(true)
-    val total = digits.agg(sum(col("n")).as("n_total"))
+      // <=9 rows: the total is a window sum over them in the same plan
+      .withColumn("n_total", sum(col("n")).over())
     val p = log(10.0, lit(1.0) + lit(1.0) / col("digit"))
-    digits.crossJoin(broadcast(total))
-      .select(col("digit"), col("n"),
+    digits.select(col("digit"), col("n"),
         round(col("n").cast("double") / col("n_total"), 6).as("share"),
         round(p, 6).as("benford_p"),
         round(

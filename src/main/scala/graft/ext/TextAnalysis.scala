@@ -706,17 +706,18 @@ object TextAnalysis {
           .as("word"))
       .groupBy(col("source"), col("word"))
       .agg(count(lit(1)).as("c_sw"))
-      .localCheckpoint(true) // consumed three times below
+    // sw's three consumers share its exchange (ReuseExchange); the token
+    // total is a window sum over the |sources|-row per-source frame
     val perWord = sw.groupBy(col("word")).agg(sum(col("c_sw")).as("c_w"))
     val perSrc = sw.groupBy(col("source")).agg(sum(col("c_sw")).as("n_s"))
-    val total = perSrc.agg(sum(col("n_s"))).head().getLong(0)
+      .withColumn("n_total", sum(col("n_s")).over())
     sw.join(perWord, "word")
       .join(broadcast(perSrc), "source")
       .groupBy(col("source"))
       .agg(
         first(col("n_s")).as("n_tokens"),
         sum((col("c_sw") / col("n_s")) *
-          log((col("c_sw") * lit(total.toDouble)) /
+          log((col("c_sw") * col("n_total").cast("double")) /
             (col("n_s") * col("c_w")))).as("__kl"))
       .select(col("source"), col("n_tokens"),
         round(col("__kl") * 1000, 2).as("kl_mnat"))

@@ -208,7 +208,7 @@ object TimeSeries {
     require(lags.nonEmpty && lags.forall(_ > 0), s"bad lags: $lags")
     val dec = (c: Column) => c.cast("decimal(38,0)")
     // the grid table feeds one join pair per lag plus the stats pass:
-    // materialize once (MarketBasket/TfIdf idiom)
+    // materialize once (the TfIdf idiom)
     val base = series.select(col(keyCol).as("k"), col(tCol).as("t"),
       dec(col(xCol)).as("x")).localCheckpoint(true)
     val stats = base.groupBy(col("k")).agg(

@@ -892,7 +892,7 @@ object AnalyticsQueries {
     * exact counts and per-cell PMI / MI contribution — per-cell emission
     * keeps every double derived from four exact longs (a cross-cell sum
     * would be layout-ordered). The joint distribution is one grouped
-    * count; marginals broadcast. */
+    * count; marginals and total are window sums over its cells. */
   val mutualInfoQ = Q(
     "q_x_mutual_info",
     "Mutual information cells: segment x nation PMI from exact counts",

@@ -46,9 +46,8 @@ object StreamingQueries {
     * Safe here because the driver contract runs queries SEQUENTIALLY
     * (Verify foreach / Bench reps); this is not a per-reader conf mutation
     * under concurrent execution. On a real cluster you'd size
-    * spark.sql.shuffle.partitions to the state volume instead — hence the
-    * `spark.graft.stream.statePartitions` conf in [[runToMemory]]
-    * (production knob; local default 8).
+    * spark.sql.shuffle.partitions to the state volume instead; here every
+    * stream runs with this fixed count.
     *
     * r14 measured and REJECTED the candidate drain-constant levers, all
     * via interleaved same-JVM sweeps (OpProbeMain streamsweep — variants
@@ -77,10 +76,12 @@ object StreamingQueries {
     * `min(8, defaultParallelism)` (4 here) did not pay: six alternating
     * pipeline_barriers pairs (seeds 1541-1546, 25 s runs) gave wall_s
     * medians of 3.83 s at 8 and 3.98 s at 4, with 4 winning 3 of 6. */
-  private def withStatePartitions[A](s: SparkSession, n: String)(f: => A): A = {
+  val StatePartitions = 8
+
+  private def withStatePartitions[A](s: SparkSession)(f: => A): A = {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
-    s.conf.set(key, n)
+    s.conf.set(key, StatePartitions.toString)
     try f finally s.conf.set(key, prev)
   }
 
@@ -95,8 +96,7 @@ object StreamingQueries {
     * [[graft.tools.Run]] in progress (its `RunRecord.stream`). */
   private def runToMemory(s: SparkSession, out: DataFrame, mode: String,
                           prefix: String): DataFrame =
-    withStatePartitions(s,
-      s.conf.get("spark.graft.stream.statePartitions", "8")) {
+    withStatePartitions(s) {
       val name = s"${prefix}_${nextId.incrementAndGet()}"
       val q = out.writeStream.format("memory").queryName(name)
         .outputMode(mode).start()

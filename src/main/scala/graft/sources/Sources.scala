@@ -61,28 +61,30 @@ object Sources {
         df.withColumn(f.name, col(f.name).cast(TimestampType)))
   }
 
-  /** S7 — object listing (the boto3 `bucket.objects.filter(Prefix=…)`
-    * probe, Fiddle cell 33) via the Hadoop FS API: works identically on
-    * file://, s3a://, hdfs:// — the 100 TB layout discovery primitive. */
-  /** Fan a CPU-bound map chain out to every core (r13 optimization; the
-    * Dedup.fanOut idiom promoted to a shared helper). The gate tables are
-    * ONE parquet file = one row group = ONE scan task, so expensive
-    * per-row work above the scan (codec encode/decode, tokenize/shingle,
-    * sketch signatures, wide decimal products) otherwise runs
-    * single-threaded regardless of session cores. Hash-repartitions by
+  /** Fan a CPU-bound map chain out to every core (r13 optimization). The
+    * gate tables are ONE parquet file = one row group = ONE scan task, so
+    * expensive per-row work above the scan (codec encode/decode,
+    * tokenize/shingle, sketch signatures, wide decimal products) otherwise
+    * runs single-threaded regardless of session cores. Hash-repartitions by
     * `key` (deterministic, no round-robin pre-sort) with an EXPLICIT
     * partition count — AQE does not re-coalesce user-numbered
     * repartitions, so the fan-out survives tiny inputs. No-op at scale:
     * a source with >= defaultParallelism files keeps its scan layout, so
     * this is a small-input parallelism floor, not a cluster constant.
-    * Only worth inserting where per-row CPU dominates the exchange cost
-    * of one narrow (key + payload) shuffle. */
+    * The probe reads `inputFiles` (the read's cached FileIndex listing),
+    * not `df.rdd.getNumPartitions`, which would plan the whole query to
+    * read a count; a non-file source (empty listing) fans out. Only worth
+    * inserting where per-row CPU dominates the exchange cost of one
+    * narrow (key + payload) shuffle. */
   def fanOut(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     val nFiles = try df.inputFiles.length catch { case _: Exception => 0 }
     if (nFiles >= target) df else df.repartition(target, key)
   }
 
+  /** S7 — object listing (the boto3 `bucket.objects.filter(Prefix=…)`
+    * probe, Fiddle cell 33) via the Hadoop FS API: works identically on
+    * file://, s3a://, hdfs:// — the 100 TB layout discovery primitive. */
   def listObjects(spark: SparkSession, dir: String,
                   prefix: String = ""): Seq[String] = {
     val path = new org.apache.hadoop.fs.Path(dir)

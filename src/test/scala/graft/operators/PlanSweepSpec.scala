@@ -57,14 +57,10 @@ class PlanSweepSpec extends AnyFunSuite {
                                    // date; the 3-quartile cutoff row)
     "q_x_assoc_rules",             // single-row basket-universe count (the
                                    // support denominator) broadcast join
-    "q_x_mutual_info",             // single-row N-total broadcast join (the
-                                   // joint-distribution denominator)
-    "q_x_benford",                 // single-row digit-total broadcast join
-                                   // (the share/expectation denominator)
     "q_x_kneser_ney",              // single-row distinct-bigram total B
                                    // broadcast join (the continuation-
                                    // probability denominator; same shape
-                                   // as q_x_mutual_info/q_x_benford)
+                                   // as q_x_assoc_rules)
     "q_x_kn_doc_logprob",          // the same single-row distinct-bigram
                                    // total B broadcast join as
                                    // q_x_kneser_ney, on the scoring side

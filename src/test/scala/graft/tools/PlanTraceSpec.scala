@@ -64,7 +64,7 @@ class PlanTraceSpec extends AnyFunSuite {
   }
 
   test("PlanDumpMain: two dumps of one query are byte-identical") {
-    val q = Catalog.byName("q_x_assoc_rules")
+    val q = Catalog.byName("q_x_quantile_sketch_anchor")
     val first = PlanDumpMain.dump(spark, q, sfDir)
     graft.GraftSession.dropCachedBlocks(spark)
     val second = PlanDumpMain.dump(spark, q, sfDir)
