@@ -104,13 +104,11 @@ object GraftSession {
     *    the first one whole, so each broadcast relation and each stage's
     *    task binary (also a broadcast) cost a 4 MiB array even when they
     *    serialize to a few kilobytes. */
-  def builder(appName: String, cpus: String,
-              shufflePartitions: Option[String] = None): SparkSession.Builder =
+  def builder(appName: String, cpus: String): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
-      .config("spark.sql.shuffle.partitions",
-        shufflePartitions.getOrElse(cpus))
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       // Production-typical broadcast budget (Spark's 10 MB default is
       // sized for small executors; at 128 GiB a 64 MB dim broadcast is

@@ -26,19 +26,27 @@ object TopKAgg {
 
   /** Mutable bounded heap: root = worst kept element ("worse" =
     * lower score, then higher id), so insertion when full is a single
-    * root-replace + sift-down. */
-  final class Heap(val k: Int) {
+    * root-replace + sift-down. With `withPayload` each entry carries a
+    * payload array alongside ([[TopKPayloadAgg]]); without, `payloads` is
+    * null and stays untouched. */
+  abstract class BoundedHeap(val k: Int, withPayload: Boolean) {
     val scores = new Array[Double](k)
     val ids = new Array[Long](k)
+    val payloads: Array[Array[Long]] = if (withPayload) new Array(k) else null
     var size = 0
 
     @inline private def worse(s1: Double, i1: Long, s2: Double, i2: Long): Boolean =
       s1 < s2 || (s1 == s2 && i1 > i2)
 
-    def insert(score: Double, id: Long): Unit = {
+    @inline private def put(i: Int, score: Double, id: Long, payload: Array[Long]): Unit = {
+      scores(i) = score; ids(i) = id
+      if (withPayload) payloads(i) = payload
+    }
+
+    protected def insertEntry(score: Double, id: Long, payload: Array[Long]): Unit = {
       if (size < k) {
         var i = size
-        scores(i) = score; ids(i) = id; size += 1
+        put(i, score, id, payload); size += 1
         // sift up (heap ordered by worseness: parent worse than children)
         while (i > 0) {
           val p = (i - 1) / 2
@@ -47,7 +55,7 @@ object TopKAgg {
           } else return
         }
       } else if (k > 0 && worse(scores(0), ids(0), score, id)) {
-        scores(0) = score; ids(0) = id
+        put(0, score, id, payload)
         siftDown(0)
       }
     }
@@ -55,6 +63,7 @@ object TopKAgg {
     private def swap(a: Int, b: Int): Unit = {
       val ts = scores(a); scores(a) = scores(b); scores(b) = ts
       val ti = ids(a); ids(a) = ids(b); ids(b) = ti
+      if (withPayload) { val tp = payloads(a); payloads(a) = payloads(b); payloads(b) = tp }
     }
 
     private def siftDown(i0: Int): Unit = {
@@ -69,10 +78,17 @@ object TopKAgg {
       }
     }
 
+    /** Entry slots best-first: (score desc, id asc). */
+    protected def bestFirst: Array[Int] =
+      (0 until size).toArray.sortBy(i => (-scores(i), ids(i)))
+  }
+
+  /** The heap of (score, id) entries. */
+  final class Heap(k: Int) extends BoundedHeap(k, withPayload = false) {
+    def insert(score: Double, id: Long): Unit = insertEntry(score, id, null)
+
     /** Entries sorted best-first: (score desc, id asc). */
-    def sorted: Array[(Long, Double)] =
-      (0 until size).map(i => (ids(i), scores(i))).toArray
-        .sortBy { case (id, s) => (-s, id) }
+    def sorted: Array[(Long, Double)] = bestFirst.map(i => (ids(i), scores(i)))
   }
 
   private val elementType = StructType(Seq(

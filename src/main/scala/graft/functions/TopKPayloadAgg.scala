@@ -33,56 +33,14 @@ import org.apache.spark.sql.types._
   */
 object TopKPayloadAgg {
 
-  /** Bounded heap over (score, id, payload): root = worst kept element
-    * ("worse" = lower score, then higher id) — [[TopKAgg.Heap]] with a
-    * payload array carried alongside each entry. */
-  final class PHeap(val k: Int) {
-    val scores = new Array[Double](k)
-    val ids = new Array[Long](k)
-    val payloads = new Array[Array[Long]](k)
-    var size = 0
-
-    @inline private def worse(s1: Double, i1: Long, s2: Double, i2: Long): Boolean =
-      s1 < s2 || (s1 == s2 && i1 > i2)
-
-    def insert(score: Double, id: Long, payload: Array[Long]): Unit = {
-      if (size < k) {
-        var i = size
-        scores(i) = score; ids(i) = id; payloads(i) = payload; size += 1
-        while (i > 0) {
-          val p = (i - 1) / 2
-          if (worse(scores(i), ids(i), scores(p), ids(p))) {
-            swap(i, p); i = p
-          } else return
-        }
-      } else if (k > 0 && worse(scores(0), ids(0), score, id)) {
-        scores(0) = score; ids(0) = id; payloads(0) = payload
-        siftDown(0)
-      }
-    }
-
-    private def swap(a: Int, b: Int): Unit = {
-      val ts = scores(a); scores(a) = scores(b); scores(b) = ts
-      val ti = ids(a); ids(a) = ids(b); ids(b) = ti
-      val tp = payloads(a); payloads(a) = payloads(b); payloads(b) = tp
-    }
-
-    private def siftDown(i0: Int): Unit = {
-      var i = i0
-      while (true) {
-        val l = 2 * i + 1; val r = 2 * i + 2
-        var w = i
-        if (l < size && worse(scores(l), ids(l), scores(w), ids(w))) w = l
-        if (r < size && worse(scores(r), ids(r), scores(w), ids(w))) w = r
-        if (w == i) return
-        swap(i, w); i = w
-      }
-    }
+  /** The [[TopKAgg.BoundedHeap]] of (score, id, payload) entries. */
+  final class PHeap(k: Int) extends TopKAgg.BoundedHeap(k, withPayload = true) {
+    def insert(score: Double, id: Long, payload: Array[Long]): Unit =
+      insertEntry(score, id, payload)
 
     /** Entries sorted best-first: (score desc, id asc). */
     def sorted: Array[(Long, Double, Array[Long])] =
-      (0 until size).map(i => (ids(i), scores(i), payloads(i))).toArray
-        .sortBy { case (id, s, _) => (-s, id) }
+      bestFirst.map(i => (ids(i), scores(i), payloads(i)))
   }
 
   private val elementType = StructType(Seq(

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Compaction, Dsir, Similarity}
+import graft.operators.PipelineQueries.hexDigitSql
 import graft.sources.Sources
 
 /** Wave-8 curation operators — the corpus-selection and table-maintenance
@@ -19,10 +20,6 @@ object CurationQueries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Sources.table(s, dir, name)
-
-  /** DuckDB-side value of one hex digit of an md5 string (no conv()). */
-  private def hexDigitSql(expr: String, pos: Int): String =
-    s"(strpos('0123456789abcdef', substring($expr, $pos, 1)) - 1)"
 
   /** DSIR importance weights toward the English slice ([[graft.ext.Dsir]]).
     * The synthetic corpus draws every lang from one vocab, so the weights

@@ -20,7 +20,7 @@ object PipelineQueries {
     Sources.table(s, dir, name)
 
   /** DuckDB-side value of one hex digit of an md5 string (no conv()). */
-  private def hexDigitSql(expr: String, pos: Int): String =
+  private[operators] def hexDigitSql(expr: String, pos: Int): String =
     s"(strpos('0123456789abcdef', substring($expr, $pos, 1)) - 1)"
 
   private val md5Doc = "md5(CAST(doc_id AS VARCHAR))"

@@ -10,34 +10,20 @@ import graft.tools.Run
   * streaming operators are spec-verified in EventsStreamSpec; these entries
   * additionally run them under the driver's correctness gate: a bounded
   * fixture streamed through the real `readStream → transform → memory sink`
-  * path must reproduce the batch answer DuckDB computes.
+  * path must reproduce the batch answer DuckDB computes. Each stream reads
+  * its table where it lies ([[inPlace]]) and returns the memory sink's own
+  * rows ([[runToMemory]]): the drain stages no input and copies no output.
   */
 object StreamingQueries {
 
   private val nextId = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Run the streaming transform `f` on a streamable directory holding
-    * `table` from `dir`. A generated scale dir (ScaleSmokeMain gensf)
-    * writes a parquet DIRECTORY of part files, streamed as-is. The driver
-    * testdata keeps each table as a single FILE, which the file stream
-    * source can't open in place: it goes behind a symlink (no copy) in a
-    * fresh temp dir, removed once the query has drained (the file source
-    * only reads during the run; the returned frame is materialized off
-    * it). Bench reps reuse one JVM, so a leaked dir would accumulate. */
-  private def withStaged(dir: String, table: String)(f: String => DataFrame): DataFrame = {
-    val p = java.nio.file.Paths.get(dir, s"$table.parquet")
-    if (java.nio.file.Files.isDirectory(p)) f(p.toString)
-    else {
-      val stage = java.nio.file.Files.createTempDirectory("graft-stream-q")
-      val link = stage.resolve(s"$table.parquet")
-      // absolutize: a relative target would resolve against the temp dir
-      java.nio.file.Files.createSymbolicLink(link, p.toAbsolutePath)
-      try f(stage.toString) finally {
-        java.nio.file.Files.deleteIfExists(link)
-        java.nio.file.Files.deleteIfExists(stage)
-      }
-    }
-  }
+  /** Where the file stream source reads `table` of `dir`: in place. The
+    * source rejects a plain file path (`basePath` must be a directory) but
+    * takes a one-name glob, which matches a table kept as one parquet
+    * file (the testdata) and a directory of part files (a generated scale
+    * dir, ScaleSmokeMain gensf) alike. */
+  private def inPlace(dir: String, table: String): String = s"$dir/{$table.parquet}"
 
   /** Stateful streaming ops allocate one state store PER shuffle partition
     * per operator side — at the bench's bounded fixture, 32-way state means
@@ -85,19 +71,19 @@ object StreamingQueries {
     try f finally s.conf.set(key, prev)
   }
 
-  /** Run a streaming frame to completion into a memory sink; materialize
-    * the result OFF the sink and drop the sink table, so repeated
-    * invocations in one JVM (bench reps) don't accumulate driver-held
-    * sink rows. For the same reason the stopped run's state-store
+  /** Run a streaming frame to completion into a memory sink and return
+    * the sink's own rows: the frame's plan reads them where the sink holds
+    * them in memory (a `LocalTableScan`), so the drain copies nothing.
+    * The sink's view is dropped at once, and the stopped run's state-store
     * providers are unloaded at once instead of at the next store
-    * maintenance: left loaded, every run kept its providers (16 for
+    * maintenance, so repeated runs in one JVM (bench reps) leave neither
+    * behind: left loaded, every run kept its providers (16 for
     * q_s_stream_distinct) and their state rows on a long-lived JVM's heap.
     * Before the stop, the query's own progress reports go to the
     * [[graft.tools.Run]] in progress (its `RunRecord.stream`). */
-  private def runToMemory(s: SparkSession, out: DataFrame, mode: String,
-                          prefix: String): DataFrame =
+  private def runToMemory(s: SparkSession, out: DataFrame, mode: String): DataFrame =
     withStatePartitions(s) {
-      val name = s"${prefix}_${nextId.incrementAndGet()}"
+      val name = s"graft_stream_${nextId.incrementAndGet()}"
       val q = out.writeStream.format("memory").queryName(name)
         .outputMode(mode).start()
       try {
@@ -107,7 +93,7 @@ object StreamingQueries {
         q.stop()
         GraftStateStores.unload(q.runId)
       }
-      val result = s.table(name).localCheckpoint(true)
+      val result = s.table(name)
       s.catalog.dropTempView(name)
       result
     }
@@ -122,11 +108,11 @@ object StreamingQueries {
   val streamDedup = Q(
     "q_s_stream_dedup",
     "Streaming dedup (dropDuplicatesWithinWatermark) key-set = batch DISTINCT",
-    (s, dir) => withStaged(dir, "events") { staged =>
-      val src = graft.streaming.EventsStream.readEvents(s, staged)
+    (s, dir) => {
+      val src = graft.streaming.EventsStream.readEvents(s, inPlace(dir, "events"))
       val out = graft.streaming.EventsStream
         .dedupStream(src, Seq("user_id", "event_type"), watermark = "365 days")
-      runToMemory(s, out, "append", "graft_stream_dedup")
+      runToMemory(s, out, "append")
         .select(col("user_id"), col("event_type"))
     },
     Some("SELECT DISTINCT user_id, event_type FROM events"))
@@ -138,10 +124,10 @@ object StreamingQueries {
   val streamWindow = Q(
     "q_s_stream_window",
     "Streaming watermarked hourly windows = batch GROUP BY date_trunc",
-    (s, dir) => withStaged(dir, "events") { staged =>
-      val src = graft.streaming.EventsStream.readEvents(s, staged)
+    (s, dir) => {
+      val src = graft.streaming.EventsStream.readEvents(s, inPlace(dir, "events"))
       val out = graft.streaming.EventsStream.windowedCounts(src)
-      runToMemory(s, out, "complete", "graft_stream_win")
+      runToMemory(s, out, "complete")
         .select(col("window_start"), col("event_type"), col("n"),
           round(col("sum_value"), 2).as("sum_value"))
     },
@@ -158,11 +144,11 @@ object StreamingQueries {
   val streamJoin = Q(
     "q_s_stream_join",
     "Stream-stream interval join (click→purchase) = batch self-join",
-    (s, dir) => withStaged(dir, "events") { staged =>
-      val src = graft.streaming.EventsStream.readEvents(s, staged)
+    (s, dir) => {
+      val src = graft.streaming.EventsStream.readEvents(s, inPlace(dir, "events"))
       val out = graft.streaming.EventsStream
         .clickToPurchaseJoin(src, windowHours = 24, watermark = "365 days")
-      runToMemory(s, out, "append", "graft_stream_join")
+      runToMemory(s, out, "append")
     },
     Some("""SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id
            | FROM events c JOIN events p ON c.user_id = p.user_id
@@ -188,12 +174,12 @@ object StreamingQueries {
   val streamJoinCapped = Q(
     "q_s_stream_join_capped",
     "Budgeted stream-stream interval join = batch self-join + zero audits",
-    (s, dir) => withStaged(dir, "events") { staged =>
-      val src = graft.streaming.EventsStream.readEvents(s, staged)
+    (s, dir) => {
+      val src = graft.streaming.EventsStream.readEvents(s, inPlace(dir, "events"))
       val out = graft.streaming.EventsStream
         .intervalJoinBudgeted(src, windowHours = 24,
           maxPairsPerPurchase = 1 << 20).toDF()
-      runToMemory(s, out, "append", "graft_stream_join_cap")
+      runToMemory(s, out, "append")
     },
     Some("""WITH m AS (SELECT max(epoch_ms(ts)) - 60000 AS wm FROM events)
            | SELECT c.user_id, c.event_id AS click_id,
@@ -212,13 +198,13 @@ object StreamingQueries {
   val streamEnrich = Q(
     "q_s_stream_enrich",
     "Stream-static broadcast enrichment = batch dim join",
-    (s, dir) => withStaged(dir, "events") { staged =>
-      val src = graft.streaming.EventsStream.readEvents(s, staged)
+    (s, dir) => {
+      val src = graft.streaming.EventsStream.readEvents(s, inPlace(dir, "events"))
       val dim = graft.sources.Sources.table(s, dir, "customer")
       val out = graft.streaming.EventsStream
         .enrichStatic(src, dim, "user_id", "c_custkey", Seq("c_mktsegment"))
         .select(col("event_id"), col("user_id"), col("c_mktsegment"))
-      runToMemory(s, out, "append", "graft_stream_enrich")
+      runToMemory(s, out, "append")
     },
     Some("""SELECT e.event_id, e.user_id, c.c_mktsegment
            | FROM events e JOIN customer c ON e.user_id = c.c_custkey"""
@@ -241,11 +227,11 @@ object StreamingQueries {
   val streamSession = Q(
     "q_s_stream_session",
     "Stateful streaming gap-sessions = batch islands (emission-pinned)",
-    (s, dir) => withStaged(dir, "events") { staged =>
-      val src = graft.streaming.EventsStream.readEvents(s, staged)
+    (s, dir) => {
+      val src = graft.streaming.EventsStream.readEvents(s, inPlace(dir, "events"))
       val out = graft.streaming.EventsStream
         .sessionWindows(src, gapMinutes = 30).toDF()
-      runToMemory(s, out, "append", "graft_stream_sess")
+      runToMemory(s, out, "append")
         .select(col("user_id"), col("start"), col("end"),
           col("n_events").cast("long").as("n_events"))
     },
@@ -282,10 +268,10 @@ object StreamingQueries {
   val streamAsof = Q(
     "q_s_stream_asof",
     "Streaming as-of attribution (latest click per purchase) = batch window",
-    (s, dir) => withStaged(dir, "events") { staged =>
-      val src = graft.streaming.EventsStream.readEvents(s, staged)
+    (s, dir) => {
+      val src = graft.streaming.EventsStream.readEvents(s, inPlace(dir, "events"))
       val out = graft.streaming.EventsStream.asofAttribution(src).toDF()
-      runToMemory(s, out, "append", "graft_stream_asof")
+      runToMemory(s, out, "append")
     },
     Some("""WITH m AS (SELECT max(epoch_ms(ts)) - 60000 AS wm FROM events),
            | u AS (SELECT user_id, epoch_ms(ts) AS ms, event_id,
@@ -313,10 +299,10 @@ object StreamingQueries {
   val streamHeavy = Q(
     "q_s_stream_heavy",
     "Streaming windowed SpaceSaving top-k = exact counts under capacity",
-    (s, dir) => withStaged(dir, "events") { staged =>
-      val src = graft.streaming.EventsStream.readEvents(s, staged)
+    (s, dir) => {
+      val src = graft.streaming.EventsStream.readEvents(s, inPlace(dir, "events"))
       val out = graft.streaming.EventsStream.windowedHeavyHitters(src)
-      val raw = runToMemory(s, out, "complete", "graft_stream_heavy")
+      val raw = runToMemory(s, out, "complete")
       val entries = raw.filter(size(col("sk")) > 0)
         .select(col("window_start"), explode(expr(
           "transform(sequence(0, int(size(sk)/3) - 1), " +
@@ -344,10 +330,10 @@ object StreamingQueries {
   val streamScd2 = Q(
     "q_s_stream_scd2",
     "Streaming SCD2 versions = batch history, closed below the watermark",
-    (s, dir) => withStaged(dir, "events") { staged =>
-      val src = graft.streaming.EventsStream.readEvents(s, staged)
+    (s, dir) => {
+      val src = graft.streaming.EventsStream.readEvents(s, inPlace(dir, "events"))
       val out = graft.streaming.EventsStream.scd2Stream(src).toDF()
-      runToMemory(s, out, "append", "graft_stream_scd2")
+      runToMemory(s, out, "append")
     },
     Some("""WITH m AS (SELECT (max(epoch_ms(ts)) - 60000) * 1000 AS wmus
            |   FROM events),
@@ -382,10 +368,10 @@ object StreamingQueries {
   val streamEwma = Q(
     "q_s_stream_ewma",
     "Streaming quiet-close EWMA levels = batch trailing-16 window",
-    (s, dir) => withStaged(dir, "events") { staged =>
-      val src = graft.streaming.EventsStream.readEvents(s, staged)
+    (s, dir) => {
+      val src = graft.streaming.EventsStream.readEvents(s, inPlace(dir, "events"))
       val out = graft.streaming.EventsStream.ewmaStream(src).toDF()
-      runToMemory(s, out, "append", "graft_stream_ewma")
+      runToMemory(s, out, "append")
     },
     Some("""WITH e AS (SELECT user_id, epoch_us(ts) AS eus,
            |     epoch_ms(ts) AS ems, event_id,
@@ -425,10 +411,10 @@ object StreamingQueries {
   val streamFunnel = Q(
     "q_s_stream_funnel",
     "Streaming ordered funnel stage per user = batch funnel, final users",
-    (s, dir) => withStaged(dir, "events") { staged =>
-      val src = graft.streaming.EventsStream.readEvents(s, staged)
+    (s, dir) => {
+      val src = graft.streaming.EventsStream.readEvents(s, inPlace(dir, "events"))
       val out = graft.streaming.EventsStream.funnelStream(src).toDF()
-      runToMemory(s, out, "append", "graft_stream_funnel")
+      runToMemory(s, out, "append")
     },
     Some("""WITH m AS (SELECT max(epoch_ms(ts)) - 60000 AS wm FROM events),
            | e AS (SELECT user_id, event_type, ts, epoch_ms(ts) AS ems
@@ -465,10 +451,10 @@ object StreamingQueries {
   val streamDistinct = Q(
     "q_s_stream_distinct",
     "Streaming dedup+window chain = batch COUNT(DISTINCT) per hour",
-    (s, dir) => withStaged(dir, "events") { staged =>
-      val src = graft.streaming.EventsStream.readEvents(s, staged)
+    (s, dir) => {
+      val src = graft.streaming.EventsStream.readEvents(s, inPlace(dir, "events"))
       val out = graft.streaming.EventsStream.windowedDistinctUsers(src)
-      runToMemory(s, out, "append", "graft_stream_distinct")
+      runToMemory(s, out, "append")
     },
     Some("""WITH m AS (SELECT max(epoch_ms(ts)) - 3900000 AS wm FROM events)
            | SELECT date_trunc('hour', ts) AS window_start,
@@ -493,10 +479,10 @@ object StreamingQueries {
   val streamHopping = Q(
     "q_s_stream_hopping",
     "Streaming sliding windows(1h,15m), append mode = finalized batch windows",
-    (s, dir) => withStaged(dir, "events") { staged =>
-      val src = graft.streaming.EventsStream.readEvents(s, staged)
+    (s, dir) => {
+      val src = graft.streaming.EventsStream.readEvents(s, inPlace(dir, "events"))
       val out = graft.streaming.EventsStream.hoppingCounts(src)
-      runToMemory(s, out, "append", "graft_stream_hop")
+      runToMemory(s, out, "append")
     },
     Some("""WITH m AS (SELECT max(epoch_ms(ts)) - 7200000 AS wm FROM events),
            | e AS (SELECT event_type, epoch_us(ts) AS us,
@@ -523,10 +509,10 @@ object StreamingQueries {
   val streamJoinOuter = Q(
     "q_s_stream_join_outer",
     "Streaming LEFT OUTER interval join = batch pairs + evicted NULL rows",
-    (s, dir) => withStaged(dir, "events") { staged =>
-      val src = graft.streaming.EventsStream.readEvents(s, staged)
+    (s, dir) => {
+      val src = graft.streaming.EventsStream.readEvents(s, inPlace(dir, "events"))
       val out = graft.streaming.EventsStream.clickToPurchaseLeftJoin(src)
-      runToMemory(s, out, "append", "graft_stream_join_outer")
+      runToMemory(s, out, "append")
     },
     Some("""WITH m AS (SELECT least(
            |     (SELECT max(epoch_ms(ts)) FROM events
@@ -567,15 +553,15 @@ object StreamingQueries {
   val streamLate = Q(
     "q_s_stream_late",
     "Streaming late-data quarantine = batch frontier-regression audit",
-    (s, dir) => withStaged(dir, "events") { staged =>
-      val src = graft.streaming.EventsStream.readEvents(s, staged)
+    (s, dir) => {
+      val src = graft.streaming.EventsStream.readEvents(s, inPlace(dir, "events"))
         .withColumn("arrival_seq",
           expr("((event_id DIV 50) * 7 + event_id % 7) * 10000000" +
             " + event_id"))
       val out = graft.streaming.EventsStream.lateQuarantine(
         src, "arrival_seq", latenessUs = 300L * 1000000L,
         watermark = "365 days")
-      runToMemory(s, out.toDF(), "append", "graft_stream_late")
+      runToMemory(s, out.toDF(), "append")
     },
     Some("""WITH a AS (SELECT user_id, event_id,
            |   date_trunc('microseconds', ts) AS ts,
@@ -602,11 +588,11 @@ object StreamingQueries {
   val streamBudget = Q(
     "q_s_stream_budget",
     "Streaming budget admission (take-while prefix) = batch cumsum cut",
-    (s, dir) => withStaged(dir, "events") { staged =>
-      val src = graft.streaming.EventsStream.readEvents(s, staged)
+    (s, dir) => {
+      val src = graft.streaming.EventsStream.readEvents(s, inPlace(dir, "events"))
       val out = graft.streaming.EventsStream
         .budgetAdmission(src, budgetCenti = 300000L)
-      runToMemory(s, out.toDF(), "append", "graft_stream_budget")
+      runToMemory(s, out.toDF(), "append")
     },
     Some("""WITH m AS (SELECT max(epoch_ms(ts)) - 60000 AS wm FROM events),
            | e AS (SELECT user_id, event_id, ts, epoch_ms(ts) AS ems,
@@ -638,7 +624,7 @@ object StreamingQueries {
   val streamDrift = Q(
     "q_s_stream_drift",
     "Streaming per-window rate-drift cells vs static expected rates",
-    (s, dir) => withStaged(dir, "events") { staged =>
+    (s, dir) => {
       val batchEv = graft.sources.Sources.table(s, dir, "events")
       val nh = batchEv.select(date_trunc("hour", col("ts")))
         .distinct().count()
@@ -647,9 +633,9 @@ object StreamingQueries {
         .select(col("event_type"),
           (col("c").cast("double") / lit(nh.toDouble))
             .as("exp_per_window"))
-      val src = graft.streaming.EventsStream.readEvents(s, staged)
+      val src = graft.streaming.EventsStream.readEvents(s, inPlace(dir, "events"))
       val out = graft.streaming.EventsStream.driftCells(src, expected)
-      runToMemory(s, out, "append", "graft_stream_drift")
+      runToMemory(s, out, "append")
     },
     Some("""WITH m AS (SELECT max(epoch_ms(ts)) - 7200000 AS wm FROM events),
            | h AS (SELECT count(DISTINCT date_trunc('hour', ts)) AS nh FROM events),
@@ -672,10 +658,10 @@ object StreamingQueries {
   val streamSample = Q(
     "q_s_stream_sample",
     "Streaming per-window E-S weighted sample = batch key ranking",
-    (s, dir) => withStaged(dir, "events") { staged =>
-      val src = graft.streaming.EventsStream.readEvents(s, staged)
+    (s, dir) => {
+      val src = graft.streaming.EventsStream.readEvents(s, inPlace(dir, "events"))
       val out = graft.streaming.EventsStream.windowedWeightedSample(src)
-      runToMemory(s, out, "append", "graft_stream_sample")
+      runToMemory(s, out, "append")
     },
     Some("""WITH m AS (SELECT max(epoch_ms(ts)) - 7200000 AS wm FROM events),
            | e AS (SELECT date_trunc('hour', ts) AS window_start, event_id,
@@ -701,10 +687,10 @@ object StreamingQueries {
   val streamQuality = Q(
     "q_s_stream_quality",
     "Streaming quality+langid admission gate = batch scoring",
-    (s, dir) => withStaged(dir, "documents") { staged =>
-      val src = graft.streaming.DocsStream.readDocuments(s, staged)
+    (s, dir) => {
+      val src = graft.streaming.DocsStream.readDocuments(s, inPlace(dir, "documents"))
       val out = graft.streaming.DocsStream.qualityAdmission(src, minBp = 5000L)
-      runToMemory(s, out, "append", "graft_stream_quality")
+      runToMemory(s, out, "append")
     },
     Some("""WITH sc AS (SELECT doc_id,
            | len(list_filter(string_split(lower(text), ' '), t -> t IN

@@ -27,18 +27,20 @@ object PlanDumpMain {
     * fixed token each becomes: expression ids (`id#1196L` → `id#NL`),
     * lambda variable names (`lambda x_11` → `lambda x_N`), plan ids, RDD
     * ids of checkpointed frames, identity hashes of objects printed in a
-    * plan (`MinHashMerge$@1e8f20bf` → `MinHashMerge$@H`), UUIDs (state
-    * store and watermark ids of streaming queries) and temp-dir entries
-    * (the staging dirs of streaming queries). */
+    * plan (`MinHashMerge$@1e8f20bf` → `MinHashMerge$@H`), the JVM's
+    * names for lambda classes (`$Lambda$5677/0x00007f9f1555e660` →
+    * `$Lambda$N`), UUIDs (state store and watermark ids of streaming
+    * queries) and memory-sink names (`graft_stream_12` → `graft_stream_N`,
+    * numbered per JVM). */
   private val runSpecific = Seq(
     "#\\d+".r -> "#N",
     "\\b(lambda [a-z]+)_\\d+".r -> "$1_N",
     "plan_id=\\d+".r -> "plan_id=N",
     "RDD\\[\\d+\\]".r -> "RDD[N]",
     "(?<=[\\w$])@[0-9a-f]{5,8}\\b".r -> "@H",
+    "\\$Lambda\\$\\d+/0x[0-9a-f]+".r -> "\\$Lambda\\$N",
     "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}".r -> "UUID",
-    (java.util.regex.Pattern.quote(sys.props("java.io.tmpdir")) + "/[^/\\]\\s]+").r ->
-      "TMPDIR/T")
+    "\\bgraft_stream_\\d+".r -> "graft_stream_N")
 
   private def normalize(plan: String): String =
     runSpecific.foldLeft(plan) { case (p, (re, token)) => re.replaceAllIn(p, token) }
