@@ -150,16 +150,9 @@ object IncrementalAgg {
     // no checkpoint needed: the tmp write below fully materializes the
     // merge while stateDir is still intact; the renames only run after
     val merged = merge(upgraded(spark.read.parquet(stateDir)), delta, keys)
-    val (tmp, old) = Maintenance.stagingPaths(path, "incragg")
-    merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    batchId.foreach(writeMarker(fs, tmp, _))
-    if (fs.exists(old)) fs.delete(old, true)
-    if (!fs.rename(path, old))
-      throw new java.io.IOException(s"refresh: could not move $stateDir aside")
-    if (!fs.rename(tmp, path)) {
-      fs.rename(old, path) // roll back
-      throw new java.io.IOException(s"refresh: could not promote $tmp")
+    Maintenance.stagedSwap(fs, path, "incragg", "refresh") { tmp =>
+      merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+      batchId.foreach(writeMarker(fs, tmp, _))
     }
-    fs.delete(old, true)
   }
 }

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Table maintenance — the background jobs a 100 TB parquet warehouse
@@ -53,27 +53,17 @@ object Maintenance {
     // crash that leaves them behind) never sees the staging copies as
     // partitions — a `<leaf>__compact_tmp` sibling of `dt=...` WOULD be
     // discovered (it contains '=') and silently duplicate rows.
-    val (tmp, old) = stagingPaths(path, "compact")
-    spark.read.parquet(dir).coalesce(nOut)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    // swap: dir -> old, tmp -> dir, drop old. Not transactional (a table
-    // format like Iceberg/Delta makes it so); the old copy survives any
-    // mid-swap crash for manual recovery.
-    if (fs.exists(old)) fs.delete(old, true)
-    if (!fs.rename(path, old))
-      throw new java.io.IOException(s"compact: could not move $dir aside")
-    if (!fs.rename(tmp, path)) {
-      fs.rename(old, path) // roll back
-      throw new java.io.IOException(s"compact: could not promote $tmp")
+    stagedSwap(fs, path, "compact", "compact") { tmp =>
+      spark.read.parquet(dir).coalesce(nOut)
+        .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     }
-    fs.delete(old, true)
 
     val after = fs.listStatus(path).toSeq
       .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
     CompactionReport(dataFiles.size.toLong, after.toLong, totalBytes)
   }
 
-  /** Swap staging dirs for `compact`/`mergeUpsert`: siblings of the target
+  /** Staging dirs of [[stagedSwap]]: siblings of the target
     * named `_<leaf>__<tag>_{tmp,old}`. The `_` prefix keeps them invisible
     * to partition discovery AND excludes them from the recursive
     * `partDirs` filter above, so a concurrent reader mid-swap never sees
@@ -88,6 +78,25 @@ object Maintenance {
     val leaf = path.getName.replace("=", "%3D")
     (new Path(parent, s"_${leaf}__${tag}_tmp"),
       new Path(parent, s"_${leaf}__${tag}_old"))
+  }
+
+  /** Replace the directory `path` with what `stage` writes to the staged
+    * tmp sibling: move `path` aside, promote tmp, roll back on failure,
+    * drop the old copy. Not transactional (a table format like
+    * Iceberg/Delta makes it so); the old copy survives any mid-swap crash
+    * for manual recovery. `op` names the operation in the errors. */
+  private[etl] def stagedSwap(fs: FileSystem, path: Path, tag: String,
+                              op: String)(stage: Path => Unit): Unit = {
+    val (tmp, old) = stagingPaths(path, tag)
+    stage(tmp)
+    if (fs.exists(old)) fs.delete(old, true)
+    if (!fs.rename(path, old))
+      throw new java.io.IOException(s"$op: could not move $path aside")
+    if (!fs.rename(tmp, path)) {
+      fs.rename(old, path) // roll back
+      throw new java.io.IOException(s"$op: could not promote $tmp")
+    }
+    fs.delete(old, true)
   }
 
   final case class UpsertReport(baseRows: Long, updateRows: Long,
@@ -118,16 +127,9 @@ object Maintenance {
 
     val path = new Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (tmp, old) = stagingPaths(path, "delete")
-    keep.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    if (fs.exists(old)) fs.delete(old, true)
-    if (!fs.rename(path, old))
-      throw new java.io.IOException(s"delete: could not move $dir aside")
-    if (!fs.rename(tmp, path)) {
-      fs.rename(old, path) // roll back
-      throw new java.io.IOException(s"delete: could not promote $tmp")
+    stagedSwap(fs, path, "delete", "delete") { tmp =>
+      keep.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     }
-    fs.delete(old, true)
     val nAfter = spark.read.parquet(dir).count()
     DeleteReport(nBase, nBase - nAfter, nAfter)
   }
@@ -168,16 +170,9 @@ object Maintenance {
 
     val path = new Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (tmp, old) = stagingPaths(path, "upsert")
-    winners.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    if (fs.exists(old)) fs.delete(old, true)
-    if (!fs.rename(path, old))
-      throw new java.io.IOException(s"upsert: could not move $dir aside")
-    if (!fs.rename(tmp, path)) {
-      fs.rename(old, path)
-      throw new java.io.IOException(s"upsert: could not promote $tmp")
+    stagedSwap(fs, path, "upsert", "upsert") { tmp =>
+      winners.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     }
-    fs.delete(old, true)
     UpsertReport(nBase, nUpd, spark.read.parquet(dir).count())
   }
 

@@ -1,10 +1,8 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
 import org.apache.spark.sql.catalyst.plans.logical.Project
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.GraftExprBridge
 
 import graft.plans.{AsofJoinNode, AsofJoinStrategy}
@@ -14,20 +12,25 @@ import graft.plans.{AsofJoinNode, AsofJoinStrategy}
   * single right row with the LATEST right.ts ≤ left.ts (backward) or the
   * EARLIEST right.ts ≥ left.ts (forward) within the same key.
   *
-  * Implementation is the MERGE shape, not a range join: union both sides
-  * tagged, one hash shuffle on the key, one sort by (ts, side), then a
-  * running `last(right_payload, ignoreNulls)` window carries the current
-  * as-of match onto every left row. Cost at 100 TB: exactly one exchange +
-  * per-partition sort — same layout as any keyed window — versus a range
-  * join's per-key quadratic blowup (every left × every earlier right pair
-  * materialized before the per-pair filter).
+  * Both directions build the first-class plan node (`graft.plans.
+  * AsofJoinNode` → `AsofJoinStrategy` → `AsofJoinExec`): one hash
+  * exchange and one (key, ts) sort per side, then a per-partition
+  * streaming merge with O(1) state. Each side ships only its own columns,
+  * and nothing is buffered per key — versus a range join's per-key
+  * quadratic blowup (every left × every earlier right pair materialized
+  * before the per-pair filter).
   *
   * Ties (right.ts == left.ts) match, as in pandas/DuckDB (`allow_exact_
-  * matches=True` semantics): the right row sorts before the left row at
-  * equal ts via the side tag.
+  * matches=True` semantics). A NULL key matches nothing, as in SQL: the
+  * left row keeps a NULL payload.
   *
   * The right side must be unique per (key, ts) — enforce upstream (e.g.
   * aggregate) — otherwise which same-ts row wins is nondeterministic.
+  *
+  * The planner strategy is registered via `GraftExtensions`
+  * (`injectPlannerStrategy`) for extension-built sessions; for any other
+  * session the first call installs it idempotently through the public
+  * `experimental.extraStrategies` hook.
   */
 object AsofJoin {
 
@@ -40,32 +43,22 @@ object AsofJoin {
   def backward(left: DataFrame, right: DataFrame, key: String, ts: String,
                rightCols: Seq[String],
                toleranceSeconds: Option[Long] = None): DataFrame =
-    merge(left, right, key, ts, rightCols, toleranceSeconds, forward = false)
+    join(left, right, key, ts, rightCols, toleranceSeconds, forward = false)
 
   /** Forward as-of: earliest right at-or-after left.ts. */
   def forward(left: DataFrame, right: DataFrame, key: String, ts: String,
               rightCols: Seq[String],
               toleranceSeconds: Option[Long] = None): DataFrame =
-    merge(left, right, key, ts, rightCols, toleranceSeconds, forward = true)
+    join(left, right, key, ts, rightCols, toleranceSeconds, forward = true)
 
-  /** Native as-of join — same semantics as [[backward]]/[[forward]], but
-    * through the first-class plan node (`graft.plans.AsofJoinNode` →
-    * `AsofJoinStrategy` → `AsofJoinExec`): a co-partitioned streaming
-    * merge with O(1) per-partition state instead of the union+window
-    * composition. Same two shuffles, but each side ships only its own
-    * columns (no null-padded union rows) and no window buffer.
-    *
-    * The planner strategy is registered via `GraftExtensions`
-    * (`injectPlannerStrategy`) for extension-built sessions; for any
-    * other session this call installs it idempotently through the public
-    * `experimental.extraStrategies` hook.
-    */
-  def native(left: DataFrame, right: DataFrame, key: String, ts: String,
-             rightCols: Seq[String],
-             toleranceSeconds: Option[Long] = None,
-             forward: Boolean = false): DataFrame = {
-    val leftCols = left.columns.toSeq
-    val payloadClash = rightCols.filter(c => leftCols.contains(c))
+  private def join(left: DataFrame, right: DataFrame, key: String,
+                   ts: String, rightCols: Seq[String],
+                   toleranceSeconds: Option[Long],
+                   forward: Boolean): DataFrame = {
+    // rightCols are appended to the left schema verbatim — a name shared
+    // with a left column would produce ambiguous output columns far from
+    // this call site
+    val payloadClash = rightCols.filter(left.columns.contains)
     require(payloadClash.isEmpty,
       s"rightCols collide with left columns: ${payloadClash.mkString(",")} — alias them on the right side first")
 
@@ -83,9 +76,8 @@ object AsofJoin {
     val rPlan = Project(rAliases, rAnalyzed)
     val rOut = rAliases.map(_.toAttribute)
 
-    def attr(plan: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
-             name: String, side: String) =
-      plan.find(_.name == name).getOrElse(
+    def attr(out: Seq[Attribute], name: String, side: String) =
+      out.find(_.name == name).getOrElse(
         throw new IllegalArgumentException(s"$side column not found: $name"))
 
     val node = AsofJoinNode(lPlan, rPlan,
@@ -94,63 +86,5 @@ object AsofJoin {
       rightCols.map(c => attr(rOut, c, "right")),
       forward, toleranceSeconds.map(_ * 1000000L))
     GraftExprBridge.ofRows(spark, node)
-  }
-
-  private def merge(left: DataFrame, right: DataFrame, key: String,
-                    ts: String, rightCols: Seq[String],
-                    toleranceSeconds: Option[Long],
-                    forward: Boolean): DataFrame = {
-    val leftCols = left.columns.toSeq
-    val reservedClash = leftCols.filter(Set("__asof", "__side", "__match"))
-    require(reservedClash.isEmpty,
-      s"left side may not contain reserved columns: ${reservedClash.mkString(",")}")
-    // rightCols are appended to the left schema verbatim — a name shared
-    // with a left column (or the internal __rts) would produce duplicate/
-    // ambiguous output columns far from this call site
-    val payloadClash = rightCols.filter(c => leftCols.contains(c) || c == "__rts")
-    require(payloadClash.isEmpty,
-      s"rightCols collide with left columns: ${payloadClash.mkString(",")} — alias them on the right side first")
-
-    // tag sides; right payload rides in one struct (ts kept for tolerance)
-    val payload = struct(
-      (col(ts).as("__rts") +: rightCols.map(col)): _*)
-    val r = right.select(
-      Seq(col(key), col(ts), lit(0).as("__side"), payload.as("__asof")) ++
-        leftCols.filterNot(Seq(key, ts).contains)
-          .map(c => lit(null).cast(left.schema(c).dataType).as(c)): _*)
-    val l = left.select(
-      Seq(col(key), col(ts), lit(1).as("__side"),
-        lit(null).cast(r.schema("__asof").dataType).as("__asof")) ++
-        leftCols.filterNot(Seq(key, ts).contains).map(col): _*)
-
-    // one exchange on the key; sort direction decides backward/forward.
-    // At equal ts the right row sorts first either way (side 0 < 1), so
-    // exact-ts rights are visible to the window at the left row.
-    val ordered =
-      if (forward) Seq(col(ts).desc, col("__side").asc)
-      else Seq(col(ts).asc, col("__side").asc)
-    val w = Window.partitionBy(col(key)).orderBy(ordered: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    val carried = l.unionByName(r.select(l.columns.map(col): _*))
-      .withColumn("__match", last(col("__asof"), ignoreNulls = true).over(w))
-      .filter(col("__side") === 1)
-
-    // tolerance: |match ts - left ts| ≤ tolerance, else NULL the payload.
-    // Gap computed in MICROSECONDS (the storage precision) — unix_timestamp
-    // truncates to whole seconds, which mis-gates sub-second staleness by
-    // up to ~1 s in either direction.
-    val gated = toleranceSeconds match {
-      case Some(tol) =>
-        val gap =
-          if (forward) unix_micros(col("__match.__rts")) - unix_micros(col(ts))
-          else unix_micros(col(ts)) - unix_micros(col("__match.__rts"))
-        carried.withColumn("__match",
-          when(gap <= tol * 1000000L, col("__match")))
-      case None => carried
-    }
-
-    gated.select(leftCols.map(col) ++
-      rightCols.map(c => col(s"__match.$c").as(c)): _*)
   }
 }

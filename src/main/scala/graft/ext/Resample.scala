@@ -11,10 +11,11 @@ import org.apache.spark.sql.functions._
   * only the aligned leading point can be one).
   *
   * Shape: span agg (one shuffle on key) → grid explode (map-only,
-  * bounded by `maxPointsPerKey`) → AsofJoin.backward (the single-
-  * exchange merge shape). Nothing quadratic, nothing unbounded: at 100 TB
-  * the grid size is span/step × keys by construction, and the fill
-  * reuses the as-of join's one-exchange layout.
+  * bounded by `maxPointsPerKey`) → AsofJoin.backward (the co-partitioned
+  * streaming merge). Nothing quadratic, nothing unbounded: at 100 TB the
+  * grid size is span/step × keys by construction, and the grid keeps the
+  * span aggregate's key partitioning, so only the observations shuffle
+  * for the fill.
   */
 object Resample {
 

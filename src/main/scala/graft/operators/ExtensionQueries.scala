@@ -906,7 +906,7 @@ object ExtensionQueries {
     },
     None)
 
-  /** As-of join (AsofJoin.backward — single-shuffle merge shape): each
+  /** As-of join (AsofJoin.backward — co-partitioned streaming merge): each
     * click event picks up the latest purchase value at-or-before it for
     * the same user. Oracle = DuckDB's native ASOF LEFT JOIN; both sides
     * see identical microsecond timestamps (Spark truncates the nanos
@@ -934,22 +934,20 @@ object ExtensionQueries {
            | FROM p ASOF LEFT JOIN q ON p.user_id = q.user_id AND p.ts >= q.ts"""
       .stripMargin.replace("\n", "")))
 
-  /** Same as-of semantics through the first-class plan node
-    * (`plans.AsofJoinNode` → `AsofJoinStrategy` → `AsofJoinExec`): the
-    * co-partitioned streaming-merge physical operator, against the same
-    * DuckDB ASOF LEFT JOIN oracle as `q_x_asof_join` — the two
-    * implementations are pinned equal by both the oracle and
-    * `plans.AsofJoinExecSpec`. */
+  /** Forward as-of join (AsofJoin.forward): each click event picks up the
+    * earliest purchase value at-or-after it for the same user. Same
+    * inputs and truncation as `q_x_asof_join`; oracle = DuckDB's ASOF
+    * LEFT JOIN with the inequality turned around (`p.ts <= q.ts`). */
   val asofNative = Q(
     "q_x_asof_native",
-    "Native-plan as-of join: latest purchase at-or-before each click",
+    "Forward as-of join: earliest purchase at-or-after each click",
     (s, dir) => {
       val e = Sources.table(s, dir, "events")
       val probes = e.filter(col("event_type") === "click")
         .select(col("event_id"), col("user_id"), col("ts"))
       val quotes = e.filter(col("event_type") === "purchase")
         .groupBy(col("user_id"), col("ts")).agg(max(col("value")).as("qv"))
-      graft.ext.AsofJoin.native(probes, quotes, "user_id", "ts", Seq("qv"))
+      graft.ext.AsofJoin.forward(probes, quotes, "user_id", "ts", Seq("qv"))
         .select(col("event_id"), col("user_id"),
           round(col("qv"), 2).as("asof_value"))
     },
@@ -959,7 +957,7 @@ object ExtensionQueries {
            | q AS (SELECT user_id, ts, max(value) AS qv FROM e
            |   WHERE event_type = 'purchase' GROUP BY 1, 2)
            | SELECT p.event_id, p.user_id, round(q.qv, 2) AS asof_value
-           | FROM p ASOF LEFT JOIN q ON p.user_id = q.user_id AND p.ts >= q.ts"""
+           | FROM p ASOF LEFT JOIN q ON p.user_id = q.user_id AND p.ts <= q.ts"""
       .stripMargin.replace("\n", "")))
 
   /** Range join (RangeJoin.pointInInterval — binned equi-join shape, no
@@ -1002,7 +1000,7 @@ object ExtensionQueries {
       .stripMargin.replace("\n", "")))
 
   /** Time-grid resample + forward fill (Resample.forwardFill — grid
-    * explode + the as-of merge shape): each user's purchase value sampled
+    * explode + the backward as-of merge): each user's purchase value sampled
     * on an hour-aligned grid across their observed span. Oracle = DuckDB
     * generate_series + ASOF LEFT JOIN, microsecond-truncated; hour-aligned
     * grid instants survive the nanos→micros read identically. Bounded

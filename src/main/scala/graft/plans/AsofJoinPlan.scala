@@ -13,23 +13,24 @@ import org.apache.spark.sql.types.{DataType, LongType, TimestampType}
 
 /** Logical as-of join — the whole-operator Catalyst route (SURVEY.md §7.3
   * preference (c)): a first-class plan node + planner strategy + physical
-  * operator, instead of the union+window composition in `ext.AsofJoin`.
+  * operator, built by `ext.AsofJoin.backward` / `forward`.
   *
-  * Semantics (same as `ext.AsofJoin` / pandas `merge_asof` / DuckDB
-  * `ASOF LEFT JOIN`): for every left row, attach the payload of the single
-  * right row with the latest right.ts ≤ left.ts (backward) or earliest
-  * right.ts ≥ left.ts (forward) for the same key; ties at equal ts match;
-  * optional tolerance gates stale matches to NULL.
+  * Semantics (pandas `merge_asof` / DuckDB `ASOF LEFT JOIN`): for every
+  * left row, attach the payload of the single right row with the latest
+  * right.ts ≤ left.ts (backward) or earliest right.ts ≥ left.ts (forward)
+  * for the same key; ties at equal ts match; optional tolerance gates
+  * stale matches to NULL.
   *
   * All of `leftKey/rightKey/leftTs/rightTs/payload` are resolved
-  * attributes of the respective child (the `AsofJoin.native` builder
-  * re-aliases the right side first, so the two sides never share expr
-  * ids even in a self-join). Output = left columns ++ payload columns
-  * (nullable — unmatched left rows survive with NULL payload).
+  * attributes of the respective child (the `AsofJoin` builder re-aliases
+  * the right side first, so the two sides never share expr ids even in a
+  * self-join). Output = left columns ++ payload columns (nullable —
+  * unmatched left rows survive with NULL payload).
   *
-  * Null handling: NULL keys group together (as in the window-composed
-  * form, where `Window.partitionBy` puts them in one partition); NULL
-  * timestamps are unsupported (sort as epoch for the merge).
+  * Null handling: a NULL key equals nothing, as in SQL and DuckDB — a
+  * NULL-key left row gets the NULL payload and a NULL-key right row is
+  * never matched. NULL timestamps are out of scope: the merge reads one
+  * as epoch 0, and what it matches is unspecified.
   */
 case class AsofJoinNode(
     left: LogicalPlan, right: LogicalPlan,
@@ -61,7 +62,7 @@ object AsofJoinNode {
 
 /** Planner strategy: `AsofJoinNode` → `AsofJoinExec`. Injected via
   * `GraftExtensions` (`injectPlannerStrategy`) and, belt-and-braces, by
-  * `ext.AsofJoin.native` through `session.experimental.extraStrategies`.
+  * `ext.AsofJoin` through `session.experimental.extraStrategies`.
   */
 object AsofJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -79,16 +80,11 @@ object AsofJoinStrategy extends SparkStrategy {
   * `requiredChildOrdering` ((key, ts) ascending, both sides) make
   * EnsureRequirements insert exactly one exchange + one sort per side;
   * the merge itself is then a per-partition two-iterator walk carrying
-  * O(1) state (the current as-of candidate), never a buffered window
-  * frame and never the union's null-padded double-width rows.
+  * O(1) state (the current as-of candidate), never a buffered frame.
   *
-  * vs the composed form at 100 TB: the same two shuffles, but each side
-  * ships only its own columns (the union shape pads every right row with
-  * NULL left columns and vice versa before the shuffle), and the running
-  * `last(…, ignoreNulls)` window — which re-materializes the union — is
-  * replaced by the O(1)-state merge. Output preserves the left side's
-  * (key, ts) ordering, so a downstream window/as-of on the same key
-  * re-uses both the partitioning and the sort.
+  * Output preserves the left side's (key, ts) ordering, so a downstream
+  * window/as-of on the same key re-uses both the partitioning and the
+  * sort.
   */
 case class AsofJoinExec(
     left: SparkPlan, right: SparkPlan,
@@ -176,41 +172,42 @@ case class AsofJoinExec(
 
         lIter.map { lRow =>
           val lKey = lKeyProj(lRow)
-          val lTs = ts(lTsBound, lRow)
-          if (!fwd) {
+          // NULL = anything is never true: a NULL-key left row takes the
+          // NULL payload and leaves the right side where it is
+          val payload = if (lKey.isNullAt(0)) nullPayload else {
+            val lTs = ts(lTsBound, lRow)
+            // pass every right row ordered before (lKey, lTs); backward
+            // also passes the row AT lTs (ties match) and carries the last
+            // non-NULL-key row it passed, forward only ever needs the head
             var advancing = true
             while (advancing && rBuf.hasNext) {
               if (headStale) refreshHead()
               val c = keyOrd.compare(headKey, lKey)
-              if (c < 0 || (c == 0 && headTs <= lTs)) {
+              if (c < 0 || (c == 0 && (headTs < lTs || (!fwd && headTs == lTs)))) {
                 val r = rBuf.next()
-                if (carryKey == null || keyOrd.compare(carryKey, headKey) != 0)
-                  carryKey = headKey.copy()
-                carryTs = headTs
-                carryPayload = payloadProj(r)
+                if (!fwd && !headKey.isNullAt(0)) {
+                  if (carryKey == null || keyOrd.compare(carryKey, headKey) != 0)
+                    carryKey = headKey.copy()
+                  carryTs = headTs
+                  carryPayload = payloadProj(r)
+                }
                 headStale = true
               } else advancing = false
             }
-            val matched = carryKey != null &&
-              keyOrd.compare(carryKey, lKey) == 0 &&
-              tol.forall(t => lTs - carryTs <= t)
-            outProj(joined(lRow, if (matched) carryPayload else nullPayload))
-          } else {
-            var advancing = true
-            while (advancing && rBuf.hasNext) {
-              if (headStale) refreshHead()
-              val c = keyOrd.compare(headKey, lKey)
-              if (c < 0 || (c == 0 && headTs < lTs)) { rBuf.next(); headStale = true }
-              else advancing = false
-            }
-            val matched = rBuf.hasNext && {
-              if (headStale) refreshHead()
-              keyOrd.compare(headKey, lKey) == 0 &&
-                tol.forall(t => headTs - lTs <= t)
-            }
-            outProj(joined(lRow,
-              if (matched) payloadProj(rBuf.head) else nullPayload))
+            val matched =
+              if (!fwd) carryKey != null &&
+                keyOrd.compare(carryKey, lKey) == 0 &&
+                tol.forall(t => lTs - carryTs <= t)
+              else rBuf.hasNext && {
+                if (headStale) refreshHead()
+                keyOrd.compare(headKey, lKey) == 0 &&
+                  tol.forall(t => headTs - lTs <= t)
+              }
+            if (!matched) nullPayload
+            else if (fwd) payloadProj(rBuf.head)
+            else carryPayload
           }
+          outProj(joined(lRow, payload))
         }
       }
     }

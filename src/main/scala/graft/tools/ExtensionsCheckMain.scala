@@ -37,13 +37,13 @@ object ExtensionsCheckMain {
       row.getAs[Int]("nw") > 0 &&
       row.getAs[Int]("bkt") >= 0
 
-    // planner-strategy injection: AsofJoin.native must plan through the
+    // planner-strategy injection: AsofJoin.backward must plan through the
     // extension-injected AsofJoinStrategy — NOT the experimental fallback
     // (asserted empty afterwards) — and produce the merge-join results
     import spark.implicits._
     val l = Seq((1L, 10L), (1L, 30L), (2L, 10L)).toDF("k", "ts")
     val r = Seq((1L, 5L, "a"), (1L, 20L, "b")).toDF("k", "ts", "v")
-    val asof = graft.ext.AsofJoin.native(l, r, "k", "ts", Seq("v"))
+    val asof = graft.ext.AsofJoin.backward(l, r, "k", "ts", Seq("v"))
     val got = asof.collect().map(x => (x.getLong(0), x.getLong(1),
       Option(x.getString(2)))).toSet
     val asofOk = got == Set((1L, 10L, Some("a")), (1L, 30L, Some("b")),

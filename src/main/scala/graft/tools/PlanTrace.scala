@@ -19,7 +19,9 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   * body runs, the calling thread carries a job tag, and every SQL execution
   * started under that tag (each `localCheckpoint`, `count`, `head`,
   * `collect` and write goes through one) posts its formatted physical plan
-  * on the listener bus, where one listener keeps it.
+  * on the listener bus, where one listener keeps it. Only root
+  * executions count: an execution nested in another repeats its root's
+  * plan (each streaming micro-batch starts one inside its own).
   *
   * The tag is a thread-local property, so a thread started inside the
   * body inherits it: the micro-batch plans of a streaming query started
@@ -39,7 +41,8 @@ object PlanTrace {
     val plans = new ConcurrentLinkedQueue[String]
     val listener = new SparkListener {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart if s.jobTags.contains(tag) =>
+        case s: SparkListenerSQLExecutionStart if s.jobTags.contains(tag) &&
+            s.rootExecutionId.forall(_ == s.executionId) =>
           plans.add(s.physicalPlanDescription)
         case _ =>
       }

@@ -2,7 +2,6 @@ package graft.ext
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -89,29 +88,26 @@ class AsofJoinSpec extends AnyFunSuite {
     assert(out(2L) == None, "1.6s-stale match must be gated at tolerance=1s")
   }
 
-  test("column-collision guards reject reserved/duplicate names") {
+  test("column-collision guard rejects a payload name already on the left") {
     val (trades, quotes) = fixtures
     intercept[IllegalArgumentException] {
-      AsofJoin.backward(trades.withColumn("__side", lit(1)), quotes,
-        "user_id", "ts", Seq("px"))
-    }
-    intercept[IllegalArgumentException] {
-      // right payload column name already present on the left
       AsofJoin.backward(trades, quotes.withColumnRenamed("px", "tag"),
         "user_id", "ts", Seq("tag"))
     }
   }
 
-  test("plan: exactly one exchange (merge shape, not a range join)") {
+  test("plan: one AsofJoin merge node, no Window or Union (not a range join)") {
     val (trades, quotes) = fixtures
     val df = AsofJoin.backward(trades, quotes, "user_id", "ts", Seq("px"))
     df.collect() // finalize AQE
-    // AQE's toString repeats the plan under "== Initial Plan =="; count
-    // exchanges in the final section only
+    // AQE's toString repeats the plan under "== Initial Plan =="; check
+    // the final section only
     val plan = df.queryExecution.executedPlan.toString
       .split("== Initial Plan ==")(0)
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
-    assert(exchanges == 1, s"expected 1 exchange, plan:\n$plan")
+    assert("AsofJoin".r.findAllIn(plan).length == 1,
+      s"expected one AsofJoin node, plan:\n$plan")
+    assert(!plan.contains("Window") && !plan.contains("Union"),
+      s"merge shape must not plan a window or union:\n$plan")
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"))
   }

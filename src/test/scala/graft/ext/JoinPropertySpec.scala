@@ -10,8 +10,8 @@ import graft.TestSpark
 /** Randomized cross-checks: AsofJoin and RangeJoin against brute-force
   * Scala-collection references on generated data. Deterministic seeds —
   * failures reproduce. Small key/time domains force the interesting
-  * collisions (equal timestamps, multi-match, empty keys) to actually
-  * occur in every run. */
+  * collisions (equal timestamps, multi-match, empty keys, NULL keys) to
+  * actually occur in every run. */
 class JoinPropertySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -29,95 +29,97 @@ class JoinPropertySpec extends AnyFunSuite {
       case ((k, o), i) => (i.toLong, k, o)
     })
 
-  test("AsofJoin.backward matches brute force on random data (5 seeds)") {
+  // as-of inputs: left (id, key, ts millis); right (key, ts millis, px),
+  // unique per (key, ts) — the operator contract
+  private type L = (Long, Option[Long], Long)
+  private type R = (Option[Long], Long, Double)
+
+  // (id, key, offset) rows with about one key in six NULL, offsets scaled
+  // to millis; right rows keep the max id per (key, ts) as their px
+  private def asofInputs(nLeft: Int, nRight: Int, keys: Long, maxOff: Int,
+                         unit: Long, seed: Long): (Seq[L], Seq[R]) = {
+    def gen(n: Int) = Gen.listOfN(n, for {
+      key <- Gen.frequency(
+        1 -> Gen.const(Option.empty[Long]), 5 -> Gen.choose(0L, keys).map(Option(_)))
+      off <- Gen.choose(0, maxOff)
+    } yield (key, base + off * unit)).map(_.zipWithIndex.map {
+      case ((k, t), i) => (i.toLong, k, t)
+    })
+    val right = sample(gen(nRight), seed + 100)
+      .groupBy(r => (r._2, r._3)).values.map(_.maxBy(_._1))
+      .map { case (id, k, t) => (k, t, id.toDouble) }.toSeq
+    (sample(gen(nLeft), seed), right)
+  }
+
+  /** AsofJoin against a brute-force scan of `right`: the nearest row with
+    * an EQUAL NON-NULL key at-or-before (backward) or at-or-after
+    * (forward) the left ts, no further away than the tolerance. */
+  private def assertAsof(left: Seq[L], right: Seq[R], forward: Boolean,
+                         tolSeconds: Option[Long], label: String): Unit = {
     val spark0 = spark
     import spark0.implicits._
-    for (seed <- 1L to 5L) {
-      val left = sample(rowsGen(60), seed)
-      val rightRaw = sample(rowsGen(40), seed + 100)
-      // unique per (key, ts): operator contract — keep max id
-      val right = rightRaw.groupBy(r => (r._2, r._3)).values
-        .map(_.maxBy(_._1)).toList
-      val ldf = left.map { case (id, k, o) =>
-        (id, k, new Timestamp(base + o * 1000L)) }.toDF("id", "k", "ts")
-      val rdf = right.map { case (id, k, o) =>
-        (k, new Timestamp(base + o * 1000L), id.toDouble) }.toDF("k", "ts", "px")
-
-      val got = AsofJoin.backward(ldf, rdf, "k", "ts", Seq("px"))
-        .collect().map(r => r.getAs[Long]("id") ->
-          Option(r.getAs[java.lang.Double]("px")).map(_.toDouble)).toMap
-
-      left.foreach { case (id, k, o) =>
-        val expected = right.filter(r => r._2 == k && r._3 <= o)
-          .sortBy(r => (r._3, r._1)).lastOption.map(_._1.toDouble)
-        assert(got(id) == expected, s"seed=$seed left id=$id key=$k off=$o")
+    val ldf = left.map { case (id, k, t) => (id, k, new Timestamp(t)) }
+      .toDF("id", "k", "ts")
+    val rdf = right.map { case (k, t, px) => (k, new Timestamp(t), px) }
+      .toDF("k", "ts", "px")
+    val join = if (forward) AsofJoin.forward _ else AsofJoin.backward _
+    val rows = join(ldf, rdf, "k", "ts", Seq("px"), tolSeconds).collect()
+    assert(rows.length == left.size, s"$label: every left row exactly once")
+    val got = rows.map(r => r.getAs[Long]("id") ->
+      Option(r.getAs[java.lang.Double]("px")).map(_.toDouble)).toMap
+    left.foreach { case (id, k, t) =>
+      val cands = right.filter { case (rk, rt, _) =>
+        k.isDefined && rk == k && (if (forward) rt >= t else rt <= t) &&
+          tolSeconds.forall(s => math.abs(rt - t) <= s * 1000L)
       }
+      val expected =
+        (if (forward) cands.minByOption(_._2) else cands.maxByOption(_._2)).map(_._3)
+      assert(got(id) == expected, s"$label id=$id key=$k ts=$t")
+    }
+  }
+
+  test("AsofJoin.backward matches brute force on random data (5 seeds)") {
+    for (seed <- 1L to 5L) {
+      val (left, right) = asofInputs(60, 40, 4L, 120, 1000L, seed)
+      assertAsof(left, right, forward = false, None, s"seed=$seed")
     }
   }
 
   test("AsofJoin.forward + tolerance match brute force on random data (5 seeds)") {
-    val spark0 = spark
-    import spark0.implicits._
     for (seed <- 21L to 25L) {
-      val left = sample(rowsGen(50), seed)
-      val right = sample(rowsGen(35), seed + 100)
-        .groupBy(r => (r._2, r._3)).values.map(_.maxBy(_._1)).toList
-      val ldf = left.map { case (id, k, o) =>
-        (id, k, new Timestamp(base + o * 1000L)) }.toDF("id", "k", "ts")
-      val rdf = right.map { case (id, k, o) =>
-        (k, new Timestamp(base + o * 1000L), id.toDouble) }.toDF("k", "ts", "px")
-
-      val fwd = AsofJoin.forward(ldf, rdf, "k", "ts", Seq("px"))
-        .collect().map(r => r.getAs[Long]("id") ->
-          Option(r.getAs[java.lang.Double]("px")).map(_.toDouble)).toMap
-      val tol = AsofJoin.backward(ldf, rdf, "k", "ts", Seq("px"),
-          toleranceSeconds = Some(15L))
-        .collect().map(r => r.getAs[Long]("id") ->
-          Option(r.getAs[java.lang.Double]("px")).map(_.toDouble)).toMap
-
-      left.foreach { case (id, k, o) =>
-        val expFwd = right.filter(r => r._2 == k && r._3 >= o)
-          .sortBy(r => (r._3, -r._1)).headOption.map(_._1.toDouble)
-        assert(fwd(id) == expFwd, s"fwd seed=$seed id=$id")
-        val expTol = right.filter(r => r._2 == k && r._3 <= o && o - r._3 <= 15)
-          .sortBy(r => (r._3, r._1)).lastOption.map(_._1.toDouble)
-        assert(tol(id) == expTol, s"tol seed=$seed id=$id")
-      }
+      val (left, right) = asofInputs(50, 35, 4L, 120, 1000L, seed)
+      assertAsof(left, right, forward = true, None, s"fwd seed=$seed")
+      assertAsof(left, right, forward = true, Some(15L), s"fwd tol seed=$seed")
+      assertAsof(left, right, forward = false, Some(15L), s"tol seed=$seed")
     }
   }
 
   test("AsofJoin tolerance at millisecond resolution matches brute force (5 seeds)") {
-    val spark0 = spark
-    import spark0.implicits._
     // sub-second offsets: the tolerance gate must compare true microsecond
     // gaps — a floor-to-seconds gate is off by up to ~1s either way here
-    val msGen: Gen[List[(Long, Long, Int)]] =
-      Gen.listOfN(50, for {
-        key <- Gen.choose(0L, 3L)
-        off <- Gen.choose(0, 5000) // milliseconds
-      } yield (key, off)).map(_.zipWithIndex.map {
-        case ((k, o), i) => (i.toLong, k, o)
-      })
     for (seed <- 31L to 35L) {
-      val left = sample(msGen, seed)
-      val right = sample(msGen, seed + 100)
-        .groupBy(r => (r._2, r._3)).values.map(_.maxBy(_._1)).toList
-      val ldf = left.map { case (id, k, o) =>
-        (id, k, new Timestamp(base + o)) }.toDF("id", "k", "ts")
-      val rdf = right.map { case (id, k, o) =>
-        (k, new Timestamp(base + o), id.toDouble) }.toDF("k", "ts", "px")
+      val (left, right) = asofInputs(50, 50, 3L, 5000, 1L, seed)
+      assertAsof(left, right, forward = false, Some(2L), s"ms-tol seed=$seed")
+      assertAsof(left, right, forward = true, Some(2L), s"ms-fwd-tol seed=$seed")
+    }
+  }
 
-      val tol = AsofJoin.backward(ldf, rdf, "k", "ts", Seq("px"),
-          toleranceSeconds = Some(2L))
-        .collect().map(r => r.getAs[Long]("id") ->
-          Option(r.getAs[java.lang.Double]("px")).map(_.toDouble)).toMap
-
-      left.foreach { case (id, k, o) =>
-        val exp = right
-          .filter(r => r._2 == k && r._3 <= o && o - r._3 <= 2000)
-          .sortBy(r => (r._3, r._1)).lastOption.map(_._1.toDouble)
-        assert(tol(id) == exp, s"ms-tol seed=$seed id=$id off=$o")
+  test("AsofJoin on wide random frames matches brute force (3 seeds)") {
+    // 300 x 200 rows over 7 keys at 100 ms steps across ~2.8 h: many
+    // matches per key, so the merge crosses keys and ties mid-partition
+    for (seed <- 1L to 3L) {
+      val rnd = new java.util.Random(seed)
+      def t(): Long = 1700000000000L + rnd.nextInt(100000) * 100L
+      val left: Seq[L] = (1 to 300).map { i =>
+        val k = rnd.nextInt(7).toLong
+        (i.toLong, Some(k), t())
       }
+      val right: Seq[R] = (1 to 200).map(_ =>
+          (Some(rnd.nextInt(7).toLong): Option[Long], t(),
+            math.round(rnd.nextDouble() * 100) / 10.0))
+        .groupBy(r => (r._1, r._2)).map(_._2.maxBy(_._3)).toSeq
+      for (fwd <- Seq(false, true); tol <- Seq(None, Some(3600L)))
+        assertAsof(left, right, fwd, tol, s"seed=$seed fwd=$fwd tol=$tol")
     }
   }
 

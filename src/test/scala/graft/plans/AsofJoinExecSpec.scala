@@ -7,11 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.ext.AsofJoin
 
-/** The native plan-node as-of join (AsofJoinNode → AsofJoinStrategy →
-  * AsofJoinExec) must be semantically identical to the union+window
-  * composition `AsofJoin.backward/forward` — which is itself DuckDB-
-  * oracle-anchored via q_x_asof_join — while planning as a co-partitioned
-  * streaming merge (two exchanges, no Window, no Union).
+/** The as-of join's plan node (AsofJoinNode → AsofJoinStrategy →
+  * AsofJoinExec), as built by `AsofJoin.backward/forward`: self-join
+  * safety, the fixed-fixture semantics, and the co-partitioned streaming
+  * merge plan (two exchanges, no Window, no Union). Randomized frames are
+  * checked against a brute-force reference in `ext.JoinPropertySpec`.
   */
 class AsofJoinExecSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -38,25 +38,6 @@ class AsofJoinExecSpec extends AnyFunSuite {
     df.collect().map(r => (r.getAs[Long]("event_id"),
       Option(r.getAs[java.lang.Double]("px")).map(_.toDouble))).toSet
 
-  test("native == composed: backward, forward, tolerance (randomized)") {
-    for (seed <- Seq(1L, 2L, 3L)) {
-      val (left, right) = randomFrames(seed, nLeft = 300, nRight = 200, nKeys = 7)
-      for (tol <- Seq(None, Some(3600L))) {
-        val composedB = collectPairs(
-          AsofJoin.backward(left, right, "user_id", "ts", Seq("px"), tol))
-        val nativeB = collectPairs(
-          AsofJoin.native(left, right, "user_id", "ts", Seq("px"), tol))
-        assert(nativeB == composedB, s"backward mismatch seed=$seed tol=$tol")
-        val composedF = collectPairs(
-          AsofJoin.forward(left, right, "user_id", "ts", Seq("px"), tol))
-        val nativeF = collectPairs(
-          AsofJoin.native(left, right, "user_id", "ts", Seq("px"), tol,
-            forward = true))
-        assert(nativeF == composedF, s"forward mismatch seed=$seed tol=$tol")
-      }
-    }
-  }
-
   test("self-join safe: same source on both sides (fresh right expr ids)") {
     val spark0 = spark
     import spark0.implicits._
@@ -64,7 +45,7 @@ class AsofJoinExecSpec extends AnyFunSuite {
       (1L, 1L, Timestamp.valueOf("2024-01-01 10:00:05"), 1.0),
       (2L, 1L, Timestamp.valueOf("2024-01-01 10:00:30"), 2.0)
     ).toDF("event_id", "user_id", "ts", "px")
-    val out = AsofJoin.native(
+    val out = AsofJoin.backward(
       e.select("event_id", "user_id", "ts"),
       e.select($"user_id", $"ts", $"px"), "user_id", "ts", Seq("px"))
     assert(out.collect().length == 2)
@@ -87,20 +68,20 @@ class AsofJoinExecSpec extends AnyFunSuite {
       (3L, Timestamp.valueOf("2024-01-01 10:00:00"), 999.0)
     ).toDF("user_id", "ts", "px")
     val out = collectPairs(
-      AsofJoin.native(trades, quotes, "user_id", "ts", Seq("px"))).toMap
+      AsofJoin.backward(trades, quotes, "user_id", "ts", Seq("px"))).toMap
     assert(out(1L) == Some(100.0) && out(2L) == Some(200.0) &&
       out(3L) == Some(300.0) && out(4L) == None && out(5L) == None)
-    val gated = collectPairs(AsofJoin.native(trades, quotes, "user_id", "ts",
+    val gated = collectPairs(AsofJoin.backward(trades, quotes, "user_id", "ts",
       Seq("px"), toleranceSeconds = Some(10L))).toMap
     assert(gated(3L) == None && gated(1L) == Some(100.0))
-    val fwd = collectPairs(AsofJoin.native(trades, quotes, "user_id", "ts",
-      Seq("px"), forward = true)).toMap
+    val fwd = collectPairs(AsofJoin.forward(trades, quotes, "user_id", "ts",
+      Seq("px"))).toMap
     assert(fwd(1L) == Some(200.0) && fwd(3L) == None && fwd(5L) == Some(999.0))
   }
 
   test("plan: AsofJoinExec streaming merge — 2 exchanges, no Window/Union") {
     val (left, right) = randomFrames(9L, nLeft = 100, nRight = 80, nKeys = 5)
-    val df = AsofJoin.native(left, right, "user_id", "ts", Seq("px"))
+    val df = AsofJoin.backward(left, right, "user_id", "ts", Seq("px"))
     df.collect() // finalize AQE
     val plan = df.queryExecution.executedPlan.toString
       .split("== Initial Plan ==")(0)
@@ -114,7 +95,7 @@ class AsofJoinExecSpec extends AnyFunSuite {
   test("payload name collision with left columns is rejected") {
     val (left, right) = randomFrames(4L, 10, 10, 2)
     intercept[IllegalArgumentException] {
-      AsofJoin.native(left, right.withColumnRenamed("px", "lv"),
+      AsofJoin.backward(left, right.withColumnRenamed("px", "lv"),
         "user_id", "ts", Seq("lv"))
     }
   }

@@ -55,6 +55,18 @@ class PlanTraceSpec extends AnyFunSuite {
     assert(ListenerCount(sc) == listeners)
   }
 
+  test("a stream's capture has one plan per micro-batch") {
+    val (batches, plans) = PlanTrace.capture(spark) {
+      val q = graft.streaming.EventsStream
+        .readEvents(spark, s"$sfDir/{events.parquet}").select("event_id")
+        .writeStream.format("memory").queryName("plan_trace_stream").start()
+      try { q.processAllAvailable(); q.lastProgress.batchId + 1 }
+      finally { q.stop(); spark.catalog.dropTempView("plan_trace_stream") }
+    }
+    assert(batches >= 1)
+    assert(plans.count(_.contains("WriteToDataSourceV2")) == batches, plans)
+  }
+
   test("a query with no eager work yields no captured plans") {
     val (df, plans) = PlanTrace.capture(spark)(
       Catalog.byName("q_p1_scan_project").run(spark, sfDir))
