@@ -13,7 +13,7 @@ object Ddl {
 
   /** CREATE TABLE DDL from a StructType (typed columns, parquet storage).
     * The reference's sortkey/distkey physical hints have no DDL analogue in
-    * Spark — they are applied at write time (Sources.writeDistributed). */
+    * Spark — they are applied at write time (Sources.distributed). */
   private def createSql(name: String, schema: StructType): String = {
     val cols = schema.fields
       .map(f => s"`${f.name}` ${f.dataType.sql}${if (f.nullable) "" else " NOT NULL"}")

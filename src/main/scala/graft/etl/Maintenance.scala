@@ -1,7 +1,9 @@
 package graft.etl
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 
 /** Table maintenance — the background jobs a 100 TB parquet warehouse
   * cannot live without. The reference delegates these to Redshift
@@ -53,10 +55,7 @@ object Maintenance {
     // crash that leaves them behind) never sees the staging copies as
     // partitions — a `<leaf>__compact_tmp` sibling of `dt=...` WOULD be
     // discovered (it contains '=') and silently duplicate rows.
-    stagedSwap(fs, path, "compact", "compact") { tmp =>
-      spark.read.parquet(dir).coalesce(nOut)
-        .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    }
+    rewrite(spark, dir, "compact", spark.read.parquet(dir).coalesce(nOut))
 
     val after = fs.listStatus(path).toSeq
       .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
@@ -99,6 +98,13 @@ object Maintenance {
     fs.delete(old, true)
   }
 
+  /** Replace the parquet table at `dir` with `df` through [[stagedSwap]]. */
+  private def rewrite(spark: SparkSession, dir: String, op: String, df: DataFrame): Unit = {
+    val path = new Path(dir)
+    stagedSwap(path.getFileSystem(spark.sparkContext.hadoopConfiguration), path, op, op) {
+      tmp => df.write.mode(SaveMode.Overwrite).parquet(tmp.toString) }
+  }
+
   final case class UpsertReport(baseRows: Long, updateRows: Long,
                                 resultRows: Long)
 
@@ -107,8 +113,9 @@ object Maintenance {
 
   /** Keyed erasure (DELETE WHERE key IN …): the right-to-be-forgotten /
     * retention primitive. Rewrites the table without rows whose `key`
-    * appears in `keys` — a LEFT ANTI join (broadcast for the typical
-    * small erasure list; AQE decides) — through the same staged swap as
+    * appears in `keys` — a left join that marks the listed keys, keeping
+    * the unmarked rows (LEFT ANTI semantics; broadcast for the typical
+    * small erasure list, AQE decides) — through the same staged swap as
     * `compact`/`mergeUpsert`, so a mid-failure leaves the original
     * readable. This is the full-rewrite form; at 100 TB, partition the
     * table and erase only the partitions a Bloom/zone check says contain
@@ -118,20 +125,19 @@ object Maintenance {
                   key: String): DeleteReport = {
     val base = spark.read.parquet(dir)
     require(base.columns.contains(key), s"no column '$key' in $dir")
-    val nBase = base.count()
-    // no checkpoint: the tmp write below materializes the anti-join while
-    // `dir` is still intact; the renames only run after
-    val keep = base.join(
-        keys.select(keys.columns.head).toDF(key).distinct(),
-        Seq(key), "left_anti")
-
-    val path = new Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    stagedSwap(fs, path, "delete", "delete") { tmp =>
-      keep.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    }
-    val nAfter = spark.read.parquet(dir).count()
-    DeleteReport(nBase, nBase - nAfter, nAfter)
+    // the write counts base and marked rows above the join, where no empty
+    // stage the adaptive plan drops takes the count with it. No checkpoint:
+    // the tmp write materializes the kept rows while `dir` is still intact
+    val counts = Observation()
+    val keep = base
+      .join(keys.select(keys.columns.head).toDF(key).distinct()
+        .withColumn("__del", lit(true)), Seq(key), "left")
+      .observe(counts, count(lit(1)).as("base"), count(col("__del")).as("deleted"))
+      .filter(col("__del").isNull)
+      .select(base.columns.map(col).toSeq: _*)
+    rewrite(spark, dir, "delete", keep)
+    val n = counts.get.view.mapValues(_.asInstanceOf[Long])
+    DeleteReport(n("base"), n("deleted"), n("base") - n("deleted"))
   }
 
   /** Keyed upsert (MERGE INTO analogue on plain parquet): base ∪ updates,
@@ -149,31 +155,28 @@ object Maintenance {
     */
   def mergeUpsert(spark: SparkSession, dir: String, updates: DataFrame,
                   key: String, versionCol: String): UpsertReport = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
     val base = spark.read.parquet(dir)
     require(base.columns.sameElements(updates.columns),
       s"upsert schema mismatch: ${base.columns.mkString(",")} vs ${updates.columns.mkString(",")}")
-    val nBase = base.count()
-    val nUpd = updates.count()
     val tagged = base.withColumn("__src", lit(0))
       .unionByName(updates.withColumn("__src", lit(1)))
     val w = Window.partitionBy(col(key))
       .orderBy(col(versionCol).desc, col("__src").desc)
-    // no checkpoint: the tmp write below materializes the winners while
-    // `dir` is still intact (renames only run after) — and a checkpoint
-    // here would leak cached blocks on every UpsertSink micro-batch
+    // every input row reaches the window: the write counts both sides and
+    // the winners there. No checkpoint: the tmp write materializes the
+    // winners while `dir` is still intact — and a checkpoint would leak
+    // cached blocks on every UpsertSink micro-batch
+    val counts = Observation()
     val winners = tagged
       .withColumn("__rn", row_number().over(w))
+      .observe(counts, count(when(col("__src") === 0, 1)).as("base"),
+        count(when(col("__src") === 1, 1)).as("updates"),
+        count(when(col("__rn") === 1, 1)).as("result"))
       .filter(col("__rn") === 1)
       .drop("__src", "__rn")
-
-    val path = new Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    stagedSwap(fs, path, "upsert", "upsert") { tmp =>
-      winners.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    }
-    UpsertReport(nBase, nUpd, spark.read.parquet(dir).count())
+    rewrite(spark, dir, "upsert", winners)
+    val n = counts.get.view.mapValues(_.asInstanceOf[Long])
+    UpsertReport(n("base"), n("updates"), n("result"))
   }
 
   /** Snapshot diff — the dataset-versioning audit between two corpus
@@ -191,7 +194,6 @@ object Maintenance {
     * Output: (idCol, status) for every id in either snapshot. */
   def snapshotDiff(oldDf: DataFrame, newDf: DataFrame, idCol: String,
                    contentCols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions._
     require(contentCols.nonEmpty, "need at least one content column")
     val o = oldDf.select(col(idCol) +:
       contentCols.map(c => col(c).as(s"__o_$c")): _*)

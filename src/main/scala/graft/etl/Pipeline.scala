@@ -1,14 +1,22 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import java.util.concurrent.{CompletionException, Executors, TimeUnit}
+
+import scala.util.{Failure, Try}
+
+import org.apache.spark.sql.{classic, DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.functions.{count, lit}
 
 import graft.schemas.Schemas
+import graft.schemas.Schemas.{Reference => Ref}
 import graft.sources.Sources
 
-/** The ordered ETL runner mirroring etl.py (SURVEY.md §3.1): two staging
-  * loads, then the five star inserts — fact first requires both staging
-  * tables; order matters and each step is an eager action (the reference's
-  * per-statement `conn.commit()` analogue, §4).
+/** The ETL runner mirroring etl.py (SURVEY.md §3.1): the two staging loads
+  * in order, then the five star inserts concurrently — each reads only
+  * staging, the one order that matters. Each step is one eager action with
+  * its own commit (the per-statement `conn.commit()` analogue, §4) and
+  * reports the row count its own write observed, not a read-back.
   *
   * Star tables are landed as parquet under `warehouseDir/<table>` through the
   * positional-insert writer: distribution and sort keys mirror the
@@ -20,53 +28,24 @@ object Pipeline {
 
   final case class Result(counts: Map[String, Long])
 
+  /** A table and the eager action that lands it, returning its row count. */
+  private type Step = (String, () => Long)
+
   def run(spark: SparkSession, eventsPath: String, songsPath: String,
           warehouseDir: String, timeDimLimit: Option[Int] = None): Result = {
-
-    // ---- COPY stage (sql_queries.py:136-150) ----
-    val stgEvents = Sources.readEventsJson(spark, eventsPath)
-    val stgSongs = Sources.readSongsJson(spark, songsPath)
-    stgEvents.write.mode(SaveMode.Overwrite)
-      .parquet(s"$warehouseDir/stg_song_events")
-    stgSongs.write.mode(SaveMode.Overwrite)
-      .parquet(s"$warehouseDir/stg_songs")
-
-    // Transforms read the LANDED staging data (as Redshift's inserts do),
-    // so the fact/dim builds scan columnar parquet, not raw JSON, and the
-    // staging write is the single pass over the raw input.
-    val events = spark.read.parquet(s"$warehouseDir/stg_song_events")
-    val songsStg = spark.read.parquet(s"$warehouseDir/stg_songs")
-
-    // ---- INSERT stage, reference order (sql_queries.py:326-332) ----
-    val steps: Seq[(String, DataFrame, org.apache.spark.sql.types.StructType,
-                    Option[String], Seq[String])] = Seq(
-      // (table, frame, DDL schema, distKey, sortKeys) — dist/sort per
-      // sql_queries.py:74-121 (song_id distkey + item_in_session sortkey on
-      // fact; registration/title/artist_name/date sortkeys on dims)
-      ("fct_song_plays", StarSchemaEtl.songPlays(events, songsStg),
-        Schemas.fctSongPlays, Some("song_id"), Seq("item_in_session")),
-      ("dim_users", StarSchemaEtl.users(events),
-        Schemas.dimUsers, None, Seq("registration")),
-      ("dim_songs", StarSchemaEtl.songs(songsStg),
-        Schemas.dimSongs, Some("song_id"), Seq("title")),
-      ("dim_artists", StarSchemaEtl.artists(songsStg),
-        Schemas.dimArtists, Some("artist_id"), Seq("artist_name")),
-      ("dim_time_dimensions",
-        StarSchemaEtl.timeDimensions(events, timeDimLimit),
-        Schemas.dimTimeDimensions, Some("time_key"), Seq("date"))
-    )
-
-    val counts = scala.collection.mutable.Map[String, Long](
-      "stg_song_events" -> events.count(),
-      "stg_songs" -> songsStg.count())
-
-    steps.foreach { case (table, df, schema, distKey, sortKeys) =>
-      val aligned = Sources.alignPositional(df, schema)
-      Sources.writeDistributed(aligned, s"$warehouseDir/$table",
-        distKey = distKey, sortKeys = sortKeys)
-      counts(table) = spark.read.parquet(s"$warehouseDir/$table").count()
-    }
-    Result(counts.toMap)
+    val staging = stagingFrames(spark, eventsPath, songsPath)
+    runSteps(spark, staging.map { case (t, df) =>
+      t -> (() => landParquet(df, s"$warehouseDir/$t")) }, {
+      // Transforms read the LANDED staging parquet (as Redshift's inserts
+      // do): the staging write is the single pass over the raw JSON, and its
+      // schema spares a footer-inference job.
+      val Seq(events, songsStg) = staging.map { case (t, df) =>
+        spark.read.schema(df.schema).parquet(s"$warehouseDir/$t") }
+      starFrames(events, songsStg, timeDimLimit).map { case (t, df, distKey, sortKeys) =>
+        t -> (() => landParquet(Sources.distributed(
+          Sources.alignPositional(df, ddl(t)), distKey, sortKeys), s"$warehouseDir/$t"))
+      }
+    })
   }
 
   /** FAITHFUL end-to-end run: the reference warehouse schema + semantics —
@@ -78,31 +57,21 @@ object Pipeline {
     * takes the first 100 events by (ts, sessionId, itemInSession) —
     * deterministic here, same shape there. A reference user who needs
     * their Redshift warehouse's layout runs THIS; the default `run`
-    * is the corrected/extended schema. */
+    * is the corrected/extended schema. No staging table lands here: the
+    * two staging counts count the raw input. */
   def runFaithful(spark: SparkSession, eventsPath: String, songsPath: String,
                   warehouseDir: String): Result = {
     val events = Sources.readEventsJson(spark, eventsPath)
     val songsStg = Sources.readSongsJson(spark, songsPath)
-    val steps: Seq[(String, DataFrame,
-                    org.apache.spark.sql.types.StructType)] = Seq(
-      ("fct_song_plays", StarSchemaEtl.songPlaysFaithful(events, songsStg),
-        Schemas.Reference.fctSongPlays),
-      ("dim_users", StarSchemaEtl.usersFaithful(events),
-        Schemas.Reference.dimUsers),
-      ("dim_songs", StarSchemaEtl.songs(songsStg),
-        Schemas.Reference.dimSongs),
-      ("dim_artists", StarSchemaEtl.artistsFaithful(songsStg),
-        Schemas.Reference.dimArtists),
-      ("dim_time_dimensions", StarSchemaEtl.timeDimensionsFaithful(events),
-        Schemas.Reference.dimTimeDimensions))
-    val counts = scala.collection.mutable.Map[String, Long](
-      "stg_song_events" -> events.count(), "stg_songs" -> songsStg.count())
-    steps.foreach { case (table, df, schema) =>
-      Sources.insertInto(Sources.alignPositional(df, schema), schema,
-        s"$warehouseDir/$table", SaveMode.Overwrite)
-      counts(table) = spark.read.parquet(s"$warehouseDir/$table").count()
-    }
-    Result(counts.toMap)
+    runSteps(spark, Seq("stg_song_events" -> (() => events.count()),
+      "stg_songs" -> (() => songsStg.count())), Seq(
+      ("fct_song_plays", StarSchemaEtl.songPlaysFaithful(events, songsStg), Ref.fctSongPlays),
+      ("dim_users", StarSchemaEtl.usersFaithful(events), Ref.dimUsers),
+      ("dim_songs", StarSchemaEtl.songs(songsStg), Ref.dimSongs),
+      ("dim_artists", StarSchemaEtl.artistsFaithful(songsStg), Ref.dimArtists),
+      ("dim_time_dimensions", StarSchemaEtl.timeDimensionsFaithful(events), Ref.dimTimeDimensions)
+    ).map { case (t, df, schema) => t -> (() =>
+      landParquet(Sources.alignPositional(df, schema), s"$warehouseDir/$t")) })
   }
 
   /** The create_tables.py → etl.py COMPOSITION: land staging and star data
@@ -121,34 +90,69 @@ object Pipeline {
   def runIntoCatalog(spark: SparkSession, eventsPath: String,
                      songsPath: String,
                      timeDimLimit: Option[Int] = None): Result = {
-    val counts = scala.collection.mutable.Map[String, Long]()
+    def insert(table: String, df: DataFrame): Step = table -> (() =>
+      countedWrite(Sources.alignPositional(df, ddl(table)))(_.write.insertInto(table)))
+    runSteps(spark, stagingFrames(spark, eventsPath, songsPath).map((insert _).tupled), {
+      // The staging frames read back from the catalog, so the fact/dim
+      // builds scan the landed columnar data — same single-pass-over-raw
+      // discipline as the path-based run.
+      starFrames(spark.table("stg_song_events"), spark.table("stg_songs"),
+        timeDimLimit).map { case (t, df, _, _) => insert(t, df) }
+    })
+  }
 
-    // ---- COPY stage: JSON → catalog staging tables ----
-    Sources.alignPositional(Sources.readEventsJson(spark, eventsPath),
-      Schemas.stgSongEvents).write.insertInto("stg_song_events")
-    Sources.alignPositional(Sources.readSongsJson(spark, songsPath),
-      Schemas.stgSongs).write.insertInto("stg_songs")
-    val events = spark.table("stg_song_events")
-    val songsStg = spark.table("stg_songs")
-    counts("stg_song_events") = events.count()
-    counts("stg_songs") = songsStg.count()
+  private val ddl = Schemas.starTables.toMap
 
-    // ---- INSERT stage, reference order (sql_queries.py:326-332) ----
-    // The staging frames read back from the catalog, so the fact/dim
-    // builds scan the landed columnar data — same single-pass-over-raw
-    // discipline as the path-based run.
-    val inserts: Seq[(String, DataFrame)] = Seq(
-      "fct_song_plays" -> StarSchemaEtl.songPlays(events, songsStg),
-      "dim_users" -> StarSchemaEtl.users(events),
-      "dim_songs" -> StarSchemaEtl.songs(songsStg),
-      "dim_artists" -> StarSchemaEtl.artists(songsStg),
-      "dim_time_dimensions" ->
-        StarSchemaEtl.timeDimensions(events, timeDimLimit))
-    inserts.foreach { case (table, df) =>
-      Sources.alignPositional(df, Schemas.starTables.toMap.apply(table))
-        .write.insertInto(table)
-      counts(table) = spark.table(table).count()
-    }
-    Result(counts.toMap)
+  /** COPY stage (sql_queries.py:136-150): the two staging loads, in order. */
+  private def stagingFrames(spark: SparkSession, eventsPath: String,
+                            songsPath: String): Seq[(String, DataFrame)] =
+    Seq("stg_song_events" -> Sources.readEventsJson(spark, eventsPath),
+      "stg_songs" -> Sources.readSongsJson(spark, songsPath))
+
+  /** INSERT stage (sql_queries.py:326-332): (table, frame, distKey,
+    * sortKeys) — dist/sort per sql_queries.py:74-121 (song_id distkey +
+    * item_in_session sortkey on fact; registration/title/artist_name/date
+    * sortkeys on dims). */
+  private def starFrames(events: DataFrame, songsStg: DataFrame, timeDimLimit: Option[Int])
+      : Seq[(String, DataFrame, Option[String], Seq[String])] = Seq(
+    ("fct_song_plays", StarSchemaEtl.songPlays(events, songsStg),
+      Some("song_id"), Seq("item_in_session")),
+    ("dim_users", StarSchemaEtl.users(events), None, Seq("registration")),
+    ("dim_songs", StarSchemaEtl.songs(songsStg), Some("song_id"), Seq("title")),
+    ("dim_artists", StarSchemaEtl.artists(songsStg), Some("artist_id"), Seq("artist_name")),
+    ("dim_time_dimensions", StarSchemaEtl.timeDimensions(events, timeDimLimit),
+      Some("time_key"), Seq("date")))
+
+  /** Run `write` over `df` and return the rows it wrote, observed right
+    * under the write, where no empty stage an adaptive plan drops can take
+    * the count with it. Read only after `write` returned: a failed write's
+    * observation may hold a partial count. */
+  private def countedWrite(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val rows = Observation()
+    write(df.observe(rows, count(lit(1)).as("rows")))
+    rows.get("rows").asInstanceOf[Long]
+  }
+
+  private def landParquet(df: DataFrame, path: String): Long =
+    countedWrite(df)(_.write.mode(SaveMode.Overwrite).parquet(path))
+
+  /** Run `staging` in order, then all of `inserts` at once, one thread each,
+    * built after staging has landed. Each thread carries the caller's active
+    * session and local properties (job tags, query names), so its jobs are
+    * attributed as the caller's. Once every insert has finished, the first
+    * failure in step order is rethrown as its own exception. */
+  private def runSteps(spark: SparkSession, staging: Seq[Step],
+                       inserts: => Seq[Step]): Result = {
+    val staged = staging.map { case (t, land) => t -> land() }
+    val steps = inserts
+    val pool = Executors.newFixedThreadPool(steps.size, new Thread(_, "graft-etl-insert"))
+    try {
+      val session = spark.asInstanceOf[classic.SparkSession]
+      val landed = steps.map { case (t, land) =>
+        t -> SQLExecution.withThreadLocalCaptured(session, pool)(land()) }
+        .map { case (t, f) => t -> Try(f.join()).recoverWith {
+          case e: CompletionException if e.getCause != null => Failure(e.getCause) } }
+      Result((staged ++ landed.map { case (t, rows) => t -> rows.get }).toMap)
+    } finally { pool.shutdown(); pool.awaitTermination(1, TimeUnit.MINUTES) }
   }
 }

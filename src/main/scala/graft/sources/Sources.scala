@@ -165,20 +165,12 @@ object Sources {
   // Sinks
   // -------------------------------------------------------------------------
 
-  /** S3 — positional append, the reference's `INSERT INTO t SELECT …`
-    * without a column list (sql_queries.py:156,185,196,205,216): the frame
-    * is coerced to the target schema BY POSITION, not by name, then appended.
-    * One misordered column would silently corrupt on name-based writes; this
-    * makes the positional contract explicit and type-checked.
-    */
-  def insertInto(df: DataFrame, target: StructType, path: String,
-                 mode: SaveMode = SaveMode.Append): Unit = {
-    val aligned = alignPositional(df, target)
-    aligned.write.mode(mode).parquet(path)
-  }
-
-  /** Coerce a frame to `target` by POSITION: arity must match; each column is
-    * renamed and cast to the target field. */
+  /** S3 — the positional contract of the reference's `INSERT INTO t
+    * SELECT …` without a column list (sql_queries.py:156,185,196,205,216):
+    * coerce a frame to `target` BY POSITION, not by name — arity must
+    * match; each column is renamed and cast to the target field. One
+    * misordered column would silently corrupt a name-based write; this
+    * makes the contract explicit and type-checked. */
   def alignPositional(df: DataFrame, target: StructType): DataFrame = {
     require(df.schema.length == target.length,
       s"positional insert arity mismatch: ${df.schema.length} vs ${target.length}")
@@ -189,15 +181,15 @@ object Sources {
     df.select(cols.toSeq: _*)
   }
 
-  /** Scale-aware parquet writer: repartition on the distribution key (the
+  /** Scale-aware parquet layout: repartition on the distribution key (the
     * Redshift `distkey` analogue — co-locates join keys) and sort within
     * partitions on the sort key (the `sortkey` analogue — tightens parquet
     * min/max row-group stats so zone-map-style pruning works). SURVEY.md §4.
+    * The caller writes the returned frame.
     */
-  def writeDistributed(df: DataFrame, path: String,
-                       distKey: Option[String] = None,
-                       sortKeys: Seq[String] = Nil,
-                       numPartitions: Option[Int] = None): Unit = {
+  def distributed(df: DataFrame, distKey: Option[String] = None,
+                  sortKeys: Seq[String] = Nil,
+                  numPartitions: Option[Int] = None): DataFrame = {
     import org.apache.spark.sql.functions.col
     val parted = distKey match {
       case Some(k) => numPartitions
@@ -205,10 +197,8 @@ object Sources {
         .getOrElse(df.repartition(col(k)))
       case None => numPartitions.map(df.repartition).getOrElse(df)
     }
-    val sorted =
-      if (sortKeys.nonEmpty) parted.sortWithinPartitions(sortKeys.map(col): _*)
-      else parted
-    sorted.write.mode(SaveMode.Overwrite).parquet(path)
+    if (sortKeys.nonEmpty) parted.sortWithinPartitions(sortKeys.map(col): _*)
+    else parted
   }
 
   /** Hive-style partitioned parquet (the file-level pruning path, SURVEY.md

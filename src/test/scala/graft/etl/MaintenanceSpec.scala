@@ -190,4 +190,22 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(got == Map(1L -> "unchanged", 2L -> "changed", 3L -> "unchanged",
       4L -> "removed", 5L -> "changed", 6L -> "added"))
   }
+
+  test("deleteByKey / mergeUpsert: counts observed by the rewrite hold on empty inputs") {
+    val spark0 = spark
+    import spark0.implicits._
+    val dir = Files.createTempDirectory("graft-empty-maint").toString + "/t"
+    Seq.empty[(Long, Long, String)].toDF("id", "v", "payload").write.parquet(dir)
+    assert(Maintenance.deleteByKey(spark, dir, Seq(1L).toDF("id"), "id") ==
+      Maintenance.DeleteReport(0L, 0L, 0L))
+    val none = Seq.empty[(Long, Long, String)].toDF("id", "v", "payload")
+    assert(Maintenance.mergeUpsert(spark, dir, none, "id", "v") ==
+      Maintenance.UpsertReport(0L, 0L, 0L))
+    val ups = Seq((1L, 1L, "a"), (1L, 2L, "b"), (2L, 1L, "c")).toDF("id", "v", "payload")
+    assert(Maintenance.mergeUpsert(spark, dir, ups, "id", "v") ==
+      Maintenance.UpsertReport(0L, 3L, 2L))
+    assert(Maintenance.deleteByKey(spark, dir, none.select("id"), "id") ==
+      Maintenance.DeleteReport(2L, 0L, 2L))
+    assert(spark.read.parquet(dir).count() == 2)
+  }
 }

@@ -1,17 +1,26 @@
 package graft.etl
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.GraftBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.scalatest.concurrent.{ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
 import graft.TestSpark
+import graft.schemas.Schemas
 import graft.sources.Sources
+import graft.tools.{PlanTrace, Run}
 
 /** End-to-end ETL parity test on the Sparkify fixtures (FIXTURES.md §A):
   * golden counts + derived-value spot checks mirroring the Fiddle.ipynb
   * probes (SURVEY.md §5).
   */
-class PipelineSpec extends AnyFunSuite {
+class PipelineSpec extends AnyFunSuite with TimeLimits {
   lazy val spark = TestSpark.spark
 
   lazy val warehouse =
@@ -195,5 +204,102 @@ class PipelineSpec extends AnyFunSuite {
         .toDF(songs.columns: _*))
     val fct = StarSchemaEtl.songPlays(events, withNullSong)
     assert(fct.filter("song_id IS NOT NULL").count() == 3)
+  }
+
+  private val tables = Schemas.starTables.map(_._1)
+  private val goldenCounts = Map("stg_song_events" -> 7L, "stg_songs" -> 4L,
+    "fct_song_plays" -> 4L, "dim_users" -> 4L, "dim_songs" -> 4L,
+    "dim_artists" -> 3L, "dim_time_dimensions" -> 4L)
+
+  private def runnerThreads: Seq[Thread] =
+    Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(t => t.getName == "graft-etl-insert" && t.isAlive)
+
+  test("a failed insert fails the run with its own error; no runner thread outlives it") {
+    val dir = Files.createTempDirectory("graft-etl-fail")
+    // a non-play event whose ts overflows the seconds-to-timestamp
+    // conversion: staging lands it, the fact (NextSong only) and the other
+    // dims never convert it, and the time-dimension insert fails in a task
+    val events = dir.resolve("events.json")
+    Files.write(events, (Files.readAllLines(Paths.get(
+      TestSpark.resource("/sparkify/log_data.json"))).asScala :+
+      """{"auth":"Logged Out","itemInSession":9,"level":"free","page":"Home","sessionId":999,"status":200,"ts":9223372036854775000}""")
+      .asJava)
+    val err = failAfter(Span(120, Seconds)) {
+      intercept[Exception] {
+        Pipeline.run(spark, events.toString,
+          TestSpark.resource("/sparkify/song_data.json"),
+          dir.resolve("warehouse").toString)
+      }
+    }(ThreadSignaler)
+    val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString(" | ")
+    assert(chain.toLowerCase.contains("overflow"), chain)
+    assert(runnerThreads.isEmpty, runnerThreads)
+  }
+
+  test("empty events and songs files: every table lands with 0 rows") {
+    val dir = Files.createTempDirectory("graft-etl-empty")
+    val events = Files.createFile(dir.resolve("events.json")).toString
+    val songs = Files.createFile(dir.resolve("songs.json")).toString
+    val warehouse = dir.resolve("warehouse").toString
+    val r = Pipeline.run(spark, events, songs, warehouse)
+    assert(r.counts == tables.map(_ -> 0L).toMap)
+    tables.foreach(t => assert(spark.read.parquet(s"$warehouse/$t").count() == 0, t))
+  }
+
+  test("one pass: every job is the run's own and every root execution is a write") {
+    val sc = spark.sparkContext
+    val jobs = new ConcurrentLinkedQueue[java.util.Properties]
+    val all = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.add(j.properties)
+    }
+    assert(GraftBus.drain(sc, 60000))
+    sc.addSparkListener(all)
+    val (rec, plans) = try {
+      PlanTrace.capture(spark) {
+        Run.query(spark, "pipeline-one-pass", {
+          Pipeline.run(spark, TestSpark.resource("/sparkify/log_data.json"),
+            TestSpark.resource("/sparkify/song_data.json"),
+            Files.createTempDirectory("graft-etl-pass").toString)
+          spark.emptyDataFrame
+        }, _ => ())
+      }
+    } finally {
+      GraftBus.drain(sc, 60000)
+      sc.removeSparkListener(all)
+    }
+    assert(rec.ok, rec.error)
+    // the concurrent inserts carry the caller's local properties: the run
+    // owns every job the listener saw, and each ran inside a SQL execution
+    // (a parquet schema-inference job would not)
+    assert(rec.jobs == jobs.size, jobs.asScala.map(_.getProperty("graft.query")))
+    assert(jobs.asScala.forall(_.getProperty("spark.sql.execution.id") != null))
+    // two staging writes and five inserts; no read-back execution
+    assert(plans.size == 7, plans)
+    assert(plans.forall(_.contains("InsertIntoHadoopFsRelationCommand")), plans)
+  }
+
+  test("runFaithful counts: staging from the raw input, star tables from their writes") {
+    val dir = Files.createTempDirectory("graft-faithful-counts").toString
+    val r = Pipeline.runFaithful(spark,
+      TestSpark.resource("/sparkify/log_data.json"),
+      TestSpark.resource("/sparkify/song_data.json"), dir)
+    assert(r.counts("stg_song_events") == 7 && r.counts("stg_songs") == 4)
+    tables.drop(2).foreach { t =>
+      assert(r.counts(t) == spark.read.parquet(s"$dir/$t").count(), t)
+    }
+  }
+
+  test("runIntoCatalog: concurrent inserts land exactly, repeat after repeat") {
+    (1 to 5).foreach { i =>
+      Ddl.recreateAll(spark)
+      val r = Pipeline.runIntoCatalog(spark,
+        TestSpark.resource("/sparkify/log_data.json"),
+        TestSpark.resource("/sparkify/song_data.json"))
+      assert(r.counts == goldenCounts, s"repeat $i")
+      tables.foreach(t => assert(r.counts(t) == spark.table(t).count(), s"$t, repeat $i"))
+    }
+    Ddl.dropAll(spark)
   }
 }
