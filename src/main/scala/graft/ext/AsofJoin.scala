@@ -24,8 +24,8 @@ import graft.plans.{AsofJoinNode, AsofJoinStrategy}
   * matches=True` semantics). A NULL key matches nothing, as in SQL: the
   * left row keeps a NULL payload.
   *
-  * The right side must be unique per (key, ts) — enforce upstream (e.g.
-  * aggregate) — otherwise which same-ts row wins is nondeterministic.
+  * Among same-(key, ts) right rows the highest non-NULL `tie` wins, so
+  * `tie = payload` is `max(payload)` per (key, ts) with no aggregate.
   *
   * The planner strategy is registered via `GraftExtensions`
   * (`injectPlannerStrategy`) for extension-built sessions; for any other
@@ -39,21 +39,24 @@ object AsofJoin {
     * @param rightCols right-side payload columns to carry onto matches
     * @param toleranceSeconds optional max staleness: matches older than
     *   left.ts - tolerance are dropped (NULL payload), pandas `tolerance`
+    * @param tie optional right column; its highest value wins a same-ts tie
     */
   def backward(left: DataFrame, right: DataFrame, key: String, ts: String,
                rightCols: Seq[String],
-               toleranceSeconds: Option[Long] = None): DataFrame =
-    join(left, right, key, ts, rightCols, toleranceSeconds, forward = false)
+               toleranceSeconds: Option[Long] = None,
+               tie: Option[String] = None): DataFrame =
+    join(left, right, key, ts, rightCols, toleranceSeconds, tie, forward = false)
 
   /** Forward as-of: earliest right at-or-after left.ts. */
   def forward(left: DataFrame, right: DataFrame, key: String, ts: String,
               rightCols: Seq[String],
-              toleranceSeconds: Option[Long] = None): DataFrame =
-    join(left, right, key, ts, rightCols, toleranceSeconds, forward = true)
+              toleranceSeconds: Option[Long] = None,
+              tie: Option[String] = None): DataFrame =
+    join(left, right, key, ts, rightCols, toleranceSeconds, tie, forward = true)
 
   private def join(left: DataFrame, right: DataFrame, key: String,
                    ts: String, rightCols: Seq[String],
-                   toleranceSeconds: Option[Long],
+                   toleranceSeconds: Option[Long], tie: Option[String],
                    forward: Boolean): DataFrame = {
     // rightCols are appended to the left schema verbatim — a name shared
     // with a left column would produce ambiguous output columns far from
@@ -84,7 +87,8 @@ object AsofJoin {
       attr(lPlan.output, key, "left"), attr(rOut, key, "right"),
       attr(lPlan.output, ts, "left"), attr(rOut, ts, "right"),
       rightCols.map(c => attr(rOut, c, "right")),
-      forward, toleranceSeconds.map(_ * 1000000L))
+      forward, toleranceSeconds.map(_ * 1000000L),
+      tie.map(attr(rOut, _, "right")))
     GraftExprBridge.ofRows(spark, node)
   }
 }

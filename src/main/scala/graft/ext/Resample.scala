@@ -21,11 +21,11 @@ object Resample {
 
   /** Forward-fill `valueCol` onto a `stepSeconds`-spaced grid per key.
     * Grid start is aligned DOWN to a step multiple (epoch-anchored), so
-    * grids of different keys line up. The right side is made unique per
-    * (key, ts) via max() — the as-of contract. Keys whose span would
-    * exceed `maxPointsPerKey` grid points are dropped (the RangeJoin/
-    * Dedup cap discipline: one pathological key must not explode the
-    * output). */
+    * grids of different keys line up. Several observations at one
+    * (key, ts) fill with their max: the value is the as-of tie. Keys
+    * whose span would exceed `maxPointsPerKey` grid points are dropped
+    * (the RangeJoin/Dedup cap discipline: one pathological key must not
+    * explode the output). */
   def forwardFill(df: DataFrame, keyCol: String, tsCol: String,
                   valueCol: String, stepSeconds: Long,
                   maxPointsPerKey: Long = 100000L): DataFrame = {
@@ -42,9 +42,8 @@ object Resample {
       .select(col(keyCol),
         explode(sequence(col("__g0"), col("__g1"), lit(stepUs))).as("__gus"))
       .select(col(keyCol), timestamp_micros(col("__gus")).as(tsCol))
-    val obs = df.groupBy(col(keyCol), col(tsCol))
-      .agg(max(col(valueCol)).as(valueCol))
-    AsofJoin.backward(grid, obs, keyCol, tsCol, Seq(valueCol))
+    AsofJoin.backward(grid, df.select(keyCol, tsCol, valueCol), keyCol,
+      tsCol, Seq(valueCol), tie = Some(valueCol))
   }
 
   /** Time-weighted average per key — the step-function mean a metrics or

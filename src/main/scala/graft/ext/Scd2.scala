@@ -14,15 +14,14 @@ import org.apache.spark.sql.functions._
   * per (key, attribute-version) with a half-open validity interval
   * `[valid_from, valid_to)`, `valid_to IS NULL` marking the current row.
   *
-  * Scale shape (both functions): everything is windows partitioned by the
+  * Scale shape: the history functions are windows partitioned by the
   * dimension key — ONE hash exchange on the key, then per-user sorted
-  * passes. No join at all in [[pointInTime]]: the classic fact×dim interval
-  * join materializes facts_u × versions_u rows per user BEFORE its range
-  * filter (quadratic under a whale user — the same hazard as the
-  * stream-stream interval join, see PERF_NOTES "Streaming under a whale
-  * key"), so instead facts and changes are UNIONED and the active version
-  * is carried forward with one `last(ignoreNulls)` running window: strictly
-  * O(facts_u + versions_u) per user, one shuffle total.
+  * passes. [[pointInTime]] is no interval join: the classic fact×dim
+  * interval join materializes facts_u × versions_u rows per user BEFORE
+  * its range filter (quadratic under a whale user — the same hazard as
+  * the stream-stream interval join, see PERF_NOTES "Streaming under a
+  * whale key"), so instead it is the as-of merge: one exchange and one
+  * sort per side, then O(facts_u + versions_u) per user.
   */
 object Scd2 {
 
@@ -98,43 +97,24 @@ object Scd2 {
 
   /** Point-in-time attribute lookup: for every fact row, the attribute
     * version active at the fact's timestamp (change at ts t is effective
-    * for facts with ts ≥ t; facts before the key's first change get NULL).
+    * for facts with ts ≥ t; facts before the key's first change, and
+    * facts with a NULL key, get NULL).
     *
-    * Join-free: facts and changes are unioned and sorted per key; the
-    * active value is `last(attr, ignoreNulls)` over a running frame. At
-    * equal timestamps changes sort BEFORE facts (inclusive semantics) and
-    * among themselves by tieCol, so the highest-tie change wins — exactly
-    * the row the half-open-interval formulation keeps (earlier same-ts
-    * versions get empty `[t, t)` intervals).
+    * One backward [[AsofJoin]] over the non-NULL observations, tieCol as
+    * its tie: among same-ts changes the highest tie wins — the row the
+    * half-open-interval formulation keeps (earlier same-ts versions get
+    * empty `[t, t)` intervals). No change filter: the latest observation
+    * carries the attribute of the latest change.
     *
     * Output: the fact columns in `factCols`, plus attrCol (NULL when no
     * version is active yet). */
   def pointInTime(facts: DataFrame, observations: DataFrame,
                   keyCol: String, tsCol: String, tieCol: String,
                   attrCol: String, factCols: Seq[String]): DataFrame = {
-    val changes = observations
-      .withColumn("__prev", lag(col(attrCol), 1).over(
-        Window.partitionBy(keyCol).orderBy(col(tsCol), col(tieCol))))
-      .filter(col("__prev").isNull || col("__prev") =!= col(attrCol))
-      .select(col(keyCol), unix_micros(col(tsCol)).as("__ord"),
-        col(tieCol).cast("long").as("__tie"), col(attrCol).as("__attr"),
-        lit(1).as("__chg"))
-    val f = facts.select(
-      (col(keyCol) +: unix_micros(col(tsCol)).as("__ord") +:
-        col(tieCol).cast("long").as("__tie") +:
-        lit(null).cast("string").as("__attr") +: lit(0).as("__chg") +:
-        factCols.map(c => col(c).as(s"__f_$c"))): _*)
-    val c = changes
-      .select((col(keyCol) +: col("__ord") +: col("__tie") +:
-        col("__attr") +: col("__chg") +:
-        factCols.map(c0 => lit(null).cast(
-          facts.schema(c0).dataType).as(s"__f_$c0"))): _*)
-    val w = Window.partitionBy(keyCol)
-      .orderBy(col("__ord"), col("__chg").desc, col("__tie"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    f.unionByName(c)
-      .withColumn(attrCol, last(col("__attr"), ignoreNulls = true).over(w))
-      .filter(col("__chg") === 0)
-      .select(factCols.map(c0 => col(s"__f_$c0").as(c0)) :+ col(attrCol): _*)
+    val obs = observations.filter(col(attrCol).isNotNull)
+      .select(keyCol, tsCol, tieCol, attrCol)
+    AsofJoin.backward(facts, obs, keyCol, tsCol, Seq(attrCol),
+        tie = Some(tieCol))
+      .select((factCols :+ attrCol).map(col): _*)
   }
 }

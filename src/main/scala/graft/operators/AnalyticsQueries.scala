@@ -415,11 +415,10 @@ object AnalyticsQueries {
 
   /** Point-in-time dimension lookup ([[graft.ext.Scd2.pointInTime]]):
     * every click is attributed to the tier ACTIVE AT ITS TIMESTAMP, not
-    * the user's current tier. Engine side is join-free (union + one
-    * running window per user — O(facts+versions), whale-safe); the oracle
-    * independently implements the textbook interval LEFT JOIN, so the two
-    * formulations verify each other. Clicks before the first purchase get
-    * 'unknown'. */
+    * the user's current tier. Engine side is one backward as-of merge
+    * (O(facts+versions) per user, whale-safe); the oracle independently
+    * implements the textbook interval LEFT JOIN, so the two formulations
+    * verify each other. Clicks before the first purchase get 'unknown'. */
   val scd2Lookup = Q(
     "q_x_scd2_lookup",
     "SCD2 point-in-time lookup: tier active at each click's timestamp",

@@ -910,8 +910,9 @@ object ExtensionQueries {
     * click event picks up the latest purchase value at-or-before it for
     * the same user. Oracle = DuckDB's native ASOF LEFT JOIN; both sides
     * see identical microsecond timestamps (Spark truncates the nanos
-    * parquet on read; the oracle date_truncs to match), and purchases are
-    * pre-aggregated per (user, ts) so same-ts winners are deterministic. */
+    * parquet on read; the oracle date_truncs to match). Same-ts purchases
+    * resolve in the merge: `tie = qv` picks the highest value, the
+    * oracle's per-(user, ts) `max`. */
   val asofJoin = Q(
     "q_x_asof_join",
     "As-of join: latest purchase at-or-before each click, per user",
@@ -920,8 +921,9 @@ object ExtensionQueries {
       val probes = e.filter(col("event_type") === "click")
         .select(col("event_id"), col("user_id"), col("ts"))
       val quotes = e.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("ts")).agg(max(col("value")).as("qv"))
-      graft.ext.AsofJoin.backward(probes, quotes, "user_id", "ts", Seq("qv"))
+        .select(col("user_id"), col("ts"), col("value").as("qv"))
+      graft.ext.AsofJoin.backward(probes, quotes, "user_id", "ts", Seq("qv"),
+        tie = Some("qv"))
         .select(col("event_id"), col("user_id"),
           round(col("qv"), 2).as("asof_value"))
     },
@@ -946,8 +948,9 @@ object ExtensionQueries {
       val probes = e.filter(col("event_type") === "click")
         .select(col("event_id"), col("user_id"), col("ts"))
       val quotes = e.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("ts")).agg(max(col("value")).as("qv"))
-      graft.ext.AsofJoin.forward(probes, quotes, "user_id", "ts", Seq("qv"))
+        .select(col("user_id"), col("ts"), col("value").as("qv"))
+      graft.ext.AsofJoin.forward(probes, quotes, "user_id", "ts", Seq("qv"),
+        tie = Some("qv"))
         .select(col("event_id"), col("user_id"),
           round(col("qv"), 2).as("asof_value"))
     },

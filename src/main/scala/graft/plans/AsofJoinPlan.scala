@@ -3,8 +3,9 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
-  Ascending, Attribute, BindReferences, Expression, GenericInternalRow,
-  JoinedRow, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
+  Ascending, Attribute, BindReferences, Descending, Expression,
+  GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection,
+  UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{
   ClusteredDistribution, Distribution, Partitioning}
@@ -19,9 +20,10 @@ import org.apache.spark.sql.types.{DataType, LongType, TimestampType}
   * left row, attach the payload of the single right row with the latest
   * right.ts ≤ left.ts (backward) or earliest right.ts ≥ left.ts (forward)
   * for the same key; ties at equal ts match; optional tolerance gates
-  * stale matches to NULL.
+  * stale matches to NULL; among same-(key, ts) right rows the highest
+  * non-NULL `tie` wins (no tie: any of them).
   *
-  * All of `leftKey/rightKey/leftTs/rightTs/payload` are resolved
+  * All of `leftKey/rightKey/leftTs/rightTs/payload/tie` are resolved
   * attributes of the respective child (the `AsofJoin` builder re-aliases
   * the right side first, so the two sides never share expr ids even in a
   * self-join). Output = left columns ++ payload columns (nullable —
@@ -37,7 +39,8 @@ case class AsofJoinNode(
     leftKey: Attribute, rightKey: Attribute,
     leftTs: Attribute, rightTs: Attribute,
     payload: Seq[Attribute],
-    forward: Boolean, toleranceMicros: Option[Long]) extends BinaryNode {
+    forward: Boolean, toleranceMicros: Option[Long],
+    tie: Option[Attribute]) extends BinaryNode {
 
   require(AsofJoinNode.sameType(leftKey.dataType, rightKey.dataType),
     s"key type mismatch: ${leftKey.dataType} vs ${rightKey.dataType}")
@@ -69,7 +72,7 @@ object AsofJoinStrategy extends SparkStrategy {
     case n: AsofJoinNode =>
       AsofJoinExec(planLater(n.left), planLater(n.right),
         n.leftKey, n.rightKey, n.leftTs, n.rightTs,
-        n.payload, n.forward, n.toleranceMicros) :: Nil
+        n.payload, n.forward, n.toleranceMicros, n.tie) :: Nil
     case _ => Nil
   }
 }
@@ -82,6 +85,10 @@ object AsofJoinStrategy extends SparkStrategy {
   * the merge itself is then a per-partition two-iterator walk carrying
   * O(1) state (the current as-of candidate), never a buffered frame.
   *
+  * The tie is a third right sort key and costs the merge no code: backward
+  * carries the last row passed (ascending, NULLs first), forward takes the
+  * first (descending, NULLs last).
+  *
   * Output preserves the left side's (key, ts) ordering, so a downstream
   * window/as-of on the same key re-uses both the partitioning and the
   * sort.
@@ -91,7 +98,8 @@ case class AsofJoinExec(
     leftKey: Attribute, rightKey: Attribute,
     leftTs: Attribute, rightTs: Attribute,
     payload: Seq[Attribute],
-    forward: Boolean, toleranceMicros: Option[Long])
+    forward: Boolean, toleranceMicros: Option[Long],
+    tie: Option[Attribute])
   extends SparkPlan with BinaryExecNode {
 
   override def output: Seq[Attribute] =
@@ -103,7 +111,8 @@ case class AsofJoinExec(
 
   override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(
     Seq(SortOrder(leftKey, Ascending), SortOrder(leftTs, Ascending)),
-    Seq(SortOrder(rightKey, Ascending), SortOrder(rightTs, Ascending)))
+    Seq(SortOrder(rightKey, Ascending), SortOrder(rightTs, Ascending)) ++
+      tie.map(SortOrder(_, if (forward) Descending else Ascending)))
 
   override def outputPartitioning: Partitioning = left.outputPartitioning
 

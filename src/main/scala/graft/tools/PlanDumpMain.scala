@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, SQLExecution}
 
 import graft.operators.{Catalog, Q}
 
@@ -13,10 +13,11 @@ import graft.operators.{Catalog, Q}
   * `list` prints every registered query. Otherwise each named catalog
   * query is built under [[PlanTrace.capture]] and its dump is written to
   * `<outDir>/<name>_<suffix>.txt` (e.g. plans/r13/q_x_assoc_rules_before.txt),
-  * or to stdout when outDir is `-`. A dump is the formatted plan of the
-  * frame the query returns, followed by the plan of every SQL execution
-  * that ran while it was built (checkpoints, probes): for an operator that
-  * checkpoints, the final plan alone is a bare `Scan ExistingRDD`.
+  * or to stdout when outDir is `-`. A dump is the final adaptive plan
+  * (`isFinalPlan=true`: the frame is run first) of the frame the query
+  * returns, followed by the plan of every SQL execution that ran while it
+  * was built (checkpoints, probes): for an operator that checkpoints, the
+  * final plan alone is a bare `Scan ExistingRDD`.
   *
   * All queries run in ONE session with Bench's conf, against
   * SPARK_GRAFT_SF_DIR (default sf0.1), so the dumped plan is the benched
@@ -51,7 +52,10 @@ object PlanDumpMain {
     val built = executed.zipWithIndex.map { case (p, i) =>
       s"\n== Executed while building (${i + 1} of ${executed.size}) ==\n$p"
     }
-    normalize(df.queryExecution.explainString(FormattedMode) + built.mkString)
+    // run the frame's own QueryExecution (count() would plan a new one)
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("plandump"))(qe.toRdd.foreach(_ => ()))
+    normalize(qe.explainString(FormattedMode) + built.mkString)
   }
 
   def main(args: Array[String]): Unit = args.toList match {

@@ -30,9 +30,11 @@ class JoinPropertySpec extends AnyFunSuite {
     })
 
   // as-of inputs: left (id, key, ts millis); right (key, ts millis, px),
-  // unique per (key, ts) — the operator contract
+  // unique per (key, ts), so no tie is needed
   private type L = (Long, Option[Long], Long)
   private type R = (Option[Long], Long, Double)
+  // right rows that may share a (key, ts): (key, ts millis, px, tie)
+  private type RT = (Option[Long], Long, Double, Option[Long])
 
   // (id, key, offset) rows with about one key in six NULL, offsets scaled
   // to millis; right rows keep the max id per (key, ts) as their px
@@ -55,26 +57,79 @@ class JoinPropertySpec extends AnyFunSuite {
     * an EQUAL NON-NULL key at-or-before (backward) or at-or-after
     * (forward) the left ts, no further away than the tolerance. */
   private def assertAsof(left: Seq[L], right: Seq[R], forward: Boolean,
-                         tolSeconds: Option[Long], label: String): Unit = {
+                         tolSeconds: Option[Long], label: String): Unit =
+    assertAsofTie(left, right.map { case (k, t, px) => (k, t, px, None) },
+      forward, tolSeconds, label, withTie = false)
+
+  /** [[assertAsof]] on right rows that may share a (key, ts): with the tie
+    * column passed, the answer is any row at the nearest ts with the
+    * highest tie (a non-NULL tie beats NULL). */
+  private def assertAsofTie(left: Seq[L], right: Seq[RT], forward: Boolean,
+                            tolSeconds: Option[Long], label: String,
+                            withTie: Boolean = true): Unit = {
     val spark0 = spark
     import spark0.implicits._
     val ldf = left.map { case (id, k, t) => (id, k, new Timestamp(t)) }
       .toDF("id", "k", "ts")
-    val rdf = right.map { case (k, t, px) => (k, new Timestamp(t), px) }
-      .toDF("k", "ts", "px")
+    val rdf = right.map { case (k, t, px, tie) => (k, new Timestamp(t), px, tie) }
+      .toDF("k", "ts", "px", "tie")
     val join = if (forward) AsofJoin.forward _ else AsofJoin.backward _
-    val rows = join(ldf, rdf, "k", "ts", Seq("px"), tolSeconds).collect()
+    val rows = join(ldf, rdf, "k", "ts", Seq("px"), tolSeconds,
+      Option.when(withTie)("tie")).collect()
     assert(rows.length == left.size, s"$label: every left row exactly once")
     val got = rows.map(r => r.getAs[Long]("id") ->
       Option(r.getAs[java.lang.Double]("px")).map(_.toDouble)).toMap
     left.foreach { case (id, k, t) =>
-      val cands = right.filter { case (rk, rt, _) =>
+      val cands = right.filter { case (rk, rt, _, _) =>
         k.isDefined && rk == k && (if (forward) rt >= t else rt <= t) &&
           tolSeconds.forall(s => math.abs(rt - t) <= s * 1000L)
       }
-      val expected =
-        (if (forward) cands.minByOption(_._2) else cands.maxByOption(_._2)).map(_._3)
-      assert(got(id) == expected, s"$label id=$id key=$k ts=$t")
+      val expected: Set[Option[Double]] =
+        if (cands.isEmpty) Set(None) else {
+          val nearest = if (forward) cands.map(_._2).min else cands.map(_._2).max
+          val atTs = cands.filter(_._2 == nearest)
+          val top = atTs.map(_._4).max
+          atTs.filter(_._4 == top).map(r => Option(r._3)).toSet
+        }
+      assert(expected(got(id)), s"$label id=$id key=$k ts=$t got=${got(id)} expected=$expected")
+    }
+  }
+
+  // duplicate (key, ts) right rows; px is the row id, so the winner is
+  // visible, and the tie is NULL in about one row in five
+  private def asofTieInputs(seed: Long): (Seq[L], Seq[RT]) = {
+    val (left, _) = asofInputs(50, 0, 3L, 30, 1000L, seed)
+    val right = sample(Gen.listOfN(60, for {
+      key <- Gen.frequency(
+        1 -> Gen.const(Option.empty[Long]), 5 -> Gen.choose(0L, 3L).map(Option(_)))
+      off <- Gen.choose(0, 30)
+      tie <- Gen.frequency(
+        1 -> Gen.const(Option.empty[Long]), 4 -> Gen.choose(0L, 9L).map(Option(_)))
+    } yield (key, base + off * 1000L, tie)), seed + 200).zipWithIndex.map {
+      case ((k, t, tie), i) => (k, t, i.toDouble, tie)
+    }
+    (left, right)
+  }
+
+  test("AsofJoin.backward with a tie matches brute force on duplicate right rows (5 seeds)") {
+    for (seed <- 41L to 45L) {
+      val (left, right) = asofTieInputs(seed)
+      assertAsofTie(left, right, forward = false, None, s"tie seed=$seed")
+    }
+  }
+
+  test("AsofJoin.forward with a tie matches brute force on duplicate right rows (5 seeds)") {
+    for (seed <- 46L to 50L) {
+      val (left, right) = asofTieInputs(seed)
+      assertAsofTie(left, right, forward = true, None, s"fwd tie seed=$seed")
+    }
+  }
+
+  test("AsofJoin tolerance with a tie matches brute force on duplicate right rows (5 seeds)") {
+    for (seed <- 56L to 60L) {
+      val (left, right) = asofTieInputs(seed)
+      assertAsofTie(left, right, forward = false, Some(4L), s"tol tie seed=$seed")
+      assertAsofTie(left, right, forward = true, Some(4L), s"fwd tol tie seed=$seed")
     }
   }
 

@@ -100,4 +100,52 @@ class Scd2Spec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(out == Map(1L -> "b", 2L -> "b"))
   }
+
+  test("pointInTime: a NULL-key fact gets NULL, even after a NULL-key change") {
+    val spark0 = spark
+    import spark0.implicits._
+    // a NULL-key purchase, then a later NULL-key click: NULL = NULL is not
+    // a match, as in the oracle's LEFT JOIN ... ON f.user_id = d.user_id
+    val o = Seq((Option.empty[Long], ts(10), 100L, "gold"),
+        (Some(1L), ts(10), 101L, "basic"))
+      .toDF("user_id", "t", "event_id", "tier")
+    val f = Seq((2L, Option.empty[Long], ts(20)), (3L, Some(1L), ts(20)))
+      .toDF("event_id", "user_id", "t")
+    val out = Scd2.pointInTime(f, o, "user_id", "t", "event_id", "tier",
+        Seq("event_id", "user_id"))
+      .collect().map(r => r.getLong(0) -> Option(r.getString(2))).toMap
+    assert(out == Map(2L -> None, 3L -> Some("basic")))
+  }
+
+  test("pointInTime matches brute force on random data (5 seeds)") {
+    val spark0 = spark
+    import spark0.implicits._
+    // tight domains: same-ts changes, NULL keys (about one in six), NULL
+    // attributes (one in five) and repeated attributes all occur
+    def key(rnd: java.util.Random) =
+      if (rnd.nextInt(6) == 0) None else Some(rnd.nextInt(4).toLong)
+    for (seed <- 51L to 55L) {
+      val rnd = new java.util.Random(seed)
+      val o = (1 to 40).map { i =>
+        (key(rnd), rnd.nextInt(30).toLong, 1000L + i,
+          if (rnd.nextInt(5) == 0) None else Some("abc".charAt(rnd.nextInt(3)).toString))
+      }
+      val f = (1 to 60).map(i => (i.toLong, key(rnd), rnd.nextInt(36).toLong))
+      val out = Scd2.pointInTime(
+          f.map { case (id, k, t) => (id, k, ts(t)) }.toDF("event_id", "user_id", "t"),
+          o.map { case (k, t, tie, a) => (k, ts(t), tie, a) }
+            .toDF("user_id", "t", "event_id", "tier"),
+          "user_id", "t", "event_id", "tier", Seq("event_id"))
+        .collect().map(r => r.getLong(0) -> Option(r.getString(1))).toMap
+      assert(out.size == f.size, s"seed=$seed: every fact exactly once")
+      f.foreach { case (id, k, t) =>
+        // the last non-NULL attribute at or before t in (ts, tie) order,
+        // equal non-NULL keys only
+        val expected = o
+          .filter { case (ok, ot, _, a) => k.isDefined && ok == k && ot <= t && a.isDefined }
+          .maxByOption { case (_, ot, tie, _) => (ot, tie) }.flatMap(_._4)
+        assert(out(id) == expected, s"seed=$seed id=$id key=$k t=$t")
+      }
+    }
+  }
 }

@@ -24,9 +24,9 @@ class AsofJoinExecSpec extends AnyFunSuite {
     val left = (1 to nLeft).map(i =>
       (i.toLong, rnd.nextInt(nKeys).toLong, t(), rnd.nextDouble()))
       .toDF("event_id", "user_id", "ts", "lv")
-    // unique per (key, ts), deduped driver-side so the DF carries no agg
-    // (keeps px non-nullable — exercising the forced-nullable binding —
-    // and keeps the plan test's exchange count to the join's own two)
+    // one row per (key, ts), deduped driver-side: these calls pass no tie,
+    // and the DF carries no agg (keeps px non-nullable — exercising the
+    // forced-nullable binding — and the plan's exchanges to the join's two)
     val right = (1 to nRight).map(i =>
         (rnd.nextInt(nKeys).toLong, t(), math.round(rnd.nextDouble() * 100) / 10.0))
       .groupBy(r => (r._1, r._2)).map(_._2.maxBy(_._3)).toSeq

@@ -84,4 +84,9 @@ class PlanTraceSpec extends AnyFunSuite {
     assert(first.contains("== Executed while building (1 of "))
     assert(first == second)
   }
+
+  test("PlanDumpMain dumps the final adaptive plan") {
+    val txt = PlanDumpMain.dump(spark, Catalog.byName("q_x_asof_join"), sfDir)
+    assert(txt.contains("isFinalPlan=true") && !txt.contains("isFinalPlan=false"), txt)
+  }
 }
