@@ -103,7 +103,19 @@ object GraftSession {
     *    serializes every broadcast into chunks of this size and allocates
     *    the first one whole, so each broadcast relation and each stage's
     *    task binary (also a broadcast) cost a 4 MiB array even when they
-    *    serialize to a few kilobytes. */
+    *    serialize to a few kilobytes.
+    *
+    * Three confs cap Spark's status store, the listener that keeps every
+    * finished SQL execution (with its plan and metrics), job and stage for
+    * the UI and `statusTracker`. The UI is off and nothing in the engine
+    * reads the store, but Spark keeps up to 1,000 of each, so the live
+    * heap of a long-lived session grew with every query it ran: a class
+    * histogram of the sparkify_etl benchmark a few passes in held 89
+    * `SQLExecutionUIData`, 236 `JobDataWrapper`, 342 `StageDataWrapper`
+    * and 17,039 `SQLPlanMetric`s. The caps keep the latest
+    * 20 executions, 50 jobs and 100 stages. The engine's own listeners
+    * (`tools.Run`, `tools.PlanTrace`) see every event before the store
+    * trims. */
   def builder(appName: String, cpus: String): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cpus]")
@@ -130,6 +142,9 @@ object GraftSession {
       .config(graft.sources.LocalFs.Confs)
       .config("spark.buffer.pageSize", PageSize.toString)
       .config("spark.broadcast.blockSize", "1m")
+      .config("spark.sql.ui.retainedExecutions", "20")
+      .config("spark.ui.retainedJobs", "50")
+      .config("spark.ui.retainedStages", "100")
 
   /** Entries of the JVM-wide generated-code cache (see [[builder]]). */
   val CodegenCacheEntries = 4096

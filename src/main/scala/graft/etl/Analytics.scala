@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 object Analytics {
 
   private def t(spark: SparkSession, warehouseDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$warehouseDir/$name")
+    graft.sources.Sources.parquet(spark, s"$warehouseDir/$name")
 
   /** F44-F50 — the per-table row-count probes. */
   def tableCounts(spark: SparkSession, warehouseDir: String): Map[String, Long] =

@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.GraftExprBridge
 import org.apache.spark.util.sketch.BloomFilter
 
+import graft.sources.Sources
+
 /** Per-file Bloom sidecars — data skipping for POINT lookups on
   * high-cardinality keys, where min/max footer stats ([[Analyze.perFileRange]])
   * can't skip anything because every file's range covers the probe.
@@ -61,7 +63,7 @@ object BloomIndex {
       new BloomFilterAggregate(
         GraftExprBridge.expression(xxhash64(col(keyCol))),
         Literal(expectedPerFile), Literal(numBits)).toAggregateExpression())
-    spark.read.parquet(dir)
+    Sources.parquet(spark, dir)
       .select(input_file_name().as("file"), col(keyCol))
       .groupBy(col("file"))
       .agg(bloomAgg.as("bloom"))
@@ -78,15 +80,15 @@ object BloomIndex {
     * aggregate's binary is the standard `sketch.BloomFilter` stream
     * format. The probe hash runs through the same `xxhash64` expression
     * the build used (one 1-row job) so hashing is engine-identical. */
-  private def candidateFiles(spark: SparkSession, dir: String,
+  private def candidateFiles(spark: SparkSession, dir: String, table: DataFrame,
                              keyCol: String, value: Any): (Seq[String], Int) = {
-    val entries = spark.read.parquet(sidecarPath(dir, keyCol))
+    val entries = Sources.parquet(spark, sidecarPath(dir, keyCol))
       .select(col("file"), col("bloom"))
       .collect().map(r => r.getString(0) -> r.getAs[Array[Byte]](1))
     // xxhash64 is TYPE-sensitive: probe with the table column's exact type
     // (an INT key probed as a Long literal would hash differently and
     // silently prune every file)
-    val keyType = spark.read.parquet(dir).schema(keyCol).dataType
+    val keyType = table.schema(keyCol).dataType
     val h = spark.range(1).select(xxhash64(lit(value).cast(keyType)))
       .head().getLong(0)
     val files = entries.collect {
@@ -102,10 +104,12 @@ object BloomIndex {
     * the skip stats (how many files the Bloom pruned). */
   def readPointLookup(spark: SparkSession, dir: String, keyCol: String,
                       value: Any): (DataFrame, PruneStats) = {
-    val (files, total) = candidateFiles(spark, dir, keyCol, value)
+    val table = Sources.parquet(spark, dir)
+    val (files, total) = candidateFiles(spark, dir, table, keyCol, value)
     val rows =
-      if (files.isEmpty) spark.read.parquet(dir).filter(lit(false))
-      else spark.read.parquet(files: _*).filter(col(keyCol) === lit(value))
+      if (files.isEmpty) table.filter(lit(false))
+      else spark.read.schema(table.schema).parquet(files: _*)
+        .filter(col(keyCol) === lit(value))
     (rows, PruneStats(total, files.size))
   }
 }

@@ -149,7 +149,7 @@ object IncrementalAgg {
     }
     // no checkpoint needed: the tmp write below fully materializes the
     // merge while stateDir is still intact; the renames only run after
-    val merged = merge(upgraded(spark.read.parquet(stateDir)), delta, keys)
+    val merged = merge(upgraded(graft.sources.Sources.parquet(spark, stateDir)), delta, keys)
     Maintenance.stagedSwap(fs, path, "incragg", "refresh") { tmp =>
       merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
       batchId.foreach(writeMarker(fs, tmp, _))

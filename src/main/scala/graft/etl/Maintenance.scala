@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.Sources
+
 /** Table maintenance — the background jobs a 100 TB parquet warehouse
   * cannot live without. The reference delegates these to Redshift
   * (auto-vacuum/analyze); on files we do them explicitly.
@@ -55,7 +57,7 @@ object Maintenance {
     // crash that leaves them behind) never sees the staging copies as
     // partitions — a `<leaf>__compact_tmp` sibling of `dt=...` WOULD be
     // discovered (it contains '=') and silently duplicate rows.
-    rewrite(spark, dir, "compact", spark.read.parquet(dir).coalesce(nOut))
+    rewrite(spark, dir, "compact", Sources.parquet(spark, dir).coalesce(nOut))
 
     val after = fs.listStatus(path).toSeq
       .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
@@ -123,7 +125,7 @@ object Maintenance {
     * the anti-join semantics stay as here. */
   def deleteByKey(spark: SparkSession, dir: String, keys: DataFrame,
                   key: String): DeleteReport = {
-    val base = spark.read.parquet(dir)
+    val base = Sources.parquet(spark, dir)
     require(base.columns.contains(key), s"no column '$key' in $dir")
     // the write counts base and marked rows above the join, where no empty
     // stage the adaptive plan drops takes the count with it. No checkpoint:
@@ -155,7 +157,7 @@ object Maintenance {
     */
   def mergeUpsert(spark: SparkSession, dir: String, updates: DataFrame,
                   key: String, versionCol: String): UpsertReport = {
-    val base = spark.read.parquet(dir)
+    val base = Sources.parquet(spark, dir)
     require(base.columns.sameElements(updates.columns),
       s"upsert schema mismatch: ${base.columns.mkString(",")} vs ${updates.columns.mkString(",")}")
     val tagged = base.withColumn("__src", lit(0))

@@ -249,7 +249,7 @@ object Similarity {
         explode(nearest_cells(col("pvec"), centroids, nProbe)).as("cell"))
     val cells = p.select(col("cell")).distinct()
       .collect().map(_.getLong(0)).toSeq
-    val idx = spark.read.parquet(path)
+    val idx = graft.sources.Sources.parquet(spark, path)
       .filter(col("cell").isin(cells: _*))
       .select(col("vec_id").as("neighbor_id"),
         col("embedding").as("cvec"), col("cell"))

@@ -1,14 +1,20 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetFooter
 import org.apache.spark.sql.types.{IntegerType, StructType}
 
 import graft.schemas.Schemas
 
 /** Readers / writers — the engine's S-series operators (SURVEY.md §2.1).
   *
-  * All reads carry an explicit schema: no inference pass, deterministic
-  * types, and Catalyst can prune/push down into the scan from the first plan.
+  * Opening a read runs no Spark job. The JSON and CSV loads declare
+  * their schema; a parquet read takes the schema from one data file's
+  * footer, read on the driver ([[parquet]]), where Spark's own inference
+  * would run a job to read it; ORC's inference already reads one footer
+  * on the driver. Catalyst can prune and push down into the scan from
+  * the first plan. `readMergedParquet` is the exception: Spark merges
+  * the schemas of every file in a job.
   */
 object Sources {
 
@@ -16,9 +22,10 @@ object Sources {
   // Testdata star schema (parquet)
   // -------------------------------------------------------------------------
 
-  /** Read one driver testdata table (`<sfDir>/<name>.parquet`).
-    * Schema-on-read from parquet footers — no StructType needed; vectorized
-    * reader + filter/column pushdown come free.
+  /** Read one driver testdata table (`<sfDir>/<name>.parquet`) through
+    * [[parquet]]: the schema comes from the file's footer, read on the
+    * driver with no Spark job; vectorized reader + filter/column pushdown
+    * come free.
     *
     * Timestamp physical types are normalized here, because the driver's
     * generated parquet has shipped them in different encodings across
@@ -40,17 +47,7 @@ object Sources {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    val path = s"$sfDir/$name.parquet"
-    val raw =
-      try spark.read.parquet(path)
-      catch {
-        case e: Exception if e.getMessage != null &&
-            e.getMessage.contains("NANOS") =>
-          throw new IllegalStateException(
-            s"$name.parquet carries TIMESTAMP(NANOS): build the session " +
-              s"with GraftSession.builder (or set " +
-              s"${graft.GraftSession.NanosConf}=true)", e)
-      }
+    val raw = parquet(spark, s"$sfDir/$name.parquet")
     val deNanosed =
       if (name == "events" && raw.schema("ts").dataType == LongType)
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -60,6 +57,36 @@ object Sources {
       .foldLeft(deNanosed)((df, f) =>
         df.withColumn(f.name, col(f.name).cast(TimestampType)))
   }
+
+  /** Read parquet at `path` (a file, a directory of part files or Hive
+    * partition dirs, or a glob) with the schema Spark would infer, read
+    * from the footer of the first data file on the driver
+    * ([[GraftParquetFooter]]). Spark's own inference runs a one-task job
+    * to read that footer; this runs none. Partition columns are appended
+    * by Spark's partition discovery as before. A path whose first leaf is
+    * a summary file, or that holds no data file, falls back to Spark's
+    * inference, which raises Spark's own error for a missing path.
+    *
+    * Two failures get an actionable message here, once for every reader:
+    * a TIMESTAMP(NANOS) footer in a session without
+    * legacy.parquet.nanosAsLong, and a directory with no parquet yet. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    try GraftParquetFooter.schema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    } catch {
+      case e: Exception if e.getMessage != null &&
+          e.getMessage.contains("NANOS") =>
+        throw new IllegalStateException(
+          s"$path carries TIMESTAMP(NANOS): build the session with " +
+            s"GraftSession.builder (or set ${graft.GraftSession.NanosConf}=true)", e)
+      case e: Exception if e.getMessage != null &&
+          e.getMessage.toLowerCase.contains("unable to infer schema") =>
+        throw new IllegalStateException(
+          s"$path has no parquet yet: its schema is read from a data " +
+            s"file's footer at open — write one file first (or open the " +
+            s"read after the first arrives)", e)
+    }
 
   /** Fan a CPU-bound map chain out to every core (r13 optimization). The
     * gate tables are ONE parquet file = one row group = ONE scan task, so

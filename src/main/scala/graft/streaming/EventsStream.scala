@@ -57,32 +57,18 @@ object EventsStream {
 
   /** Open the unbounded events source over a directory of parquet files,
     * normalizing `ts` to session-TZ TimestampType. readStream needs an
-    * explicit schema, so the batch reader sniffs the footer type once at
-    * open (one driver-side metadata read — not a per-batch cost). The
-    * sniff means the source needs at least one file at open: the ts
-    * encoding varies by testdata round (int64 nanos / UTC micros / naive
-    * micros), so no fallback schema is universally right — guessing one
-    * would let the stream start and then misread (or die mid-batch on)
-    * the first real file. An empty directory therefore fails FAST with
-    * an actionable message, as does a TIMESTAMP(NANOS) footer without
-    * the session-level nanos conf (same hint as Sources.table). */
+    * explicit schema, so `ts`'s physical type is read once at open from
+    * a data file's footer, on the driver ([[graft.sources.Sources.parquet]]:
+    * no Spark job, and no per-batch cost). The read means the source
+    * needs at least one file at open: the ts encoding varies by testdata
+    * round (int64 nanos / UTC micros / naive micros), so no fallback
+    * schema is universally right — guessing one would let the stream
+    * start and then misread (or die mid-batch on) the first real file.
+    * An empty directory therefore fails FAST with an actionable message,
+    * as does a TIMESTAMP(NANOS) footer without the session-level nanos
+    * conf (both raised by `Sources.parquet`). */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    val tsType =
-      try spark.read.parquet(dir).schema("ts").dataType
-      catch {
-        case e: Exception if e.getMessage != null &&
-            e.getMessage.contains("NANOS") =>
-          throw new IllegalStateException(
-            s"events parquet carries TIMESTAMP(NANOS): build the session " +
-              s"with GraftSession.builder (or set " +
-              s"${graft.GraftSession.NanosConf}=true)", e)
-        case e: Exception if e.getMessage != null &&
-            e.getMessage.toLowerCase.contains("unable to infer schema") =>
-          throw new IllegalStateException(
-            s"events stream dir $dir has no parquet yet: the source " +
-              s"sniffs the ts encoding from a footer at open — seed the " +
-              s"directory with one file (or start after first arrival)", e)
-      }
+    val tsType = graft.sources.Sources.parquet(spark, dir).schema("ts").dataType
     val base = spark.readStream.schema(rawSchema(tsType)).parquet(dir)
     tsType match {
       case LongType => // int64 nanos via legacy.parquet.nanosAsLong

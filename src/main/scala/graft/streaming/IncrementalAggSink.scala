@@ -23,7 +23,7 @@ object IncrementalAggSink {
 
   /** Start the sink: each micro-batch of `rows` folds into the
     * partial-state table at `stateDir`. Read the view with
-    * `IncrementalAgg.finalize(spark.read.parquet(stateDir), keys)`. */
+    * `IncrementalAgg.finalize(Sources.parquet(spark, stateDir), keys)`. */
   def start(rows: DataFrame, stateDir: String, keys: Seq[String],
             measures: Seq[String], checkpointDir: String): StreamingQuery =
     rows.writeStream

@@ -114,10 +114,82 @@ class SourcesSpec extends AnyFunSuite {
     assert(back.exceptAll(src).isEmpty)
   }
 
+  private val sf = "/root/testdata/sf0.001"
+  private def testdataTables: Seq[String] =
+    Sources.listObjects(spark, sf).filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet"))
+
+  /** Same schema as Spark's inference, and the same rows. */
+  private def assertReadsAsInferred(path: String, rows: Boolean): Unit = {
+    val ours = Sources.parquet(spark, path)
+    val inferred = spark.read.parquet(path)
+    assert(ours.schema == inferred.schema, path)
+    if (rows) assert(ours.exceptAll(inferred).isEmpty && inferred.exceptAll(ours).isEmpty, path)
+  }
+
+  test("parquet: footer schema equals the inferred schema on every testdata table") {
+    assert(testdataTables.size == 10)
+    testdataTables.foreach(t => assertReadsAsInferred(s"$sf/$t.parquet", rows = false))
+  }
+
+  test("parquet: part files, Hive partition dirs and a one-name glob read as inferred") {
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    val dir = java.nio.file.Files.createTempDirectory("graft-footer").toString
+    val rows = spark.range(0, 200).select(col("id"), (col("id") % 7).cast("int").as("k"),
+      concat(lit("2020-01-0"), (col("id") % 3 + 1).cast("string")).as("dt"))
+    rows.repartition(3).write.parquet(s"$dir/parts")
+    rows.write.partitionBy("dt", "k").parquet(s"$dir/hive")
+    assertReadsAsInferred(s"$dir/parts", rows = true)
+    assertReadsAsInferred(s"$dir/hive", rows = true)
+    assert(Sources.parquet(spark, s"$dir/hive").columns.toSeq == Seq("id", "dt", "k"))
+    assertReadsAsInferred(s"$dir/{parts}", rows = true)
+    assertReadsAsInferred(s"$sf/{events.parquet}", rows = true)
+  }
+
+  test("opening a testdata table runs no Spark job") {
+    testdataTables.foreach { t =>
+      val r = graft.tools.Run.query(spark, s"sources_open_$t",
+        Sources.table(spark, sf, t), df => assert(df.schema.nonEmpty))
+      assert(r.ok, r.error)
+      assert(r.jobs == 0, s"opening $t ran ${r.jobs} job(s)")
+    }
+  }
+
+  test("a TIMESTAMP(NANOS) footer reads as a long, or raises the session hint") {
+    val dir = SourcesSpec.nanosEvents(spark)
+    assertReadsAsInferred(s"$dir/events.parquet", rows = true)
+    assert(Sources.table(spark, dir, "events").schema("ts").dataType ==
+      org.apache.spark.sql.types.TimestampType)
+    val plain = spark.newSession()
+    plain.conf.set(graft.GraftSession.NanosConf, "false")
+    val e = intercept[IllegalStateException](Sources.table(plain, dir, "events"))
+    assert(e.getMessage.contains("TIMESTAMP(NANOS)") &&
+      e.getMessage.contains(graft.GraftSession.NanosConf), e.getMessage)
+  }
+
   test("events testdata reads with µs-truncated nanos timestamps") {
     val df = Sources.table(spark, "/root/testdata/sf0.001", "events")
     assert(df.schema("ts").dataType ==
       org.apache.spark.sql.types.TimestampType)
     assert(df.count() == 1000)
+  }
+}
+
+object SourcesSpec {
+  /** A one-file events table whose `ts` is parquet TIMESTAMP(NANOS). */
+  def nanosEvents(spark: org.apache.spark.sql.SparkSession): String = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; " +
+        "required int64 ts (TIMESTAMP(NANOS,false)); }")
+    val dir = java.nio.file.Files.createTempDirectory("graft-nanos").toString
+    val w = ExampleParquetWriter.builder(new Path(s"$dir/events.parquet"))
+      .withType(schema).withConf(spark.sparkContext.hadoopConfiguration).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup()
+      .append("event_id", 1L).append("ts", 1541105830796123456L))
+    finally w.close()
+    dir
   }
 }

@@ -22,6 +22,20 @@ class EventsStreamSpec extends AnyFunSuite {
     dir.toAbsolutePath.toString
   }
 
+  test("readEvents on a directory with no parquet yet fails fast") {
+    val dir = Files.createTempDirectory("graft-stream-empty").toString
+    val e = intercept[IllegalStateException](EventsStream.readEvents(spark, dir))
+    assert(e.getMessage.contains("no parquet yet"), e.getMessage)
+  }
+
+  test("readEvents over a TIMESTAMP(NANOS) footer needs the session's nanos conf") {
+    val dir = graft.sources.SourcesSpec.nanosEvents(spark)
+    val plain = spark.newSession()
+    plain.conf.set(graft.GraftSession.NanosConf, "false")
+    val e = intercept[IllegalStateException](EventsStream.readEvents(plain, dir))
+    assert(e.getMessage.contains("TIMESTAMP(NANOS)"), e.getMessage)
+  }
+
   test("windowed agg over the stream matches the batch computation") {
     val dir = stageDir()
     val streamed = EventsStream.windowedCounts(
