@@ -128,7 +128,7 @@ object GraftSession {
       // (persist+count, never stats-blind localCheckpoint, on every
       // corpus-scale join input; README "When an operator materializes"),
       // this keeps join planning size-aware at every scale: the sf1
-      // membership/shingle tables (~40-100 MB) broadcast, a 100 TB one
+      // shingle/token tables (~40-100 MB) broadcast, a 100 TB one
       // sort-merges. Raising the threshold WITHOUT honest stats would
       // just enlarge the bomb.
       .config("spark.sql.autoBroadcastJoinThreshold", "128m")

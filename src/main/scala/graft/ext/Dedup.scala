@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.CappedCollect._
 import graft.functions.TextExprs._
 import graft.sources.Sources
 
@@ -15,7 +16,11 @@ import graft.sources.Sources
   * codegen expressions); the only wide exchanges are (a) the LSH bucket
   * groupBy, whose payload is (band_hash, id) — bytes per doc, not the text —
   * and (b) the candidate-pair verify join, which touches only candidate ids.
-  * Connected components run on the (tiny) verified-edge set.
+  * The bucket groupBy is one capped aggregate
+  * ([[graft.functions.CappedCollect]]) that counts, gates and collects each
+  * bucket in one pass, so the membership stream is read once and is neither
+  * persisted nor counted. Connected components run on the (tiny)
+  * verified-edge set.
   */
 object Dedup {
 
@@ -53,7 +58,9 @@ object Dedup {
     *
     * `maxBucket` caps pathological buckets (boilerplate collisions — at
     * web scale some bucket always explodes; dropping it loses recall on
-    * exact-boilerplate only, which exact dedup already catches).
+    * exact-boilerplate only, which exact dedup already catches). A bucket
+    * over the cap yields no candidates, and its aggregation buffer is
+    * dropped as soon as it passes `maxBucket` ids.
     */
   def minhash(df: DataFrame, idCol: String, textCol: String,
               numHashes: Int = 128, bands: Int = 32, shingleN: Int = 3,
@@ -77,36 +84,21 @@ object Dedup {
       f: (DataFrame, DataFrame) => T): T = {
     val ids = df.select(col(idCol).as("id"), col(textCol).as("text"))
 
-    // fanOut only wraps the CPU-bound sketch pass; persist+count
-    // materializes it so the bucket self-join below doesn't run the
-    // sketch twice (each side of a self-join re-executes its plan).
-    // persist, NOT localCheckpoint: the membership table is CORPUS-scale
-    // (docs × bands rows), and a checkpoint's snapshot stats let Catalyst
-    // broadcast it into the self-join regardless of size (PERF_NOTES
-    // "Stats-blind broadcast"); the counted cache carries exact
-    // sizeInBytes so the join stays size-aware at every scale
-    val memb = Sources.fanOut(ids, col("id")).select(col("id"),
+    // fanOut only wraps the CPU-bound sketch pass. One aggregate per
+    // (band, bh) bucket counts, gates and collects its sorted ids
+    // (CappedCollect): a bucket past maxBucket comes back NULL, its buffer
+    // dropped at maxBucket+1 ids map-side, so a whale bucket stays bounded. The
+    // membership stream has this one consumer, so it is neither persisted
+    // nor counted. Pairs are a map-side generator (posexplode + slice):
+    // sorted + per-bucket-unique ids ⇒ strictly increasing, so "elements
+    // after position i" IS the a < b pair set of a bucket self-join; a
+    // NULL or one-id array emits none.
+    val arr = Sources.fanOut(ids, col("id")).select(col("id"),
         posexplode(band_hashes(
           minhash_sig(col("text"), numHashes, shingleN), bands))
           .as(Seq("band", "bh")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    memb.count()
-    // bound pathological buckets BEFORE any array builds (whale-safe: the
-    // size filter's partial count collapses a whale bucket map-side and
-    // drops it before collect_list ever buffers it), then r14 pair
-    // generation per the MarketBasket idiom: the sizes join already
-    // exchanges memb by (band, bh), so the per-bucket sorted-id aggregate
-    // rides that partitioning exchange-free, and pairs are a pure
-    // map-side generator (posexplode + slice) — the bucket-keyed
-    // SELF-join (a second scan of the memb cache plus its join) is gone.
-    // sorted + per-bucket-unique ids ⇒ strictly increasing, so "elements
-    // after position i" IS the old join's id_a < id_b pair set.
-    val sizes = memb.groupBy(col("band"), col("bh"))
-      .agg(count(lit(1)).as("n"))
-      .filter(col("n").between(2, maxBucket))
-    val arr = memb.join(sizes.select("band", "bh"), Seq("band", "bh"))
       .groupBy(col("band"), col("bh"))
-      .agg(sort_array(collect_list(col("id"))).as("ids"))
+      .agg(capped_collect_list(col("id"), maxBucket).as("ids"))
     val pairs = Pairs.sortedPairs(arr, "ids", "a", "b").distinct()
 
     // verify candidates with exact n-gram Jaccard. Semi-join-prune the
@@ -115,7 +107,7 @@ object Dedup {
     // candidate set is orders of magnitude smaller than the corpus, and an
     // unpruned verify would shingle + ship the whole corpus twice.
     // Lazy persist (not an eager localCheckpoint barrier): the pair set is
-    // tiny and its lineage is one self-join above a checkpoint, so caching
+    // tiny and its lineage is the whole sketch and bucket pass, so caching
     // avoids both the re-execution for candIds/edge-join AND the extra
     // stop-the-world job a second checkpoint would cost.
     val cand = pairs.persist()
@@ -133,15 +125,7 @@ object Dedup {
       // `f` consumes `edges` eagerly (take or checkpoint), so the cache
       // can be dropped as soon as it returns
       f(ids, edges)
-    } finally {
-      cand.unpersist(blocking = false)
-      // memb too: unlike localCheckpoint RDDs (ContextCleaner-reclaimed),
-      // CacheManager holds cached plans strongly until clearCache — a
-      // library caller outside the Bench/Verify cache sweep would
-      // otherwise accumulate a corpus-scale (docs × bands) cache entry
-      // per dedup call for the session lifetime
-      memb.unpersist(blocking = false)
-    }
+    } finally cand.unpersist(blocking = false)
   }
 
   /** The corpus-side artifact for INCREMENTAL dedup: every doc's LSH band
@@ -233,48 +217,34 @@ object Dedup {
 
   /** SimHash near-dup clustering: 64-bit sketch (map-only), candidates =
     * pairs sharing any of 4 16-bit chunks (pigeonhole: hamming ≤ 3 ⇒ at
-    * least one chunk equal), verified by exact hamming distance. */
+    * least one chunk equal), verified by exact hamming distance. A chunk
+    * bucket over `maxBucket` members yields no candidates, as in
+    * [[minhash]]. */
   def simhashDedup(df: DataFrame, idCol: String, textCol: String,
                    maxHamming: Int = 3, maxBucket: Int = 64): DataFrame = {
     val ids = Sources.fanOut(
         df.select(col(idCol).as("id"), col(textCol).as("text")), col("id"))
       .select(col("id"), simhash(col("text")).as("sh"))
 
-    // chunk c key = (sh >>> 16c) & 0xffff; persist+count so the self-join
-    // doesn't run the sketch pass twice (size-aware stats — see the
-    // minhash memb note: a checkpointed corpus-scale frame gets
-    // stats-blind-broadcast into the self-join)
-    val memb = ids
+    // chunk c key = (sh >>> 16c) & 0xffff. Same one-aggregate buckets as
+    // the minhash path (see the withMinhashEdges note): the capped sorted
+    // (id, sh) array per bucket, then the hamming verify on the generated
+    // pair stream before the distinct. struct sort orders by id (unique
+    // per bucket), so slice-after-i is the x.id < y.id pair set.
+    val arr = ids
       .select(col("id"), col("sh"), posexplode(
         array((0 until 4).map(c =>
           shiftrightunsigned(col("sh"), 16 * c).bitwiseAND(lit(0xffffL))): _*))
         .as(Seq("chunk", "key")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    memb.count()
-    // r14: same map-side pair generation as the minhash path (see the
-    // withMinhashEdges note) — the sizes join exchanges memb by
-    // (chunk, key), the per-bucket sorted (id, sh) aggregate rides that
-    // partitioning, and the hamming verify runs on the generated pair
-    // stream before the distinct. struct sort orders by id (unique per
-    // bucket), so slice-after-i reproduces the old x.id < y.id pair set.
-    val sizes = memb.groupBy(col("chunk"), col("key"))
-      .agg(count(lit(1)).as("n"))
-      .filter(col("n").between(2, maxBucket))
-    val arr = memb.join(sizes.select("chunk", "key"), Seq("chunk", "key"))
       .groupBy(col("chunk"), col("key"))
-      .agg(sort_array(collect_list(struct(col("id"), col("sh")))).as("ms"))
+      .agg(capped_collect_list(struct(col("id"), col("sh")), maxBucket).as("ms"))
     val edges = Pairs.sortedPairs(arr, "ms", "x", "y")
       .filter(bit_count(col("x.sh").bitwiseXOR(col("y.sh"))) <= maxHamming)
       .select(col("x.id").as("a"), col("y.id").as("b"))
       .distinct()
 
-    // connectedComponents consumes edges eagerly (take or checkpoint),
-    // so memb's corpus-scale cache entry can drop as soon as it returns
-    // (CacheManager pins it until clearCache otherwise — see the
-    // withMinhashEdges note)
-    try connectedComponents(ids.select(col("id")), edges)
+    connectedComponents(ids.select(col("id")), edges)
       .withColumnRenamed("id", idCol)
-    finally memb.unpersist(blocking = false)
   }
 
   /** Embedding-cosine near-dup report via hyperplane LSH: vectors sharing a

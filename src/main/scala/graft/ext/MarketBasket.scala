@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.CappedCollect.capped_collect_set
+
 /** Market-basket association rules — the classic warehouse co-purchase
   * analysis (Agrawal/Srikant-style support–confidence–lift over item
   * pairs), built exact: every emitted statistic is a ratio of integer
@@ -15,18 +17,20 @@ import org.apache.spark.sql.functions._
   * with 10⁶ items would emit 5·10¹¹ pairs, and would first build a
   * 10⁶-element aggregation buffer). `maxBasket` is that guardrail, the
   * `maxBucket`/`maxBlock` idiom: baskets larger than the cap are
-  * excluded from the analysis entirely BEFORE any array is collected
-  * (denominator included — the mined rules stay internally consistent
-  * over the kept population), and the caller can audit exclusions with
-  * [[oversized]]. The gate corpus tops out at 13 items per basket, far
-  * under the default cap, so gate rows measure the uncapped semantics.
+  * excluded from the analysis entirely (denominator included — the mined
+  * rules stay internally consistent over the kept population), and the
+  * caller can audit exclusions with [[oversized]]. The basket arrays come
+  * from one capped aggregate ([[graft.functions.CappedCollect]]) that
+  * collects a basket's distinct items and drops its buffer once it passes
+  * `maxBasket` of them, so no buffer ever holds more than `maxBasket`+1
+  * items. The gate corpus tops out at 13 items per basket, far under the
+  * default cap, so gate rows measure the uncapped semantics.
   *
-  * Scale shape (100 TB): one distinct exchange on (basket, item), one
-  * basket-size aggregate, one basket-keyed exchange shared by the size
-  * join and the array collect, then the map-side pair generator
-  * (≤ maxBasket² rows per basket) into the partially-aggregated (a, b)
-  * pair exchange — all linear in the pair volume; no self-join, no
-  * windows, no global sort, no driver state.
+  * Scale shape (100 TB): one basket-keyed exchange feeding the capped
+  * set aggregate (the fan-out repartition where the input is one file),
+  * then the map-side pair generator (≤ maxBasket² rows per basket) into
+  * the partially-aggregated (a, b) pair exchange — all linear in the pair
+  * volume; no self-join, no windows, no global sort, no driver state.
   */
 object MarketBasket {
 
@@ -53,47 +57,50 @@ object MarketBasket {
       itemCol: String,
       minPairCount: Long,
       maxBasket: Int = 64): DataFrame = {
-    val b0 = graft.sources.Sources.fanOut(
-        items.select(col(basketCol).as("basket"), col(itemCol).as("item")),
-        col("basket"))
-      .distinct()
-    val kept = b0
-      .groupBy(col("basket")).agg(count(lit(1)).as("sz"))
-      .filter(col("sz") <= maxBasket)
-    // the basket universe (support denominator) is the kept-basket count;
-    // inner joins drop a NULL basket, so it is left out of n too
-    val n = kept.filter(col("basket").isNotNull)
-      .agg(count(lit(1)).as("n_baskets"))
     // r13 pair generation: per-basket sorted arrays + map-side explosion,
-    // not a basket-keyed self-join. The kept join's SMJ already exchanges
-    // the item table by basket, so the collect_list aggregate rides that
-    // partitioning for free, and the ≤ maxBasket² pair stream is then a
-    // pure generator (posexplode + slice) feeding a partially-aggregated
-    // pair count — the two self-join exchanges and their sorts are gone.
-    // Whale-safe BECAUSE the size filter precedes the collect: an
-    // aggregation buffer only ever holds a kept basket (≤ maxBasket
-    // items); a 10⁶-item whale is dropped by `kept` before any array
-    // builds. The item and pair counts below both read `arr`, and each
-    // would run the plan under it up to the nearest exchange, so the
-    // rebalance puts an exchange on top that ReuseExchange computes once
-    // for both (a plain repartition on basket is dropped: the aggregate
-    // is already partitioned by it). At sf1 on 4 cores it cut the query's
-    // median from 16.0 s to 14.5 s.
-    val arr = b0.join(kept.select(col("basket")), "basket")
+    // not a basket-keyed self-join. One capped set aggregate per basket
+    // counts its distinct items (a NULL item counts, as a distinct
+    // (basket, item) row did), gates it and collects it: an oversized
+    // basket comes back NULL and its buffer is dropped at maxBasket+1
+    // items, so a 10⁶-item whale never builds its array. It rides the
+    // fanOut partitioning (or the one basket exchange), and the
+    // ≤ maxBasket² pair stream is a pure generator (posexplode + slice)
+    // feeding a partially-aggregated pair count. A NULL basket is left
+    // out of everything below.
+    val arr = graft.sources.Sources.fanOut(
+        items.select(col(basketCol).as("basket"), col(itemCol).as("item"))
+          .where(col("basket").isNotNull),
+        col("basket"))
       .groupBy(col("basket"))
-      .agg(sort_array(collect_list(col("item"))).as("its"))
+      .agg(capped_collect_set(col("item"), maxBasket).as("its"))
+      .where(col("its").isNotNull)
       .hint("rebalance", col("basket"))
+    // The basket universe (the support denominator n), the item counts and
+    // the pairs all read one (i, item) row per kept basket item, plus one
+    // (NULL, NULL) row per kept basket with no item (only NULL items), so
+    // n counts it as the distinct (basket, item) rows did. Each consumer
+    // would run the plan under `arr` up to the nearest exchange, so the
+    // rebalance puts an exchange on top that ReuseExchange computes once
+    // for all three (a plain repartition on basket is dropped: the
+    // aggregate is already partitioned by it). The outer generator is
+    // what keeps them one plan: an inner posexplode or explode pushes a
+    // non-empty-array filter under the exchange, and n cannot take it.
+    val elems = arr.select(col("its"),
+      posexplode_outer(col("its")).as(Seq("i", "item")))
+    val n = elems.where(coalesce(col("i"), lit(0)) === 0)
+      .agg(count(lit(1)).as("n_baskets"))
     // item supports re-derived map-side from the basket arrays (counting
     // the (basket, item) rows instead lets the rules join push an item IS
     // NOT NULL filter into that scan, a second scan and shuffle of the
     // item table). NULL items never pair — item_a < item_b is
-    // null-rejecting — and the rules join on item is inner, so dropping
-    // NULLs from collect_list cannot change any emitted row.
-    val itemCnt = arr.select(explode(col("its")).as("item"))
+    // null-rejecting — and the rules join on item is inner, so leaving
+    // NULLs out of the arrays cannot change any emitted row.
+    val itemCnt = elems.where(col("item").isNotNull)
       .groupBy(col("item")).agg(count(lit(1)).as("c"))
     // sorted + distinct ⇒ strictly increasing, so "elements after
     // position i" IS the item_a < item_b pair set of the old self-join.
-    val pairs = Pairs.sortedPairs(arr, "its", "item_a", "item_b")
+    val pairs = Pairs.pairsAfter(elems.withColumnRenamed("item", "item_a"),
+        "its", "i", "item_a", "item_b")
       .groupBy(col("item_a"), col("item_b"))
       .agg(count(lit(1)).as("n_pair"))
       .filter(col("n_pair") >= minPairCount)

@@ -13,8 +13,17 @@ object Pairs {
     * order, not value order. */
   def sortedPairs(df: DataFrame, arrayCol: String, left: String,
                   right: String): DataFrame =
-    df.select(col(arrayCol), posexplode(col(arrayCol)).as(Seq("i", left)))
-      .select(col(left),
-        explode(slice(col(arrayCol), col("i") + lit(2), size(col(arrayCol))))
-          .as(right))
+    pairsAfter(df.select(col(arrayCol), posexplode(col(arrayCol)).as(Seq("i", left))),
+      arrayCol, "i", left, right)
+
+  /** The second half of [[sortedPairs]], over rows that already carry
+    * each element (`left`) and its position (`posCol`) beside the array:
+    * element i pairs with each element after position i. A row with a
+    * NULL position (a `posexplode_outer` row of an empty array) emits
+    * nothing. */
+  def pairsAfter(rows: DataFrame, arrayCol: String, posCol: String,
+                 left: String, right: String): DataFrame =
+    rows.select(col(left),
+      explode(slice(col(arrayCol), col(posCol) + lit(2), size(col(arrayCol))))
+        .as(right))
 }

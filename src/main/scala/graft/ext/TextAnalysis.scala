@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.CappedCollect.capped_collect_set
 import graft.functions.TextExprs._
 
 /** Text-analysis operators for training-data curation: token counting,
@@ -409,17 +410,17 @@ object TextAnalysis {
     * and the exchange ships 8-byte longs instead of k-token strings.
     *
     * Scale shape (the aggregate-first posting pattern shared with
-    * [[dupSpans]] and TfIdf): one distinct over (group, gram) collapses
-    * the exploded stream map-side before its single gram-keyed exchange;
-    * one set aggregate per gram then collects its distinct groups, and
-    * the `maxSources` cap filters on that set's size AFTER the aggregate.
-    * A ubiquitous gram therefore does build its group set before it is
-    * dropped, but that set is bounded by the number of groups, not by
-    * the corpus (grams is (group, gram)-distinct); pair emission fans out
-    * at most cap² per surviving gram. The same bounded-recall trade as
-    * `maxDf` in TfIdf/BM25: capped grams leave the intersection counts
-    * only, group sizes stay exact. NULL group ids are dropped by the set
-    * aggregate: they never pair and do not count toward a gram's
+    * [[dupSpans]] and TfIdf): one capped set aggregate per gram
+    * ([[graft.functions.CappedCollect]]) collapses the exploded stream
+    * map-side before its single gram-keyed exchange, collects each gram's
+    * distinct groups and comes back NULL past `maxSources` of them,
+    * dropping its buffer at `maxSources`+1 groups, so a ubiquitous gram's
+    * set stays bounded by the cap (and by the number of groups); pair
+    * emission fans out at most cap² per surviving gram. Group sizes come
+    * from one distinct over (group, gram). The same bounded-recall
+    * trade as `maxDf` in TfIdf/BM25: capped grams leave the intersection
+    * counts only, group sizes stay exact. NULL group ids are dropped at
+    * the input: they never pair and do not count toward a gram's
     * spread. At the gate
     * SFs the default (no cap) is exact, so the DuckDB oracle
     * hash-checks the values. Group sizes broadcast (one row per
@@ -433,26 +434,21 @@ object TextAnalysis {
     val grams = df
       .select(col(groupCol).as("src"),
         explode(gram_hashes(col(textCol), n)).as("gram"))
-      .distinct()
-    val sizes = grams.groupBy(col("src"))
+      .where(col("src").isNotNull)
+    val sizes = grams.distinct().groupBy(col("src"))
       .agg(count(lit(1)).as("n_grams"))
-    // r14 (guide §2.4): the per-gram spread gate used to be a
-    // count-over-Window(gram) BEFORE the collect_set aggregate — an
-    // exchange-by-gram plus a full SORT of the corpus-scale gram stream,
-    // immediately followed by a groupBy on the same key. The aggregate
-    // alone carries both: collect_set's buffer per gram is bounded by the
-    // SOURCE universe (not the corpus — grams is (src, gram)-distinct),
-    // so gating on size(srcs) after the map-side-partial set aggregate is
-    // whale-safe, and the window's sort is gone (plan: Sort+Window+
-    // HashAggregate → HashAggregate; one Exchange either way). Pair
-    // generation switches to the sorted-array posexplode+slice idiom
-    // (MarketBasket): strictly-increasing sorted distinct sources ⇒
-    // slice-after-i IS the source_a < source_b pair set, generated
-    // map-side without the n²-then-filter double explode.
+    // The per-gram spread gate is the capped set aggregate itself (a NULL
+    // set past maxSources), so its buffer never outgrows the cap; the
+    // size filter only skips single-source grams. The set form dedups, so
+    // it reads the exploded stream: under the distinct it would cost a
+    // second exchange. Pair generation is the sorted-array
+    // posexplode+slice idiom (MarketBasket): strictly increasing sorted
+    // distinct sources ⇒ slice-after-i IS the source_a < source_b pair
+    // set.
     val shared = grams
       .groupBy(col("gram"))
-      .agg(sort_array(collect_set(col("src"))).as("srcs"))
-      .where(size(col("srcs")).between(2, maxSources))
+      .agg(capped_collect_set(col("src"), maxSources).as("srcs"))
+      .where(size(col("srcs")) >= 2)
     val pairs = Pairs.sortedPairs(shared, "srcs", "source_a", "source_b")
       .groupBy(col("source_a"), col("source_b"))
       .agg(count(lit(1)).as("n_common"))
